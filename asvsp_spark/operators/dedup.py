@@ -965,19 +965,21 @@ def dup_spans(documents: DataFrame, window: int = 8, min_docs: int = 2,
       pair generation, span flagging never multiplies by document
       frequency, so boilerplate needs no max_df cap here). AQE turns
       it into a broadcast join when the hot set is small at runtime.
-    - Span merge is gaps-and-islands PER DOC (window-function over
-      doc-partitioned positions — parallel, no global sort): a new
-      island starts when the next flagged position exceeds the previous
-      by more than ``window`` (strictly more than the span it covers),
-      i.e. overlapping and directly-abutting windows merge. Positions
-      are unique per doc by construction, so no distinct is needed,
-      and the final (doc, island) aggregate reuses the doc partitioning
-      the window function installed — zero extra exchanges after the
-      semi-join.
+    - Span merge is gaps-and-islands PER DOC, assembled inside one
+      array per document (no window function, no global sort): the
+      flagged positions gather into one sorted array per doc through a
+      partial-aggregatable ``collect_list``, and a new island starts
+      where a position exceeds its predecessor by more than ``window``
+      (strictly more than the span it covers), i.e. overlapping and
+      directly-abutting windows merge. Island starts and ends are two
+      index-aware filters over that array and ``n_windows`` is their
+      index distance. Positions are unique per doc by construction, so
+      no distinct is needed, and the aggregate is the only exchange
+      after the semi-join.
 
-    Every step (md5 hex slice, group-having, lag/sum islands) is
-    bit-identical in DuckDB, so the full span report is
-    oracle-checkable.
+    Every step (md5 hex slice, group-having, islands) is bit-identical
+    to the DuckDB oracle, which computes the islands with lag/sum
+    windows, so the full span report is oracle-checkable.
     """
     w = int(window)
     _, wins_arr = _window_hash_arrays(documents, w, id_col, text_col)
@@ -998,8 +1000,10 @@ def dup_spans(documents: DataFrame, window: int = 8, min_docs: int = 2,
     # Exchange + Sort + lag/sum Window moved and sorted every position
     # row (guide §2.4). Island starts/ends fall out of two index-aware
     # filters (gap to predecessor/successor > w); n_windows is the
-    # index distance. try_element_at keeps the boundary probes NULL
-    # (not an ANSI error) where the i=0 / i=size-1 disjunct decides.
+    # index distance. The boundary elements are decided by the
+    # i=0 / i=size-1 disjuncts, and OR short-circuits, so the probes
+    # never run there. That matters for i=0: try_element_at(ps, 0)
+    # raises INVALID_INDEX_OF_ZERO even in try mode.
     spans_expr = F.expr(f"""
         zip_with(
           filter(transform(ps, (x, i) -> struct(x AS p, i AS i)),
@@ -1131,8 +1135,10 @@ def _assemble_runs(toks: DataFrame, flagged: DataFrame, w: int,
     the per-doc window sort was the substring family's floor) with one
     hash aggregate and per-row array expressions; the join back to the
     token arrays now carries one array row per doc instead of one row
-    per run. try_element_at keeps the boundary probes NULL (not an
-    ANSI error) where the i=0 / i=size-1 disjunct already decides.
+    per run. The i=0 / i=size-1 disjuncts decide the boundary
+    elements and OR short-circuits, so the probes never run there;
+    ``try_element_at(ps, 0)`` would raise INVALID_INDEX_OF_ZERO even
+    in try mode.
     Shared by the global and incremental substring-dedup paths."""
     runs_expr = F.expr("""
         zip_with(

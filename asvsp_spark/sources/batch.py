@@ -338,10 +338,16 @@ def foreach_batch_overwrite_partitions(path: str, partition_by: list[str],
     the batch by the partition columns so each partition value lands in
     exactly one file; ``n > 1`` adds a deterministic row-hash salt so a
     hot partition value still fans out over n write tasks.
+
+    There is no emptiness pre-check: every batch runs the write. An
+    empty frame writes no file and replaces no partition (dynamic
+    overwrite only touches partitions that received rows), so the
+    write is already a no-op for it. A stateful micro-batch must
+    execute once anyway to commit its state-store version, and
+    ``isEmpty()`` would execute its stateful stage a second time,
+    state-store commits included, so the check could only add work.
     """
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         out = batch_df
         if files_per_partition == 1:
             out = out.repartition(*[F.col(c) for c in partition_by])

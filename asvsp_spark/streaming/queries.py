@@ -813,9 +813,8 @@ def sq11_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keep_ontime=False: this rollup reads ONLY the late side; writing
     # the on-time side (~the whole stream) to a sink nobody reads was
     # the query's single largest cost (guide §1.2)
-    _ontime, late = drain_with_late_audit(stream, spark,
-                                          delay_seconds=7200,
-                                          keep_ontime=False)
+    _, late = drain_with_late_audit(stream, spark, delay_seconds=7200,
+                                    keep_ontime=False)
     return (
         late
         .groupBy(F.window("ts", "1 hour").alias("window"))

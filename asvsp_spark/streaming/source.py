@@ -338,8 +338,11 @@ def _available_now_run(spark: SparkSession,
     sequentially on the driver thread; if concurrent drains ever
     become a supported pattern, move these to per-writer options or a
     dedicated session (r10 ADVICE)."""
+    # default cap: one wave of state-store tasks, at most 8 (8 measured
+    # best at local[32]; on fewer cores a second wave only adds commits)
     cap = shuffle_partitions if shuffle_partitions is not None else int(
-        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+        os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE",
+                       min(8, spark.sparkContext.defaultParallelism)))
     prev = spark.conf.get("spark.sql.shuffle.partitions", "200")
     # One-shot drains reap their checkpoint on exit, so keeping the
     # query's state-store providers LOADED after commit is pure waste:
@@ -413,13 +416,17 @@ def drain(stream_df: DataFrame, spark: SparkSession,
     Shuffle sizing: a stateful streaming agg pins its state-store partition
     count to ``spark.sql.shuffle.partitions`` at FIRST query start and AQE
     never coalesces it, so a session left at the 200 default pays 200 tasks
-    per micro-batch for state bounded by (window x key). Each drain uses a
-    fresh checkpoint, so we clamp the conf for the query's lifetime and
-    restore it afterwards. The default cap of 8 fits this engine's bounded
-    state keys (window x handful of types) — measured 1.8x faster than 32
-    at sf0.1 local[32]; raise SPARK_GRAFT_STREAM_SHUFFLE on a cluster, or
-    pass ``shuffle_partitions`` per-query for high-cardinality state
-    (e.g. per-user sessions), where more state-store partitions win.
+    per micro-batch for state bounded by (window x key). The conf is
+    clamped for the query's lifetime and restored afterwards. The default
+    cap is ``min(8, defaultParallelism)``: one wave of state-store tasks,
+    since each task's cost is mostly its state-store commit, and at most
+    8, which fits this engine's bounded state keys (window x handful of
+    types) and measured 1.8x faster than 32 at sf0.1 local[32]. The cap
+    only shapes a NEW checkpoint: a resumed persistent checkpoint keeps
+    the partition count it was created with (Spark restores it from the
+    offset log). Raise SPARK_GRAFT_STREAM_SHUFFLE on a cluster, or pass
+    ``shuffle_partitions`` per-query for high-cardinality state (e.g.
+    per-user sessions), where more state-store partitions win.
 
     ``max_rows`` is a loud guard on the driver collect: a query whose
     output grows with an unbounded key (per-user rows, row-level joins)
@@ -743,7 +750,7 @@ def drain_with_late_audit(stream_df: DataFrame, spark: SparkSession,
                           ontime_path: str | None = None,
                           shuffle_partitions: int | None = None,
                           keep_ontime: bool = True
-                          ) -> tuple[DataFrame, DataFrame]:
+                          ) -> tuple[DataFrame | None, DataFrame]:
     """Late-data SIDE OUTPUT — the one §2.8 'Absent' capability Spark has
     no primitive for (Flink's ``sideOutputLateData``): a watermarked
     aggregation silently DROPS rows later than the allowed delay, and
@@ -772,16 +779,19 @@ def drain_with_late_audit(stream_df: DataFrame, spark: SparkSession,
     subdirs or swap in foreach_batch_overwrite_partitions; a one-shot
     availableNow drain (fresh checkpoint) needs neither.
 
-    ``keep_ontime=False`` skips the on-time sink entirely (the returned
-    ontime frame is empty): an audit-only caller (sq11's late rollup)
-    otherwise pays a full write of the on-time side — at scale that is
-    ~the whole stream re-encoded to parquet — to feed a frame it drops.
+    ``keep_ontime=False`` skips the on-time sink entirely and returns
+    ``None`` for the on-time side, so code that reads it anyway fails
+    loudly instead of seeing an empty frame: an audit-only caller
+    (sq11's late rollup) otherwise pays a full write of the on-time
+    side — at scale that is ~the whole stream re-encoded to parquet —
+    to feed a frame it drops.
     Routing (which rows are late) and the watermark clock are unchanged.
     """
     from pyspark.sql import functions as F
 
     late_dir = late_path or tempfile.mkdtemp(prefix="asvsp-late-")
-    ontime_dir = ontime_path or tempfile.mkdtemp(prefix="asvsp-ontime-")
+    ontime_dir = ((ontime_path or tempfile.mkdtemp(prefix="asvsp-ontime-"))
+                  if keep_ontime else None)
     state = {"max_us": None}
 
     def handle(batch_df: DataFrame, _batch_id: int) -> None:
@@ -824,4 +834,4 @@ def drain_with_late_audit(stream_df: DataFrame, spark: SparkSession,
             return spark.read.parquet(path)
         return spark.createDataFrame([], stream_df.schema)
 
-    return _read(ontime_dir), _read(late_dir)
+    return (_read(ontime_dir) if ontime_dir else None), _read(late_dir)

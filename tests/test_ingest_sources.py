@@ -3,6 +3,8 @@ and batch I/O edges, using tiny in-memory/tmp fixtures."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -115,8 +117,18 @@ def test_overwrite_window_partitions_idempotent(spark, tmp_path):
     got = {(r.event_type, r.day): r.v for r in spark.read.parquet(path).collect()}
     assert got == {("click", "d1"): 99, ("click", "d2"): 2, ("view", "d1"): 3}
 
-    # empty batch is a no-op, not an empty overwrite
+    # empty batch is a no-op, not an empty overwrite: the sink writes it
+    # unguarded, so pin the listing too (no file added, no partition
+    # directory removed), not just the row count
+    def listing():
+        return sorted(
+            (os.path.relpath(d, path), sorted(f for f in fs
+                                              if f.endswith(".parquet")))
+            for d, _, fs in os.walk(path))
+
+    before = listing()
     sink(full.limit(0), 2)
+    assert listing() == before
     assert spark.read.parquet(path).count() == 3
 
 

@@ -126,7 +126,9 @@ def test_connected_components_chain_needs_multiple_rounds(spark):
 def test_late_audit_keep_ontime_false_same_late_side(spark, tmp_path):
     """keep_ontime=False must route the SAME rows to the late side as
     the default (the watermark clock is fed by the full batch either
-    way) while skipping the on-time sink entirely."""
+    way) while skipping the on-time sink entirely: the on-time side is
+    None, so a caller that reads it anyway fails loudly instead of
+    seeing an empty frame."""
     from asvsp_spark.streaming.source import (drain_with_late_audit,
                                               write_event_rows)
 
@@ -159,7 +161,7 @@ def test_late_audit_keep_ontime_false_same_late_side(spark, tmp_path):
     assert late_ids_def == [4, 5]
     assert late_ids_off == late_ids_def
     assert ontime_def.count() == 3
-    assert ontime_off.count() == 0        # sink skipped entirely
+    assert ontime_off is None             # sink skipped entirely
 
 
 # --------------------------------------------------- drain local batch

@@ -896,3 +896,113 @@ def test_ephemeral_drain_skips_checkpoint_checksums_and_restores_conf(
     # session confs restored for persistent/checkpointed paths
     assert spark.conf.get(cksum_key) == "true"
     assert spark.conf.get(unload_key) == "false"
+
+
+def _hour_slice(h):
+    """Five sentinel events in hour ``h`` after a fixed UTC base hour,
+    ten minutes apart, alternating click/view."""
+    hour_us = 3_600_000_000
+    base = 1_700_000_000 // 3600 * 3600 * 1_000_000
+    return [(h * 100 + i, base + h * hour_us + i * 600_000_000 + 1,
+             i % 3, ("click", "view")[i % 2], round(0.25 * h + 1.1 * i, 2),
+             None)
+            for i in range(5)]
+
+
+# Sink of the out-of-order replay below, recorded on the commit before
+# the sink's emptiness pre-check was removed: (window_start, event_type,
+# n_events, v_sum_centi, avg_value). Hour 10's re-delivery is absent.
+_OUT_OF_ORDER_GOLDEN = [
+    ("2023-11-15 08:00:00", "click", 3, 1410, 4.7),
+    ("2023-11-15 08:00:00", "view", 2, 940, 4.7),
+    ("2023-11-15 09:00:00", "click", 3, 1485, 4.95),
+    ("2023-11-15 09:00:00", "view", 2, 990, 4.95),
+    ("2023-11-15 10:00:00", "click", 3, 1560, 5.2),
+    ("2023-11-15 10:00:00", "view", 2, 1040, 5.2),
+    ("2023-11-15 11:00:00", "click", 3, 1635, 5.45),
+    ("2023-11-15 11:00:00", "view", 2, 1090, 5.45),
+    ("2023-11-15 13:00:00", "click", 3, 1785, 5.95),
+    ("2023-11-15 13:00:00", "view", 2, 1190, 5.95),
+]
+
+
+def test_incremental_drain_out_of_order_drops_late_redelivery(spark,
+                                                              tmp_path):
+    """Hour slices arrive out of order, one per drain over one persistent
+    checkpoint, plus a re-delivery of an hour the watermark has passed.
+    The watermark for a firing is the one the previous firing's no-data
+    batch advanced to, so:
+    - hour 11 after hour 12 is accepted (its window ends after 12 - 2h);
+    - hour 10 re-delivered after hour 15 is dropped (its window closed);
+    - hour 13 after hour 15 is accepted: a window agg drops a late row
+      only once its whole window is behind the watermark.
+    A drain that skipped the no-data batch would restore a stale
+    watermark on the next firing and double hour 10."""
+    from asvsp_spark.streaming.queries import incremental_hourly_drain
+    from asvsp_spark.streaming.source import write_event_rows
+
+    def sink_rows(df):
+        return sorted((str(r.window_start), r.event_type, r.n_events,
+                       r.v_sum_centi, r.avg_value) for r in df.collect())
+
+    events = tmp_path / "events"
+    events.mkdir()
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    seen = {}
+    for name, h in [("a", 10), ("b", 12), ("c", 11), ("d", 15),
+                    ("e", 10), ("f", 13)]:
+        write_event_rows(str(events / f"{name}-h{h}.parquet"),
+                         _hour_slice(h))
+        seen[name] = sink_rows(
+            incremental_hourly_drain(spark, str(events), out, ckpt))
+    assert seen["e"] == seen["d"]          # the late re-delivery is dropped
+    assert seen["f"] == _OUT_OF_ORDER_GOLDEN
+
+
+def test_drain_state_partitions_follow_cores(spark, tmp_path, monkeypatch):
+    """The default state-store partition count is min(8, cores): one task
+    wave (4 on the local[4] test session). An explicit
+    ``shuffle_partitions`` wins over it, and a persistent checkpoint
+    resumes with the count it was created with, whatever the cap."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from asvsp_spark.streaming.source import (drain, events_stream_reader,
+                                              write_event_rows)
+
+    events = tmp_path / "events"
+    events.mkdir()
+
+    def add_hour(h):
+        write_event_rows(str(events / f"h{h}.parquet"), _hour_slice(h))
+
+    started = []
+    real_start = DataStreamWriter.start
+
+    def recording_start(self, *a, **kw):
+        started.append(real_start(self, *a, **kw))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+
+    def state_partitions(**kw):
+        """Drain an hourly count; return the state-store partition counts
+        its micro-batches reported."""
+        started.clear()
+        agg = (events_stream_reader(spark, str(events))
+               .withWatermark("ts", "2 hours")
+               .groupBy(F.window("ts", "1 hour").alias("w"))
+               .agg(F.count(F.lit(1)).alias("n")))
+        drain(agg, spark, **kw)
+        return {op["numShufflePartitions"]
+                for q in started for p in q.recentProgress
+                for op in p["stateOperators"]}
+
+    add_hour(1)
+    cores = spark.sparkContext.defaultParallelism
+    assert state_partitions() == {min(8, cores)}
+    assert state_partitions(shuffle_partitions=3) == {3}
+
+    ckpt = str(tmp_path / "ckpt")
+    assert state_partitions(shuffle_partitions=8, checkpoint_dir=ckpt) == {8}
+    add_hour(2)
+    assert state_partitions(checkpoint_dir=ckpt) == {8}
