@@ -4,169 +4,60 @@ cosine_dup_pairs) become dedup CLUSTERS, and min-id-per-cluster picks the
 canonical document to keep. The reference has no graph/iterative
 operator of any kind; this is the §7.5 extension family's capstone.
 
-Algorithm: iterative min-label propagation — every vertex repeatedly
-adopts the smallest label among itself and its neighbors until fixpoint.
-Deterministic (min is order-independent), so the result is oracle-
-checkable (DuckDB recursive-CTE reachability computes the same min).
+Algorithm: alternating large-star/small-star contraction (Kiveris et
+al., "Connected Components in MapReduce and Beyond", SoCC'14). Every
+vertex ends up labeled with the min vertex id reachable from it, in
+O(log n) rounds on ANY graph shape — a chain of n vertices included,
+where min-label propagation would need n rounds. Deterministic (min is
+order-independent), so the result is oracle-checkable (DuckDB
+recursive-CTE reachability computes the same min). Vertex ids may be of
+any orderable type: the steps compare ids with least/greatest and the
+convergence test hashes them.
 
-Scale notes (100TB): each round is one shuffle-by-vertex join + one
-aggregate; rounds needed = graph diameter. Near-dup graphs are shallow
-(clusters are cliques-ish from LSH band collisions), so a handful of
-rounds converge; for adversarial long-chain graphs swap in the
-large-star/small-star contraction (same join primitives, O(log n)
-rounds — Kiveris et al., "Connected Components in MapReduce"). Lineage
-is truncated every round with localCheckpoint (on a cluster, configure
+Scale notes (100TB): each round is two window shuffles of the edge
+list, independent of the graph's diameter. Lineage is truncated every
+round with localCheckpoint (on a cluster, configure
 ``spark.checkpoint.dir`` and use checkpoint() for fault tolerance —
-without truncation the plan doubles per round and the driver OOMs on
+without truncation the plan grows per round and the driver OOMs on
 plan analysis long before data is the problem).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def connected_components(edges: DataFrame, src: str = "doc_a",
-                         dst: str = "doc_b", max_iter: int = 25) -> DataFrame:
-    """(vertex, component) for every vertex appearing in ``edges``;
-    component = min vertex id reachable over undirected edges."""
-    a = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = a.unionByName(a.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    # partition the STATIC edge side by the per-round join key (v) ONCE:
-    # every iteration joins sym.v == labels.vertex, so a sym checkpointed
-    # as hash-partitioned-on-v needs no exchange in any round — only the
-    # (narrower, changing) label side moves (guide §2.4: operations keyed
-    # the same way share one exchange). The (u,v) dedup runs WITHIN that
-    # layout for free: HashPartitioning(v) satisfies the aggregate's
-    # (u,v)-clustered requirement (same v ⇒ same partition), so
-    # dropDuplicates adds no second shuffle. The partition count is
-    # pinned to spark.sql.shuffle.partitions (scale-adaptive via conf,
-    # not a local constant) because an explicit count exempts this one
-    # exchange from AQE coalescing, whose UnknownPartitioning would
-    # defeat the reuse. Materialized with persist(), NOT localCheckpoint:
-    # a checkpoint's LogicalRDD drops outputPartitioning (verified
-    # empirically on 4.1.2 — the per-round join re-exchanged the edge
-    # side), while InMemoryRelation keeps it, so every round's join
-    # plans with ZERO exchange over the edge list. Unpersisted after
-    # the loop (labels is independently materialized by then).
-    # SELF-LOOPS fold the join-back away (r11): with (u, u) present for
-    # every vertex, min(label over sym-neighbors of u) already includes
-    # u's own label, so the round is ONE join + ONE aggregate — the old
-    # labels LEFT JOIN neigh re-attachment (and its third label
-    # exchange) disappears, and each round's plan references the
-    # previous labels exactly ONCE (load-bearing: a twice-referenced
-    # labels makes the un-truncated plan tree double per round — 2^r —
-    # which OOMed the driver on plan strings for a 9-hop chain when
-    # this loop first switched to persist()).
-    n_parts = int(edges.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "200"))
-    sym = (sym.unionByName(sym.select(F.col("u").alias("u"),
-                                      F.col("u").alias("v")))
-           .repartition(n_parts, F.col("v"))
-           .dropDuplicates(["u", "v"])
-           .persist())
-    sym.count()
-
-    # Labels are materialized with persist(), not localCheckpoint, for
-    # the same reason sym is: InMemoryRelation KEEPS outputPartitioning
-    # (and cached plans are exempt from AQE re-partitioning by default —
-    # spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false),
-    # so hash(vertex) from each round's aggregate survives into the
-    # next. With sym hashed on v and labels hashed on vertex at the
-    # same partition count, the propagation join needs no exchange at
-    # all — the round's single exchange is the groupBy(u) aggregate
-    # (guide §2.4: operations keyed the same way share one exchange;
-    # was 3 label-sized exchanges per round under localCheckpoint,
-    # which drops outputPartitioning). The seed (= round 1 folded into
-    # init, self-loops included) is the same aggregate run over sym
-    # directly.
-    labels = (sym.groupBy(F.col("u").alias("vertex"))
-              .agg(F.min("v").alias("label"))
-              .persist())
-
-    def stats(df: DataFrame):
-        # label ids summed as decimal(38,0): exact at any scale (|V| <
-        # 1e18 x |id| < 1e19 stays inside 38 digits), so the monotone
-        # sum is a loss-free convergence signal — labels only ever
-        # DECREASE, hence sum unchanged <=> no label changed, the same
-        # fixpoint test as the old _changed count. The one agg job also
-        # materializes the round's cache.
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]
-        return (row["n"], row["s"])
-
-    prev_sig = stats(labels)
-    for i in range(max_iter):
-        new_labels = (
-            sym.join(labels, sym.v == labels.vertex)
-            .groupBy(F.col("u").alias("vertex"))
-            .agg(F.min("label").alias("label"))
-        )
-        # plan depth still grows by one InMemoryRelation per round;
-        # every 8 rounds a localCheckpoint resets it (the NEXT round
-        # then pays one label exchange to restore the partitioning —
-        # near-dup graphs converge long before, adversarial chains are
-        # what the cap is for; star contraction is the right tool there)
-        if (i + 1) % 8 == 0:
-            new_labels = new_labels.localCheckpoint(eager=False)
-        new_labels = new_labels.persist()
-        sig = stats(new_labels)
-        labels.unpersist()
-        labels = new_labels
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    sym.unpersist()
-    # pin the fixpoint OUTSIDE the cache before dropping it: the caller
-    # consumes the result after this function returns, and an
-    # unpersisted cache would silently recompute the whole round
-    # lineage. The checkpoint reads straight from the still-warm cache
-    # (one tiny job) and owns its lifetime like the r10 contract did.
-    out = (labels.select("vertex", F.col("label").alias("component"))
-           .localCheckpoint(eager=True))
-    labels.unpersist()
-    return out
-
-
-def connected_components_star(edges: DataFrame, src: str = "doc_a",
-                              dst: str = "doc_b",
-                              max_iter: int = 20) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the adversarial-diameter path promised by the
-    min-label docstring above: O(log n) rounds on ANY graph shape,
-    where plain label propagation needs diameter rounds (a 10k-vertex
-    chain = 10k rounds).
+                         dst: str = "doc_b",
+                         max_iter: int = 20) -> DataFrame:
+    """(vertex, component) for every vertex appearing in ``edges``,
+    self-loop-only vertices included; component = min vertex id
+    reachable over undirected edges.
 
     Round shape: each star step attaches the per-key min with ONE
-    window aggregate over the star key — one shuffle per step, two per
-    round, independent of diameter (r10: the groupBy(key).min +
-    join-back formulation paid two exchanges of the edge list per step;
-    the window computes the same per-key constant in the single
-    exchange the step fundamentally needs — guide §2.4). Same fixpoint as
-    ``connected_components``: every vertex labeled with the min vertex
-    id reachable from it (both steps only ever connect vertices to
-    smaller reachable ids, and at fixpoint every non-root points
-    directly at its component min). Deterministic, oracle-checkable.
+    window aggregate over the star key, so a step costs only the one
+    exchange it fundamentally needs — two per round (guide §2.4). Both
+    steps only ever connect vertices to smaller reachable ids, and at
+    the fixpoint every non-root points directly at its component min.
 
     Raises after ``max_iter`` rounds without convergence — with
     alternating stars that means a bug, not a deep graph.
     """
-    cur = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
+    # canonical (min, max) pairs. Self-loops are kept here so that a
+    # vertex seen only in (x, x) still gets its own row; the loop drops
+    # them. An edge with a NULL endpoint connects nothing.
+    canon = (
+        edges.dropna(subset=[src, dst])
+        .select(F.least(src, dst).alias("u"),
+                F.greatest(src, dst).alias("v"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    all_vertices = (cur.select(F.col("u").alias("vertex"))
-                    .unionByName(cur.select(F.col("v").alias("vertex")))
+    all_vertices = (canon.select(F.col("u").alias("vertex"))
+                    .unionByName(canon.select(F.col("v").alias("vertex")))
                     .distinct()
                     .localCheckpoint(eager=True))
-    if cur.isEmpty():
-        return all_vertices.withColumn("component", F.col("vertex"))
+    cur = canon.filter(F.col("u") != F.col("v"))
 
     def checksum(df: DataFrame):
         # mod keeps each term < 2^30 so the ANSI-mode sum cannot overflow
@@ -176,15 +67,12 @@ def connected_components_star(edges: DataFrame, src: str = "doc_a",
                      F.sum(h).alias("h")).collect()[0]
         return (row["n"], row["h"])
 
-    from pyspark.sql import Window
-
     prev_sig = checksum(cur)
     for _ in range(max_iter):
         # LARGE-STAR: at each vertex u, connect all strictly larger
         # neighbors to m = min(neighbors(u) + {u}). m is a per-u
         # constant: a window min over the u-partitioning attaches it in
-        # the ONE exchange this step needs (the old groupBy(u).min +
-        # join-back re-shuffled the edge list a second time).
+        # the ONE exchange this step needs.
         sym = cur.unionByName(
             cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
         # no distinct here: small-star's window min is insensitive to
@@ -198,10 +86,10 @@ def connected_components_star(edges: DataFrame, src: str = "doc_a",
                     F.greatest("v", "m").alias("v"))
             .filter(F.col("u") != F.col("v"))
         )
-        # SMALL-STAR: key each edge by its LARGER endpoint u (neighbors
-        # all smaller); connect u and its non-min neighbors to the min
-        ss_in = ls  # already canonical (u < v) -> key by v
-        joined = ss_in.withColumn(
+        # SMALL-STAR: key each edge by its LARGER endpoint (ls is
+        # canonical, u < v, so that is v; its neighbors are all
+        # smaller); connect it and its non-min neighbors to the min
+        joined = ls.withColumn(
             "m", F.min("u").over(Window.partitionBy("v")))
         ss = (
             joined.filter(F.col("u") != F.col("m"))
@@ -232,24 +120,13 @@ def connected_components_star(edges: DataFrame, src: str = "doc_a",
 
 
 def dedup_clusters(documents: DataFrame, edges: DataFrame,
-                   id_col: str = "doc_id",
-                   algorithm: str = "label") -> DataFrame:
+                   id_col: str = "doc_id") -> DataFrame:
     """Cluster assignment for every document: near-dup cluster id (= min
     doc id in the component), cluster size, and whether this doc is the
     canonical keeper. Documents with no near-dup edge form singleton
     clusters of themselves.
-
-    ``algorithm``: "label" = min-label propagation (rounds = diameter;
-    right for shallow near-dup cliques), "star" = large-star/small-star
-    contraction (O(log n) rounds; right for adversarial shapes). Both
-    compute the identical fixpoint.
     """
-    if algorithm == "label":
-        cc = connected_components(edges)
-    elif algorithm == "star":
-        cc = connected_components_star(edges)
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    cc = connected_components(edges)
     assigned = (
         documents.select(F.col(id_col).alias("doc_id"))
         .join(cc, F.col("doc_id") == cc.vertex, "left")
@@ -259,7 +136,6 @@ def dedup_clusters(documents: DataFrame, edges: DataFrame,
     # one shuffle on cluster_id (window count) instead of the
     # groupBy + join-back pair; cluster cardinality per task is bounded
     # by the largest dedup cluster, same bound either formulation has
-    from pyspark.sql import Window
     w = Window.partitionBy("cluster_id")
     return (
         assigned

@@ -74,8 +74,8 @@ def split_expr(cluster_col: str, weights: dict[str, float] | None = None,
 def leakage_safe_split(documents: DataFrame, edges: DataFrame | None = None,
                        weights: dict[str, float] | None = None,
                        salt: str = "split42",
-                       id_col: str = "doc_id", text_col: str = "text",
-                       algorithm: str = "label") -> DataFrame:
+                       id_col: str = "doc_id",
+                       text_col: str = "text") -> DataFrame:
     """(doc_id, cluster_id, split) for every document.
 
     ``edges=None``: EXACT-duplicate clusters — cluster_id = min doc id
@@ -95,8 +95,7 @@ def leakage_safe_split(documents: DataFrame, edges: DataFrame | None = None,
             .select("doc_id", "cluster_id"))
     else:
         from asvsp_spark.operators.components import dedup_clusters
-        assigned = (dedup_clusters(documents, edges, id_col=id_col,
-                                   algorithm=algorithm)
+        assigned = (dedup_clusters(documents, edges, id_col=id_col)
                     .select("doc_id", "cluster_id"))
     return assigned.withColumn("split", split_expr("cluster_id", weights,
                                                    salt))

@@ -282,8 +282,8 @@ FROM d GROUP BY etype
 
 # Dedup clustering: min-reachable-id connected components over the exact
 # jaccard near-dup edges, via recursive-CTE reachability (tractable at
-# oracle scale; the engine's iterative min-label propagation computes the
-# identical fixpoint).
+# oracle scale; the engine's star contraction computes the identical
+# fixpoint).
 _JACCARD_EDGES = """
     WITH sh AS (
         SELECT doc_id AS doc,
@@ -329,8 +329,6 @@ FROM assigned a JOIN sizes s USING (cluster_id)
 """
 
 ORACLE_EXT["dedup_components"] = _DEDUP_COMPONENTS_SQL
-# star contraction computes the identical fixpoint -> identical oracle
-ORACLE_EXT["dedup_components_star"] = _DEDUP_COMPONENTS_SQL
 
 # Stream-stream attribution join under single-batch drain: the watermark
 # drops nothing (it only advances between batches), so the oracle is the

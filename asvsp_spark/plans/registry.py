@@ -437,316 +437,22 @@ _REGISTRY["sq15_neardup_dedup"] = SQ.sq15_neardup_dedup
 _REGISTRY["sq16_variant_hourly"] = SQ.sq16_variant_hourly
 
 
-# The driver's correctness pass records rows for exactly the FIRST 50
-# entries of all_queries() in insertion order: round 1 registered 55 and
-# CORRECTNESS_r01.json holds rows for precisely positions 1-50, with the
-# last 5 registered (repeat_buyer_segments .. stratified_sample_docs)
-# absent — a hard 50-entry cap walked front-to-back. With more than 50
-# registered queries the first 50 therefore ARE the driver-checked set,
-# chosen explicitly here. All 50 are oracle-paired (hash-checkable, the
-# strong signal). Entries beyond 50 are covered by the same DuckDB
-# parity harness locally (tests/test_oracle_parity.py).
-#
-# ROTATION (r3, per the r2 verdict): six never-driver-checked operators
-# earn slots — q12_late_shipments (big x big lineitem join),
-# winnow_pairs (MOSS sketch, oracle now mirrors the max_df cap),
-# funnel_daily, scd2_user_state, sq9_hourly_daily_chain,
-# sq10_funnel_hourly — displacing six entries whose operator family
-# keeps another green driver row AND which stay hash-checked locally:
-# doc_length_histogram / top_terms_per_lang (histogram + per-group
-# top-k shapes: rollups, tfidf_top_terms, bm25_search rows remain),
-# embedding_stats (similarity family keeps cosine_topk /
-# cosine_dup_pairs / quantize rows), repeat_buyer_segments (when-chain
-# segmentation: q05/q07/q09 rows remain), type_correlation (corr
-# aggregate: baselines_events' exact-moment row remains),
-# sample_k_per_group (sampling family keeps mixture_rebalance's
-# exact md5-rank row).
-#
-# r3 additions: decontaminate_report and packing_bins are NEW operator
-# Round-4 rotation CLOSES the coverage ledger: the 15 oracle-paired
-# entries that had never earned a driver row (q11/q13 lineitem
-# analytics, sq6b stream-stream LEFT join, incremental_dedup_report,
-# quality_filter_report, unigram_logprob_score, label_centroids,
-# doc_repetition, user_day_bookends, nation_revenue_distribution,
-# dedup_representative, customer_retention_setops,
-# rollup_revenue_region_nation, top_bigrams, dedup_components_star)
-# take the slots of 15 entries that were driver-green in ALL of rounds
-# 1-3 (q03-q07, q09, baselines_events, rollup_annual_nation,
-# dedup_exact, jaccard_pairs, sessionize_users, cosine_dup_pairs,
-# events_after_order, inactive_customers, priority_percentiles) — each
-# displaced family keeps at least one current driver row (q-suite:
-# q01/q02/q08/q10-13; rollups: daily/monthly/region-nation; dedup:
-# representative/components/incremental; sessions: sq8; cosine:
-# cosine_topk; asof: asof_last_order + user_day_bookends; percentiles:
-# nation_revenue_distribution), and every displaced entry stays pinned
-# by the identical local DuckDB hash in tests/test_oracle_parity.py.
-# After this round every oracle-paired entry in the registry has >= 1
-# green driver row across rounds — including r4's OWN new entries
-# (leakage_split_report, token_length_histogram, chunk_documents),
-# which take the slots of text_profile / tfidf_top_terms /
-# media_features (each driver-green in 2-3 prior rounds; the text
-# family keeps quality_filter_report/doc_repetition/top_bigrams rows,
-# relevance keeps unigram_logprob_score) so the newcomers don't reopen
-# the never-checked ledger. bigram_backoff_score (r4) takes
-# embedding_quantize_int8's slot (green r1+r3; the embedding family
-# keeps cosine_topk + label_centroids rows).
-#
-# r5 rotation: the round's four NEW oracle-paired entries earn slots —
-# minhash_lsh_pairs (md5-sliced hash family made the whole banded LSH
-# pipeline DuckDB-reproducible; the largest formerly-rows-only entry),
-# ivf_topk_full_probe (IVF machinery at full probe == brute cosine,
-# shares cosine_topk's oracle), skew_join_plain + skew_join_salted (the
-# Zipf-skew join pair whose bench delta measures the salting win).
-# Displaced, each driver-green in r4 and locally hash-pinned by
-# tests/test_oracle_parity.py, with the family keeping a current row:
-# winnow_pairs (banded-sketch dedup: minhash_lsh_pairs row arrives),
-# decontaminate_report (shingle family: minhash + incremental_dedup
-# rows remain), top_bigrams (text family keeps token_length_histogram /
-# doc_repetition / quality_filter_report), label_centroids (embedding
-# family keeps cosine_topk + the new ivf_topk_full_probe).
-#
-# r5 late additions: five MORE entries became oracle-paired after the
-# rotation above was written and have never earned a driver row —
-# simhash_pairs + lsh_topk + stratified_sample_docs (md5-slice hashing
-# made the sketches DuckDB-reproducible) and dsir_weights + dsir_sample
-# (new DSIR data-selection operator). They take the slots of five
-# r4-green entries, each locally hash-pinned with family rows kept:
-# dedup_components_star (components family keeps dedup_components,
-# green r1-r4), nation_revenue_distribution (distribution family keeps
-# rollup_revenue_region_nation + cube_revenue_nation_year),
-# mixture_rebalance (sampling family's row moves to the new
-# stratified_sample_docs), q12_late_shipments + q13_supplier_margin_topk
-# (batch suite keeps q01/q02/q08/q10/q11 rows). pmi_collocations
-# (newest) takes user_day_bookends' slot (green r4; the asof/bookends
-# family keeps asof_last_order, green r1-r4).
-#
-# r5 new-operator slots: the round's five brand-new oracle-paired
-# operators (dup_spans + dedup_spans_removed exact-substring family,
-# shard_assignments + shard_manifest_lpt output planning, and
-# token_budget_stats) displace five r4-green single-row entries whose
-# families keep current rows: doc_repetition + token_length_histogram
-# (text family keeps quality_filter_report + the new token_budget),
-# chunk_documents (windowing semantics now also pinned by dup_spans'
-# island math), packing_bins (output family's rows move to the shard
-# planner pair), leakage_split_report (split membership stays pinned
-# locally; the sampling family keeps stratified_sample_docs).
-# packing_best_fit_bins (oracle-paired late in r5 via the recursive-CTE
-# replay of sequential best-fit state) takes funnel_daily's slot (green
-# r3+r4; the funnel family keeps sq10_funnel_hourly's row).
-# media_image_decode + media_frame_sample (oracle-paired late in r5:
-# the synthetic codec's bytes became md5-chained, so the whole binary
-# decode is DuckDB-reproducible) take the slots of scd2_user_state and
-# heavy_hitters_users (each green r3+r4, locally hash-pinned; the
-# sketch family's approx entries are rows-only by design regardless).
-# bpe_merge_table + token_entropy + cohort_retention (new in r5) take
-# the slots of q08_period_compare, rollup_daily_events and
-# asof_last_order (each green in 2+ rounds, locally hash-pinned; their
-# families keep q01/q02/q10/q11, rollup_monthly/rollup_revenue, and the
-# sq8/sq10 streaming twins respectively). key_skew_report +
-# distribution_drift_daily (also new in r5) take q02_peak_month and
-# rollup_monthly_events (green r1-r4; q01/q10/q11 and
-# rollup_revenue_region_nation keep those families' rows).
-# sq12_drift_hourly (streaming drift twin, new r5) takes
-# sq2_dominant_trend's slot (green r1-r4; the sliding-window family
-# keeps sq2c_stateful_trend's row). Late-r5 additions:
-# data_quality_report takes distinct_users_daily's slot (green r4) and
-# sq13_contract_hourly (its streaming twin) takes
-# cube_revenue_nation_year's (green r4) — both displaced entries stay
-# pinned by the identical local DuckDB hash in test_oracle_parity.
-# sketch_value_percentiles (new r5: the oracle-pairable DDSketch twin —
-# the sketch family's FIRST hash-checkable entry; hll/approx stay
-# rows-only by design) takes customer_retention_setops' slot (green r4,
-# locally hash-pinned). sq14_value_percentiles_hourly (its streaming
-# twin) takes sq3_top_users' slot (green r1-r4; per-micro-batch rank
-# semantics keep sq5's row). source_overlap_matrix (new r5: the
-# pre-mixing cross-source redundancy matrix) takes cosine_topk's slot
-# (green r4; its exact-cosine oracle stays driver-covered because
-# ivf_topk_full_probe shares it). token_budget_mixing_plan (new r5:
-# weights + budget -> per-source epoch/repeat plan) takes
-# dedup_representative's slot (green r4; the dedup family keeps
-# dedup_components + incremental_dedup_report rows).
-# weighted_sample_docs (new r5: exact Efraimidis-Spirakis weighted
-# sampling in md5 hash space) takes unigram_logprob_score's slot
-# (green r4; the relevance family keeps bigram_backoff_score's row).
-# curriculum_shards (new r5: within-shard easy->hard ordering on the
-# hash shard plan) takes q11_pricing_summary's slot (green r4; the
-# q-suite keeps q01 + q10 rows). join_fanout_report (new r5: pre-join
-# output-explosion diagnostics, key_skew_report's other half) takes
-# rollup_revenue_region_nation's slot (green r4; the rollup family's
-# daily/monthly rows are green r1-r4 and locally pinned).
-# paragraph_dedup_docs (new r6: CCNet-style keep-first segment dedup
-# with rebuild) takes q01's slot and boundary_overlap_pairs (new r6:
-# crawl-stitching tail==head pairs, df-capped) takes q10's slot — both
-# q-suite rows are green r4 and locally hash-pinned, and the q-suite
-# keeps sq-side coverage plus every query's local DuckDB pin.
-# incremental_paragraph_report (new r6: the segment-granular member of
-# the incremental family) takes incremental_dedup_report's slot
-# (green r4; the exact-store funnel stays locally pinned).
-# vocab_coverage (new r6: tokenizer-design coverage curve) takes
-# bigram_backoff_score's slot (green r4; the relevance family keeps
-# its local pin). corpus_datacard (new r6: the one-scan dataset-card
-# table) takes dedup_components' slot (green r4; seven dedup-family
-# entries remain driver-checked). jl_projection (new r6: bit-exact
-# Rademacher dimensionality reduction) takes quality_filter_report's
-# slot (green r4). minhash_calibration (new r6: estimator-vs-exact
-# measurement) takes sq5_rank_anomaly's slot (green r4; five streaming
-# rows with r4 greens remain, and sq5 keeps its local pin).
-# gapfill_hourly_values (new r6: hypertable-style dense-spine LOCF)
-# takes sq4_engagement_conversion's slot (green r4; sq4 keeps its
-# local pin and the streaming family keeps 11 rows). stitch_report
-# (new r6: chain reassembly over the boundary pairs) takes
-# sq1_vs_baseline's slot (green r4; local pin remains).
-# r7 rotation: gapfill_hourly_interp + gapfill_daily_values (the only
-# oracle-paired entries with ZERO driver rows ever — added at registry
-# positions 132-133 after the r6 window closed) take the slots of
-# sq8_session_windows (green r1/r2/r3/r4/r6) and sq6_attribution_join
-# (green r1/r2/r3/r4/r6). jaccard_pairs + dedup_components re-rotate
-# in (r1-only greens whose implementations were touched by the r5 md5
-# hash-family migration; the local DuckDB pin held throughout but the
-# hard signal deserves refresh) taking sq7b_dedup_within_watermark
-# (green r2/r3/r4/r6) and sq9_hourly_daily_chain (green r3/r4/r6).
-# After BOTH r7 swaps (this one and the dup_substring one below, which
-# takes sq2c's and sq10's slots) the streaming family keeps 5 driver
-# rows: sq6b, sq11, sq12, sq13, sq14 — every rotated-out sq keeps its
-# local DuckDB pin. sq2d_trend_tws stays UNregistered by design: the
-# transformWithStateInPandas python worker imports google.protobuf,
-# absent in this container — a registry entry would hand the driver a
-# guaranteed initialization error (gate pinned by
+# sq2d_trend_tws (streaming/queries.py) stays unregistered: its
+# transformWithStateInPandas worker imports google.protobuf, which the
+# target environment lacks (pinned by
 # tests/test_streaming_semantics.py::test_transform_with_state_gate).
-# dup_substring_runs + dup_substring_table (new r7: variable-length
-# exact-substring dedup, the Lee-et-al cluster complement of
-# dup_spans) take the slots of sq2c_stateful_trend (green
-# r1/r2/r3/r4/r6) and sq10_funnel_hourly (green r3/r4/r6) — new
-# oracle-paired entries must earn a driver row in their birth round.
-# incremental_substring_runs (new r7: the substring member of the
-# incremental family, two-phase window-count store) takes
-# sq11_late_audit's slot (green r3/r4/r6; local pin remains, and the
-# streaming family keeps 4 driver rows: sq6b, sq12, sq13, sq14).
-# line_dedup_docs (new r7: within-doc keep-first line removal) takes
-# sq6b_attribution_left's slot (green r4/r6) — streaming keeps 3
-# driver rows (sq12, sq13, sq14) and every sq keeps its local pin.
-#
-# r8 rotation — the r7 verdict's top item: FRESHNESS-ROTATE THE PARITY
-# CORE. The SURVEY §2 core (q01-q10, latest green r3/r4; sq1-sq5,
-# latest r4) and the three r1-only text greens (doc_fingerprint,
-# lang_id, text_quality) re-enter — their shared plumbing
-# (plans/base.py, rollups, streaming/source.py) has been edited
-# repeatedly since r4 and the hard signal was three rounds old. The
-# round's four newly-oracle-paired entries also earn birth-round slots:
-# dedup_substring_removed (keep-one substring removal, pipeline stage
-# 2d), gapfill_weekly_values (ISO-week grain), sq15_neardup_dedup
-# (streaming MinHash near-dup dedup with watermark eviction), and
-# ivf_topk (rows-only -> hash-paired via the deterministic integer
-# farthest-point + Lloyd quantizer). 22 slots in total.
-# Displaced: 22 entries, every one driver-green in BOTH r6 and r7
-# (prefer-multi-green convention) and locally hash-pinned per pytest
-# run, each family keeping >= 1 r8 window row — paragraph_dedup_docs
-# (rewrite family keeps line_dedup_docs + incremental_paragraph_report),
-# bpe_merge_table (vocab_coverage stays), boundary_overlap_pairs
-# (stitch_report stays), curriculum_shards + shard_manifest_lpt
-# (shard_assignments stays), token_entropy (text_quality returns),
-# distribution_drift_daily (sq12 stays), join_fanout_report +
-# skew_join_plain + skew_join_salted (key_skew_report stays; the skew
-# pair's bench delta is measured over ALL registered queries, window
-# or not), minhash_lsh_pairs + jaccard_pairs + simhash_pairs +
-# source_overlap_matrix (minhash_calibration stays — it verifies the
-# same candidate staging with exact Jaccard — and sq15 brings the hash
-# family a streaming row), ivf_topk_full_probe (ivf_topk itself is now
-# the stronger hash row), token_budget_mixing_plan (token_budget_stats
-# stays), jl_projection (lsh_topk + ivf_topk carry embeddings),
-# dup_spans + dedup_spans_removed (dup_substring_runs/table stay and
-# dedup_substring_removed is the incoming removal row),
-# gapfill_hourly_values (interp/daily/weekly grains stay),
-# dedup_components (dedup_components_star carries CC coverage that
-# round; NB r10 moved stitch_documents off star contraction onto
-# pointer doubling, so dedup_components_star is now the ONLY driver
-# entry exercising connected_components_star),
-# cohort_retention (corpus_datacard keeps the grouping family).
-# Late-r8 additions: pq_rerank_topk and ivfpq_rerank_topk (both
-# rows-only -> hash-paired via the per-subspace application of the same
-# deterministic integer quantizer that converted ivf_topk) earn
-# birth-round slots, displacing pmi_collocations (r6+r7 double-green;
-# the relevance family keeps dsir_weights + dsir_sample window rows)
-# and sketch_value_percentiles (r6+r7 double-green; the sketch family
-# keeps sq14's streaming twin of the same histogram machinery).
-# semantic_dedup_report (rows-only -> hash-paired: integer-quantizer
-# cells + the exact-rational greedy cosine test) earns a birth-round
-# slot, displacing corpus_datacard (r6+r7 double-green; the grouping
-# family keeps unpivot_daily_type's window row).
-# Mid-r8 additions: unpivot_daily_type (native melt, pivot's inverse)
-# and variant_props_decode (Spark 4 VARIANT path extraction) earn
-# birth-round slots, displacing media_image_decode (r6+r7 double-green;
-# multimodal family keeps media_frame_sample) and stratified_sample_docs
-# (r6+r7 double-green; sampling family keeps weighted_sample_docs +
-# dsir_sample); sq16_variant_hourly (VARIANT decode keying a streaming
-# aggregation) displaces lsh_topk (r6+r7 double-green; the similarity
-# family keeps ivf_topk, the stronger hash row); http_collect_rollup
-# (S11 brought IN-ENGINE as a Spark 4 Python DataSource — the last
-# un-implemented SURVEY §2 row) displaces data_quality_report (r6+r7
-# double-green; the quality/drift family keeps sq12 + sq13 window rows
-# and the local hash pin runs every pytest session).
-# r9 rotation — FRESHNESS round (r8 verdict item 4): the 22 entries
-# whose last green driver row was r2/r3 all enter, because their
-# shared plumbing (dedup.py, relevance.py, the drain) has been edited
-# repeatedly since. 23 slots open up (22 stale + the
-# quality_classifier_scores birth-round re-seat, rows-only ->
-# hash-paired via the exact-integer NBSVM weighting):
-# - 18 r7+r8 double-greens leave: dsir_weights + dsir_sample (stay on
-#   bench.py's _WATCHLIST — perf adjudication is the bench's job now,
-#   with breach-confirmation solo re-runs), shard_assignments,
-#   incremental_paragraph_report, weighted_sample_docs,
-#   token_budget_stats, stitch_report, sq12_drift_hourly,
-#   dup_substring_runs, sq14_value_percentiles_hourly,
-#   minhash_calibration, gapfill_hourly_interp, line_dedup_docs,
-#   gapfill_daily_values, incremental_substring_runs,
-#   dup_substring_table, sq13_contract_hourly, media_frame_sample
-#   (multimodal family keeps the incoming media_features row).
-#   key_skew_report, vocab_coverage and packing_best_fit_bins are NOT
-#   displaced: each is its family's only window row.
-# - 5 r8-greens leave (freshest possible hard signal, all locally
-#   hash-pinned every pytest run): doc_fingerprint + text_quality,
-#   unpivot_daily_type (grouping family gets pivot_daily_type — the
-#   inverse op — plus type_correlation), pq_rerank_topk
-#   (ivfpq_rerank_topk subsumes the PQ machinery), and
-#   variant_props_decode (sq16_variant_hourly exercises the same
-#   VARIANT decode kernels as a streaming group key).
-# Late-r9 amendments (birth-round slots for the two new oracle-paired
-# rule reports): lang_id ceded its slot to gopher_quality_report (text
-# family keeps the 5 incoming text rows) and semantic_dedup_report
-# ceded its slot to c4_quality_report (int-ANN family keeps ivf_topk +
-# ivfpq_rerank_topk); both displaced entries stay locally hash-pinned
-# per pytest session and rotate back in r10 with the rest.
-# Families left without a window row this round (sharding, substring
-# incremental stores, gapfill, streaming drift/contract monitors) are
-# all r7+r8 double-green AND hash-pinned locally per pytest session;
-# they rotate back in r10.
-# r10 rotation — FRESHNESS round #2 (r9 verdict item 1): the entire
-# 32-entry cohort whose last green driver row was r4 enters (their
-# shared plumbing — dedup.py, relevance.py, functions/text.py — was
-# edited by the r9 whitespace-class/\z regex sweep), plus 5 of the 8
-# r6-stale streaming entries. 40 slots open up:
-# - Parity core shrinks 15 -> 10 for one round: q02/q04/q06/q07/q09
-#   leave (all r8+r9 double-green, hash-pinned locally every pytest
-#   run; the q-family keeps q01/q03/q05/q08/q10 and the whole
-#   streaming core sq1-sq5 stays).
-# - The r8-birth keepers leave after their second green round
-#   (dedup_substring_removed, gapfill_weekly_values, sq15_neardup_dedup,
-#   ivf_topk, http_collect_rollup, sq16_variant_hourly,
-#   ivfpq_rerank_topk) and the whole r9-refresh cohort leaves after
-#   one green round (22 entries, all r9-green + locally pinned).
-# - The r9 BIRTH entries are kept one more round per convention:
-#   gopher_quality_report, c4_quality_report, quality_classifier_scores
-#   (all three are also the entries this round's scale probes and
-#   regex property suite touch).
-# Ledgered deviations (same discipline as r9's forced rotation):
-# - gapfill family exits the window entirely (all four entries r7-r9
-#   green, locally hash-pinned per pytest run); rotates back in r11.
-# - http_collect_rollup (sole S11 row) and sq16_variant_hourly (sole
-#   semistruct row) exit double-green; variant decode kernels stay
-#   covered by the local pin; both rotate back in r11.
-# - 3 of the r6-stale streaming entries are deferred to r11 for slot
-#   budget: sq6_attribution_join (sq6b, the LEFT variant of the same
-#   join, IS in the window), sq9_hourly_daily_chain, sq11_late_audit.
+
+
+# The driver's correctness pass records rows for exactly the FIRST 50
+# entries of all_queries() in insertion order (round 1 registered 55 and
+# got rows for positions 1-50 only), so DRIVER_CHECKED names those 50
+# explicitly, all of them oracle-paired. Entries rotate in and out of
+# the 50 between rounds (git history keeps the record). An entry outside
+# the 50 is still pinned by the identical DuckDB hash comparison in
+# tests/test_oracle_parity.py, which runs every oracle-paired entry.
+# dedup_components took dedup_components_star's slot when star
+# contraction became the only connected-components algorithm and that
+# duplicate entry was removed.
 DRIVER_CHECKED: tuple[str, ...] = (
     # parity core, reduced to 10 for the rotation round
     "q01_yearly_rank_yoy", "q03_cumulative_top10",
@@ -761,7 +467,7 @@ DRIVER_CHECKED: tuple[str, ...] = (
     "asof_last_order", "bigram_backoff_score", "chunk_documents",
     "cosine_topk", "cube_revenue_nation_year",
     "customer_retention_setops", "decontaminate_report",
-    "dedup_components_star", "dedup_representative",
+    "dedup_components", "dedup_representative",
     "distinct_users_daily", "doc_repetition", "funnel_daily",
     "heavy_hitters_users", "incremental_dedup_report",
     "label_centroids", "leakage_split_report", "mixture_rebalance",
@@ -772,7 +478,7 @@ DRIVER_CHECKED: tuple[str, ...] = (
     "rollup_revenue_region_nation", "scd2_user_state",
     "token_length_histogram", "top_bigrams", "unigram_logprob_score",
     "user_day_bookends", "winnow_pairs",
-    # r6-stale streaming cohort (5 of 8; remainder ledgered above)
+    # r6-stale streaming cohort (5 of 8)
     "sq2c_stateful_trend", "sq6b_attribution_left",
     "sq7b_dedup_within_watermark", "sq8_session_windows",
     "sq10_funnel_hourly",
@@ -976,24 +682,13 @@ def _variant_props_decode(spark, sf):
 
 @register("dedup_components")
 def _dedup_components(spark, sf):
-    """Near-dup pairs -> dedup clusters via iterative min-label connected
-    components (operators/components.py); canonical keeper = min doc id."""
+    """Near-dup pairs -> dedup clusters via large-star/small-star
+    connected components (operators/components.py); canonical keeper =
+    min doc id."""
     from asvsp_spark.operators.components import dedup_clusters
     docs = _t(spark, sf, "documents")
     edges = D.jaccard_pairs(docs, threshold=0.3).select("doc_a", "doc_b")
     return dedup_clusters(docs, edges)
-
-
-@register("dedup_components_star")
-def _dedup_components_star(spark, sf):
-    """Same clusters as dedup_components but via large-star/small-star
-    contraction (operators/components.py connected_components_star) —
-    the O(log n)-round path for adversarial graph diameters; must equal
-    min-label propagation exactly (same oracle)."""
-    from asvsp_spark.operators.components import dedup_clusters
-    docs = _t(spark, sf, "documents")
-    edges = D.jaccard_pairs(docs, threshold=0.3).select("doc_a", "doc_b")
-    return dedup_clusters(docs, edges, algorithm="star")
 
 
 # ---- range join ----

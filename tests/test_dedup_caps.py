@@ -89,29 +89,41 @@ def test_star_cc_long_chain_few_rounds(spark):
     """A 10,000-vertex path graph: min-label propagation would need
     10k rounds; star contraction must collapse it to one component
     within 15 alternating rounds."""
-    from asvsp_spark.operators.components import connected_components_star
+    from asvsp_spark.operators.components import connected_components
     edges = spark.range(9999).select(
         F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
-    got = connected_components_star(edges, max_iter=15)
+    got = connected_components(edges, max_iter=15)
     comps = got.select("component").distinct().collect()
     assert [r.component for r in comps] == [0]
     assert got.count() == 10000
 
 
 def test_star_cc_equals_label_propagation(spark):
-    """On a mixed graph (cliques + chains + singleton-free ids) the two
-    algorithms compute the identical (vertex, component) labeling."""
-    from asvsp_spark.operators.components import (
-        connected_components, connected_components_star)
+    """On a mixed graph (cliques + chains + singleton-free ids) star
+    contraction computes the labeling min-label propagation converges
+    to: every vertex -> the min id reachable from it, here computed by a
+    pure-Python union-find that keeps the smaller id as the root."""
+    from asvsp_spark.operators.components import connected_components
     rows = [(i, i + 1) for i in range(0, 40)]            # chain 0..40
     rows += [(100 + i, 100 + j) for i in range(5) for j in range(i + 1, 5)]
     rows += [(200, 201), (203, 202), (201, 203)]         # mixed order
     edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
-    a = sorted((r.vertex, r.component)
-               for r in connected_components(edges, max_iter=50).collect())
-    b = sorted((r.vertex, r.component)
-               for r in connected_components_star(edges).collect())
-    assert a == b
+
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in rows:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = sorted((v, find(v)) for v in parent)
+    got = sorted((r.vertex, r.component)
+                 for r in connected_components(edges).collect())
+    assert got == want
 
 
 def test_winnowing_guarantee_and_compression(spark):

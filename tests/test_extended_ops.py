@@ -170,24 +170,30 @@ def test_cli_list_oracle_paths(capsys):
     assert main(["oracle", "hll_user_rollup"]) == 1
 
 
-def test_connected_components_chain_and_singletons(spark):
-    """A 5-vertex chain (needs multiple propagation rounds to converge),
-    a separate pair, and a doc with no edges (singleton cluster)."""
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_connected_components_chain_and_singletons(spark, id_type):
+    """A 5-vertex chain (needs multiple contraction rounds to converge),
+    a separate pair, and a doc with no edges (singleton cluster). The
+    API accepts any orderable id type: zero-padded string ids ("v01",
+    ...) order like the integers and must give the same clusters."""
     from asvsp_spark.operators.components import (connected_components,
                                                   dedup_clusters)
+    vid = (lambda i: i) if id_type == "long" else (lambda i: f"v{i:02d}")
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)],
-        "doc_a long, doc_b long")
+        [(vid(a), vid(b)) for a, b in [(1, 2), (2, 3), (3, 4), (4, 5),
+                                       (10, 11)]],
+        f"doc_a {id_type}, doc_b {id_type}")
     cc = {r.vertex: r.component for r in connected_components(edges).collect()}
-    assert cc == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
+    assert cc == {vid(v): vid(c) for v, c in
+                  {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}.items()}
 
-    docs = spark.createDataFrame([(i,) for i in (1, 2, 3, 4, 5, 10, 11, 99)],
-                                 "doc_id long")
+    docs = spark.createDataFrame(
+        [(vid(i),) for i in (1, 2, 3, 4, 5, 10, 11, 99)], f"doc_id {id_type}")
     out = {r.doc_id: r for r in dedup_clusters(docs, edges).collect()}
-    assert out[99].cluster_id == 99 and out[99].cluster_size == 1
-    assert out[99].is_keeper
-    assert out[5].cluster_id == 1 and out[5].cluster_size == 5
-    assert not out[5].is_keeper and out[1].is_keeper
+    assert out[vid(99)].cluster_id == vid(99)
+    assert out[vid(99)].cluster_size == 1 and out[vid(99)].is_keeper
+    assert out[vid(5)].cluster_id == vid(1) and out[vid(5)].cluster_size == 5
+    assert not out[vid(5)].is_keeper and out[vid(1)].is_keeper
 
 
 def test_type_correlation_extremes(spark):

@@ -806,7 +806,7 @@ def test_streaming_null_ts_edge_corpus_cross_engine_parity(
         spark, tmp_path):
     """NULL-ts / all-NULL / NULL-value / malformed-props events through
     every streaming (sq*) oracle pair, plus data_quality_report,
-    stitch_report and dedup_components_star on edge tables — closing
+    stitch_report and dedup_components on edge tables — closing
     the last un-edge-pinned oracle entries (r10).
 
     Event-time contract established by this probe: a NULL event
@@ -915,7 +915,7 @@ def test_streaming_null_ts_edge_corpus_cross_engine_parity(
     names = sorted(n for n in qs
                    if n.startswith("sq") and n in osql)
     names += ["data_quality_report", "stitch_report",
-              "dedup_components_star"]
+              "dedup_components"]
     assert len([n for n in names if n.startswith("sq")]) >= 19
     for name in names:
         compare_frames_hashed(qs[name](spark, d), con.sql(osql[name]),

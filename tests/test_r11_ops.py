@@ -1,7 +1,7 @@
 """Round 11 (optimization) pins: the array-local gaps-and-islands
 rewrite of the substring-run assembly (operators/dedup.py
-_assemble_runs / dup_spans), the co-partitioned label loop in
-connected_components, and the audit-only late drain
+_assemble_runs / dup_spans), connected_components on multi-round
+chains and self-loop-only vertices, and the audit-only late drain
 (drain_with_late_audit keep_ontime=False). Each test pins the
 optimized internals against either a hand-computed expectation or the
 pre-r11 formulation's semantics so an equivalence-breaking edit fails
@@ -102,11 +102,10 @@ def test_dup_spans_islands_gap_rule(spark):
 
 
 def test_connected_components_chain_needs_multiple_rounds(spark):
-    """The persist-based label loop must still converge on a chain
-    deeper than the seed fold (labels cross one hop per round) and
-    return a frame that is safely consumable AFTER the loop's caches
-    are dropped (the r11 loop unpersists per-round caches; the result
-    must not silently recompute from unpersisted lineage)."""
+    """Star contraction must converge on a chain that needs more than
+    one round, keep a vertex that appears only in a self-loop (40) as
+    its own component, and return a frame that is safely consumable
+    more than once."""
     from asvsp_spark.operators.components import connected_components
 
     chain = [(i, i + 1) for i in range(10, 18)]      # 10-...-18
@@ -116,7 +115,8 @@ def test_connected_components_chain_needs_multiple_rounds(spark):
     got = {r.vertex: r.component for r in cc.collect()}
     assert all(got[v] == 10 for v in range(10, 19))
     assert got[30] == 30 and got[31] == 30 and got[40] == 40
-    # consume twice: a second action re-reads the checkpointed result
+    # consume twice: a second action recomputes from the checkpointed
+    # frames the loop left behind
     assert cc.count() == len(got)
 
 

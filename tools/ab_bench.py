@@ -71,56 +71,6 @@ def _arms_assemble_runs():
     return use_old, use_new
 
 
-def _connected_components_r10(edges, src="doc_a", dst="doc_b",
-                              max_iter=25):
-    """r10 implementation (localCheckpoint labels) — the A arm."""
-    a = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = a.unionByName(a.select(F.col("v").alias("u"),
-                                 F.col("u").alias("v")))
-    n_parts = int(edges.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "200"))
-    sym = (sym.repartition(n_parts, F.col("v"))
-           .dropDuplicates(["u", "v"])
-           .persist())
-    sym.count()
-    labels = (sym.groupBy(F.col("u").alias("vertex"))
-              .agg(F.min("v").alias("_mv"))
-              .select("vertex",
-                      F.least("vertex", "_mv").alias("label")))
-    for _ in range(max_iter):
-        neigh = (
-            sym.join(labels, sym.v == labels.vertex)
-            .groupBy(F.col("u").alias("vertex"))
-            .agg(F.min("label").alias("n_min"))
-        )
-        updated = (
-            labels.join(neigh, "vertex", "left")
-            .select("vertex",
-                    F.least("label", F.coalesce("n_min", "label"))
-                    .alias("label"),
-                    (F.col("n_min") < F.col("label")).alias("_changed"))
-        ).localCheckpoint(eager=False)
-        changed = updated.filter(F.col("_changed")).count()
-        labels = updated.drop("_changed")
-        if changed == 0:
-            break
-    sym.unpersist()
-    return labels.select("vertex", F.col("label").alias("component"))
-
-
-def _arms_cc():
-    import asvsp_spark.operators.components as C
-    new = C.connected_components
-
-    def use_old():
-        C.connected_components = _connected_components_r10
-
-    def use_new():
-        C.connected_components = new
-
-    return use_old, use_new
-
-
 def _arms_sq11():
     """A = keep_ontime forced True (r10 behavior), B = repo code
     (sq11 passes keep_ontime=False)."""
@@ -246,7 +196,6 @@ def _arms_smj():
 
 TOOLS = {
     "assemble_runs": _arms_assemble_runs,
-    "cc": _arms_cc,
     "sq11": _arms_sq11,
     "smj": _arms_smj,
     "runs_ckpt": _arms_runs_ckpt,
