@@ -91,26 +91,6 @@ def stopword_count(toks_col_name: str, words: tuple[str, ...] = STOPWORDS) -> Co
     return F.expr(f"size(filter({toks_col_name}, t -> t IN ({wordlist})))")
 
 
-def quality_features(text: Column) -> dict[str, Column]:
-    """Deterministic quality features: char/token counts, average token
-    length, stopword ratio, and a blended quality score in [0, ~1].
-
-    The score formula is arbitrary but fixed; what matters for a training
-    pipeline is that it is cheap, monotone in the obvious signals, and
-    reproducible.
-    """
-    toks = tokens(text)
-    n_chars = F.length(text)
-    n_toks = F.size(toks)
-    n_alpha = F.length(F.regexp_replace(text, r"[^\p{L}]", ""))
-    return {
-        "tokens": toks,
-        "n_chars": n_chars,
-        "n_tokens": n_toks,
-        "n_alpha": n_alpha,
-    }
-
-
 def token_ngrams(toks_col_name: str, n: int) -> Column:
     """Adjacent token n-grams as an array column (space-joined), built
     with ``transform`` over ``sequence`` — no explode, no shuffle; the

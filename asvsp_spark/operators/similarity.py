@@ -5,13 +5,15 @@ Scale design (100TB / billions of vectors):
 - Brute force is the correctness baseline: broadcast the (small) query
   set, scan the corpus once, per-partition partial top-k via window rank.
   Works at any corpus size as long as |queries| x k fits on the driver.
-- The LSH paths bucket vectors by random-hyperplane sign sketches
-  (seeded numpy ``default_rng`` plane matrix regenerated per Arrow batch
-  inside a pandas UDF — deterministic across batches/executors/runs with
-  no stored model); candidates only within matching buckets — sub-linear
-  per query. Recall < 1 by construction, so they are registered as
-  rows-only checks (no SQL oracle), with bands/planes as the recall/cost
-  knobs.
+- The LSH paths bucket vectors by random-hyperplane sign sketches (plane
+  matrix regenerated per Arrow batch inside a pandas UDF — deterministic
+  across batches/executors/runs with no stored model); candidates only
+  within matching buckets — sub-linear per query, recall < 1 by
+  construction, with bands/planes as the recall/cost knobs.
+  ``lsh_bucketed_topk`` derives its plane signs from md5, so DuckDB
+  replays the sketch and the ``lsh_topk`` entry is oracle-paired; the
+  near-dup pair fallback (``_cosine_pairs_lsh``) uses seeded numpy
+  planes and is unit-tested only.
 """
 
 from __future__ import annotations
@@ -447,7 +449,8 @@ def _md5_sample_gate(emb: DataFrame, n: int, target: int,
 def _exact_cosine_rerank(emb: DataFrame, q: DataFrame, short: DataFrame,
                          k: int, id_col: str,
                          vec_col: str) -> DataFrame:
-    """Shared rerank tail of pq_rerank_topk_int / ivfpq_rerank_topk_int:
+    """Shared rerank tail of pq_rerank_topk_int / ivfpq_rerank_topk_int /
+    query_ivfpq_index:
     fetch original vectors for only the queries×shortlist ids via
     broadcast semi-join and rank by exact cosine (round_fixed 6) —
     cosine_topk's output contract (query_id, neighbor_id, cos_sim,
@@ -717,7 +720,7 @@ def ivf_topk(embeddings: DataFrame, k: int = 5, n_queries: int = 10,
     EXACTLY cosine_topk whatever the quantizer (tested; that full-probe
     twin shares cosine_topk's oracle).
     """
-    # cache + explicit unpersist (the semantic_dedup convention), NOT
+    # cache + explicit unpersist, NOT
     # localCheckpoint: checkpoint blocks are only released at driver GC,
     # so repeated invocations in one session (bench, test suites) would
     # pin two corpus copies each in executor storage
@@ -785,129 +788,21 @@ def ivf_topk(embeddings: DataFrame, k: int = 5, n_queries: int = 10,
     )
 
 
-def semantic_dedup(embeddings: DataFrame, threshold: float = 0.95,
+def semantic_dedup(embeddings: DataFrame, threshold_num: int = 9,
+                   threshold_den: int = 10,
                    n_cells: int | None = None,
                    id_col: str = "vec_id", vec_col: str = "embedding",
-                   seed: int = 42, max_keep_refs: int = 10_000) -> DataFrame:
+                   max_keep_refs: int = 10_000) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pruning (Abbas et al.,
-    "SemDeDup", arXiv:2303.09540 — public method): k-means cells as the
+    "SemDeDup", arXiv:2303.09540 — public method): trained cells as the
     blocking stage, greedy within-cell cosine pruning as the decision
-    stage. Returns one row per vector: (id, cell, is_keeper,
-    max_cos_kept) where ``max_cos_kept`` is the vector's highest cosine
-    to an already-kept vector of its cell (NULL for the cell's first).
+    stage. Returns one row per vector: (id, cell, is_keeper).
 
     Decision rule (deterministic, matching the dedup family's min-id
     keeper convention): scan each cell in ascending id order; a vector
     is DROPPED iff its cosine to some already-KEPT vector of the cell
-    is >= threshold. Cross-cell near-duplicates are missed by
-    construction — the standard blocking trade, with cells trained on
-    the data instead of random hyperplanes (higher recall at the same
-    block budget on clustered corpora; see `_cosine_pairs_lsh` for the
-    untrained alternative).
-
-    Scale shape (billions of vectors): training samples ~40 vectors per
-    centroid (same deterministic hash-sample as ivf_topk), assignment
-    is one broadcast-model pass, and the pruning is one shuffle on the
-    cell id into an ``applyInPandas`` whose per-cell work is a
-    normalized-matrix dot against the KEPT prefix (BLAS, no per-row
-    Python beyond the greedy scan). Cell size ~ sqrt(N) by default;
-    ``max_keep_refs`` caps the kept reference set per cell so one
-    pathological mega-cell cannot go quadratic — vectors past the cap
-    compare against the first ``max_keep_refs`` keepers only
-    (documented recall cap, the hot-bucket guard's twin).
-    """
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    emb = embeddings.select(
-        F.col(id_col), F.col(vec_col),
-        array_to_vector(as_double(F.col(vec_col))).alias("_fv")).cache()
-    n = emb.count()
-    kc = n_cells or max(2, int(n ** 0.5))
-    train = emb
-    target = 40 * kc
-    if n > 2 * target:
-        denom = max(2, n // target)
-        train = emb.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(denom)) == 0)
-    model = KMeans(k=kc, seed=seed, featuresCol="_fv", maxIter=5).fit(train)
-    # materialize the assignment, then release the cached feature frame:
-    # without the unpersist every invocation leaks executor storage
-    # memory for the session's lifetime (bench/long-running sessions
-    # call this many times)
-    assigned = (model.transform(emb)
-                .select(F.col(id_col), F.col(vec_col),
-                        F.col("prediction").alias("cell"))
-                .localCheckpoint(eager=True))
-    emb.unpersist()
-
-    id_type = embeddings.schema[id_col].dataType.simpleString()
-    out_schema = (f"{id_col} {id_type}, cell int, is_keeper boolean, "
-                  "max_cos_kept double")
-
-    def prune(pdf):
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        X = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-        norms = np.linalg.norm(X, axis=1)
-        norms[norms == 0.0] = 1.0          # zero vectors: cos 0 vs all
-        X = X / norms[:, None]
-        # preallocated keeper buffer: fancy-indexing the kept rows anew
-        # each iteration copies O(kept x dim) per row (O(n^2 d) per
-        # cell); appending into a fixed buffer and dotting against its
-        # filled VIEW does the same math copy-free
-        buf = np.empty((min(len(pdf), max_keep_refs), X.shape[1]))
-        n_ref = 0
-        keep = np.zeros(len(pdf), dtype=bool)
-        max_cos = np.full(len(pdf), np.nan)
-        for i in range(len(pdf)):
-            if n_ref:
-                c = float(np.max(buf[:n_ref] @ X[i]))
-                max_cos[i] = round(c, 6)
-                if c >= threshold:
-                    continue
-            keep[i] = True
-            if n_ref < buf.shape[0]:
-                buf[n_ref] = X[i]
-                n_ref += 1
-        return pd.DataFrame({
-            id_col: pdf[id_col], "cell": pdf["cell"].astype("int32"),
-            "is_keeper": keep, "max_cos_kept": max_cos})
-
-    return (assigned.groupBy("cell")
-            .applyInPandas(prune, out_schema))
-
-
-def semantic_dedup_report(embeddings: DataFrame, threshold: float = 0.95,
-                          n_cells: int | None = None,
-                          id_col: str = "vec_id",
-                          vec_col: str = "embedding") -> DataFrame:
-    """Per-cell pruning audit: vectors seen, keepers, drop fraction —
-    one partial-aggregated shuffle over the (bounded) cell key."""
-    return (
-        semantic_dedup(embeddings, threshold, n_cells, id_col, vec_col)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n_vectors"),
-             F.sum(F.col("is_keeper").cast("int")).alias("n_keepers"),
-             F.min(id_col).alias("first_id"))
-        .withColumn("drop_frac",
-                    round_fixed(1 - F.col("n_keepers") / F.col("n_vectors"),
-                                6))
-    )
-
-
-def semantic_dedup_int(embeddings: DataFrame, threshold_num: int = 9,
-                       threshold_den: int = 10,
-                       n_cells: int | None = None,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       max_keep_refs: int = 10_000) -> DataFrame:
-    """Oracle-paired SemDeDup: :func:`semantic_dedup`'s blocking +
-    greedy-prune semantics made cross-engine-EXACT. Cells come from the
-    deterministic integer quantizer (``ivf_centroids_int`` — the
-    ivf_topk machinery, DuckDB-replayable training + argmin
-    assignment), and the within-cell greedy decision drops a vector iff
-    its cosine to an already-kept vector reaches the RATIONAL threshold
-    num/den, evaluated without ever computing a cosine:
+    reaches the RATIONAL threshold num/den, evaluated without ever
+    computing a cosine:
 
         cos(x, y) >= num/den
         <=>  dot > 0  AND  den^2 * dot^2 >= num^2 * |x|^2 * |y|^2
@@ -915,15 +810,22 @@ def semantic_dedup_int(embeddings: DataFrame, threshold_num: int = 9,
     on micro-unit integer vectors — exact BIGINT dots, exact
     arbitrary-precision squares (python ints here, HUGEINT in the
     DuckDB twin), no float anywhere in the decision. Zero vectors have
-    dot = 0 against everything and are always kept, matching the float
-    path's cos-0 convention.
+    dot = 0 against everything and are always kept. Cells come from the
+    deterministic integer quantizer (``ivf_centroids_int`` — the
+    ivf_topk machinery, DuckDB-replayable training + argmin
+    assignment). Cross-cell near-duplicates are missed by construction
+    — the standard blocking trade, with cells trained on the data
+    instead of random hyperplanes (see `_cosine_pairs_lsh` for the
+    untrained alternative).
 
-    Scale shape is semantic_dedup's: bounded md5-sample training, one
-    broadcast-argmin assignment pass, one shuffle on the cell id into
-    an applyInPandas whose per-cell work is an exact int64 numpy dot
-    against the kept-reference prefix (``max_keep_refs`` caps it).
-    Output (id, cell, is_keeper) — no cosine column: the decision is
-    exact, so the report needs no float at all."""
+    Scale shape (billions of vectors): bounded md5-sample training
+    (~40 vectors per cell), one broadcast-argmin assignment pass, one
+    shuffle on the cell id into an applyInPandas whose per-cell work is
+    an exact int64 numpy dot against the kept-reference prefix. Cell
+    size ~ sqrt(N) by default; ``max_keep_refs`` caps the kept
+    reference set per cell so one pathological mega-cell cannot go
+    quadratic — vectors past the cap compare against the first
+    ``max_keep_refs`` keepers only (documented recall cap)."""
     import numpy as np
 
     emb = embeddings.select(F.col(id_col),
@@ -951,7 +853,7 @@ def semantic_dedup_int(embeddings: DataFrame, threshold_num: int = 9,
     def prune(pdf):
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
         V = np.asarray(pdf["v"].tolist(), dtype=np.int64)
-        _check_int_vec_range(V, "semantic_dedup_int")
+        _check_int_vec_range(V, "semantic_dedup")
         nsq = [int(x) for x in (V * V).sum(axis=1)]
         buf = np.empty((min(len(pdf), max_keep_refs), V.shape[1]),
                        dtype=np.int64)
@@ -998,19 +900,18 @@ def semantic_dedup_int(embeddings: DataFrame, threshold_num: int = 9,
     return assigned.groupBy("cell").applyInPandas(prune, out_schema)
 
 
-def semantic_dedup_report_int(embeddings: DataFrame,
-                              threshold_num: int = 9,
-                              threshold_den: int = 10,
-                              n_cells: int | None = None,
-                              id_col: str = "vec_id",
-                              vec_col: str = "embedding") -> DataFrame:
-    """Per-cell pruning audit over :func:`semantic_dedup_int` — the
-    hash-checkable twin of :func:`semantic_dedup_report` (drop_frac is
-    the only float: one small-integer division rounded once, stable
-    cross-engine)."""
+def semantic_dedup_report(embeddings: DataFrame, threshold_num: int = 9,
+                          threshold_den: int = 10,
+                          n_cells: int | None = None,
+                          id_col: str = "vec_id",
+                          vec_col: str = "embedding") -> DataFrame:
+    """Per-cell pruning audit over :func:`semantic_dedup`: vectors
+    seen, keepers, drop fraction — one partial-aggregated shuffle over
+    the (bounded) cell key. drop_frac is the only float: one
+    small-integer division rounded once, stable cross-engine."""
     return (
-        semantic_dedup_int(embeddings, threshold_num, threshold_den,
-                           n_cells, id_col, vec_col)
+        semantic_dedup(embeddings, threshold_num, threshold_den,
+                       n_cells, id_col, vec_col)
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_vectors"),
              F.sum(F.col("is_keeper").cast("int")).alias("n_keepers"),
@@ -1019,6 +920,36 @@ def semantic_dedup_report_int(embeddings: DataFrame,
                     round_fixed(1 - F.col("n_keepers") / F.col("n_vectors"),
                                 6))
     )
+
+
+def _ml_vector(vec_col: str) -> F.Column:
+    """The ``_fv`` ml-vector feature column :func:`_kmeans_cells` fits."""
+    from pyspark.ml.functions import array_to_vector
+
+    return array_to_vector(as_double(F.col(vec_col))).alias("_fv")
+
+
+def _kmeans_cells(emb: DataFrame, n: int, kc: int, seed: int,
+                  id_col: str):
+    """The float coarse quantizer shared by the persisted IVF index and
+    the incremental semantic store: seeded mllib KMeans (5 iterations)
+    over ``emb``'s ``_fv`` column, trained on a deterministic xxhash64
+    sample of ~40 vectors per cell once ``n`` exceeds twice that.
+    Returns (model, centroids frame (cell int, c_vec array<double>))."""
+    from pyspark.ml.clustering import KMeans
+
+    train = emb
+    target = 40 * kc
+    if n > 2 * target:
+        denom = max(2, n // target)
+        train = emb.filter(
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(denom)) == 0)
+    model = KMeans(k=kc, seed=seed, featuresCol="_fv", maxIter=5).fit(train)
+    centers = emb.sparkSession.createDataFrame(
+        [(i, [float(x) for x in c])
+         for i, c in enumerate(model.clusterCenters())],
+        schema="cell int, c_vec array<double>")
+    return model, centers
 
 
 def assign_cells(df: DataFrame, centroids: DataFrame,
@@ -1073,9 +1004,10 @@ def incremental_semantic_dedup(spark, new_docs: DataFrame, store_path: str,
     ``(fresh_docs, counts)``.
 
     Steps:
-      1. bootstrap (no store): run the SemDeDup blocking+greedy pass
-         (``semantic_dedup`` rule), persist the trained centroids and
-         the keepers' embeddings;
+      1. bootstrap (no store): train k-means cells on the batch
+         (``_kmeans_cells``) and persist the centroids; the batch then
+         runs step 2 against an empty store, so its keepers follow the
+         same greedy rule;
       2. delta: assign to the FROZEN cells via ``assign_cells`` (same
          expression metric every delta — a retrained quantizer would
          silently re-shard the space and break the vs-store guarantee),
@@ -1102,26 +1034,10 @@ def incremental_semantic_dedup(spark, new_docs: DataFrame, store_path: str,
     n_batch = new_docs.count()
 
     if not _store_exists(spark, cent_path):
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        emb = new_docs.select(
-            F.col(id_col), F.col(vec_col),
-            array_to_vector(as_double(F.col(vec_col))).alias("_fv")).cache()
+        emb = new_docs.select(F.col(id_col), _ml_vector(vec_col)).cache()
         kc = n_cells or max(2, int(max(n_batch, 4) ** 0.5))
-        train = emb
-        target = 40 * kc
-        if n_batch > 2 * target:
-            denom = max(2, n_batch // target)
-            train = emb.filter(
-                F.pmod(F.xxhash64(F.col(id_col)), F.lit(denom)) == 0)
-        model = KMeans(k=kc, seed=seed, featuresCol="_fv",
-                       maxIter=5).fit(train)
+        _, centroids = _kmeans_cells(emb, n_batch, kc, seed, id_col)
         emb.unpersist()   # trained; don't leak storage across batches
-        centroids = spark.createDataFrame(
-            [(i, [float(x) for x in c])
-             for i, c in enumerate(model.clusterCenters())],
-            schema="cell int, c_vec array<double>")
         centroids.coalesce(1).write.parquet(cent_path)
     else:
         centroids = spark.read.parquet(cent_path)
@@ -1151,9 +1067,10 @@ def incremental_semantic_dedup(spark, new_docs: DataFrame, store_path: str,
         norms = np.linalg.norm(X, axis=1)
         norms[norms == 0.0] = 1.0
         X = X / norms[:, None]
-        # preallocated reference buffer (see semantic_dedup's prune):
-        # stored keepers pre-seed it in id order up to the cap, delta
-        # keepers append after — identical semantics, no per-row copy
+        # preallocated reference buffer: fancy-indexing the kept rows
+        # anew each row copies O(kept x dim) per row; stored keepers
+        # pre-seed the buffer in id order up to the cap, delta keepers
+        # append after, and each row dots against its filled VIEW
         buf = np.empty((min(len(pdf), max_keep_refs), X.shape[1]))
         n_ref = 0
         for i in np.flatnonzero(store_mask):
@@ -1202,37 +1119,24 @@ def build_ivf_index(embeddings: DataFrame, index_path: str,
     cells reads 4/1000ths of the corpus bytes, no search structure
     beyond the directory layout.
 
-    Same training recipe as ``ivf_topk`` (sqrt(N) cells, 5 Lloyd
-    iterations over a deterministic hash-sample), but the trained
-    layout is reusable across queries/sessions/engines instead of
-    per-call. Returns {'n_vectors', 'n_centroids'}.
+    Cells come from ``_kmeans_cells`` (sqrt(N) cells, 5 seeded k-means
+    iterations over a deterministic hash-sample) — the float trainer,
+    not ``ivf_topk``'s integer quantizer, because it buys recall at the
+    same probe budget — and the trained layout is reusable across
+    queries/sessions/engines instead of per-call. Returns
+    {'n_vectors', 'n_centroids'}.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = embeddings.sparkSession
-    emb = embeddings.select(
-        F.col(id_col), F.col(vec_col), *extra_cols,
-        array_to_vector(as_double(F.col(vec_col))).alias("_fv")).cache()
+    emb = embeddings.select(F.col(id_col), F.col(vec_col), *extra_cols,
+                            _ml_vector(vec_col)).cache()
     n = emb.count()
     kc = n_centroids or max(2, int(n ** 0.5))
-    train = emb
-    target = 40 * kc
-    if n > 2 * target:
-        denom = max(2, n // target)
-        train = emb.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(denom)) == 0)
-    model = KMeans(k=kc, seed=seed, featuresCol="_fv", maxIter=5).fit(train)
+    model, centers = _kmeans_cells(emb, n, kc, seed, id_col)
     assigned = (model.transform(emb)
                 .select(F.col(id_col), F.col(vec_col), *extra_cols,
                         F.col("prediction").alias("cell")))
     assigned.write.mode("overwrite").partitionBy("cell") \
         .parquet(f"{index_path}/vectors")
     emb.unpersist()
-    centers = spark.createDataFrame(
-        [(i, [float(x) for x in c])
-         for i, c in enumerate(model.clusterCenters())],
-        schema="cell int, c_vec array<double>")
     centers.write.mode("overwrite").parquet(f"{index_path}/centroids")
     return {"n_vectors": n, "n_centroids": kc}
 
@@ -1244,11 +1148,23 @@ def _rank_probe_cells(q: DataFrame, centers, n_probe: int,
     closest cells, and collect the deduplicated cell ids (bounded
     metadata, ≤ queries × n_probe ints) for the static partition
     predicate. ``q`` carries (query_id, q_vec); ``carry`` names extra
-    q columns to keep on the probe rows."""
-    sq_dist = F.aggregate(
+    q columns to keep on the probe rows.
+
+    A query whose dimension differs from the index's raises here, at
+    the probe-cell collect: zip_with NULL-pads a length mismatch, which
+    would silently rank every cell by a NULL distance and return NULL
+    cosines."""
+    q_dim, c_dim = F.size("q_vec"), F.size("c_vec")
+    sq_dist = F.when(q_dim == c_dim, F.aggregate(
         F.zip_with(as_double(F.col("q_vec")), F.col("c_vec"),
                    lambda x, y: (x - y) * (x - y)),
         F.lit(0.0), lambda acc, x: acc + x)
+    ).otherwise(F.raise_error(F.concat(
+        F.lit("ANN index query: query vector has "),
+        F.coalesce(q_dim.cast("string"), F.lit("NULL")),
+        F.lit(" dims, index centroids have "),
+        F.coalesce(c_dim.cast("string"), F.lit("NULL")),
+        F.lit(" dims"))))
     w_probe = Window.partitionBy("query_id").orderBy(
         F.asc("d2"), F.asc("cell"))
     probes = (q.crossJoin(centers)
@@ -1317,8 +1233,8 @@ def pq_train(embeddings: DataFrame, m: int = 8, k_codes: int = 16,
     the uncompressed query, never reconstructing the corpus.
 
     Normalization first makes PQ's L2 distances rank identically to
-    cosine (||a-b||² = 2 - 2·cos for unit vectors), so pq_topk is
-    directly comparable to cosine_topk.
+    cosine (||a-b||² = 2 - 2·cos for unit vectors), so the ADC
+    shortlist of :func:`query_ivfpq_index` ranks like cosine_topk.
 
     Training runs driver-side over a capped deterministic hash-sample
     (``max_train`` vectors) with seeded numpy Lloyd iterations — the
@@ -1395,8 +1311,8 @@ def _sub_sq_dist(a: F.Column, b: F.Column) -> F.Column:
 def _adc_lut(q_unit: DataFrame, codebooks: DataFrame,
              d_sub: int) -> DataFrame:
     """Per-(query, sub, code) partial squared distances against the
-    broadcast codebooks — the asymmetric-distance lookup table shared
-    by pq_topk and query_ivfpq_index (queries × m × k rows, tiny).
+    broadcast codebooks — the asymmetric-distance lookup table of
+    query_ivfpq_index (queries × m × k rows, tiny).
     ``q_unit`` carries (query_id, _u) with _u the L2-normalized query."""
     return (q_unit.select("query_id", "_u")
             .crossJoin(F.broadcast(codebooks))
@@ -1413,7 +1329,7 @@ def pq_encode(embeddings: DataFrame, codebooks: DataFrame, m: int = 8,
     codebook centroid — the PQ hot path, so it runs as an Arrow-batched
     mapInPandas with the (m × k × d_sub) codebook tensor shipped by
     closure and the argmin done as one numpy matmul per batch (the same
-    measured-BLAS justification as semantic_dedup's cell assignment;
+    measured-BLAS justification as assign_cells;
     the expression-tree formulation pays k× the distance evaluations in
     interpreted codegen). No shuffle: encode is row-local. numpy argmin
     takes the FIRST minimum, so ties break toward the lower code id —
@@ -1452,78 +1368,7 @@ def pq_encode(embeddings: DataFrame, codebooks: DataFrame, m: int = 8,
         run, schema=out_schema)
 
 
-def pq_topk(codes: DataFrame, codebooks: DataFrame, queries: DataFrame,
-            k: int = 5, id_col: str = "vec_id",
-            vec_col: str = "embedding") -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: the query stays
-    uncompressed; per (query, sub, code) partial distances form a tiny
-    lookup table (queries × m × k rows, broadcast), the corpus codes
-    explode to (id, sub, code) and join it, and one partial-aggregating
-    sum per (query, id) ranks candidates — the corpus is touched only
-    through its 8-byte codes, never the original vectors.
-
-    Output (query_id, neighbor_id, approx_dist, rnk), ascending
-    distance (= descending cosine for unit vectors, up to quantization
-    error — recall vs cosine_topk is bounded in tests)."""
-    # one tiny job over the m×k codebook frame; only the subvector
-    # width is needed (the slice below indexes by the sub column)
-    d_sub = int(codebooks.agg(F.max(F.size("c_vec"))).first()[0])
-    lut = _adc_lut(
-        queries.select(F.col(id_col).alias("query_id"),
-                       _l2_normalize(as_double(F.col(vec_col)))
-                       .alias("_u")),
-        codebooks, d_sub)
-    corpus = (codes.select(
-        F.col(id_col),
-        F.posexplode("codes").alias("sub", "code")))
-    scored = (corpus.join(F.broadcast(lut), ["sub", "code"])
-              .filter(F.col(id_col) != F.col("query_id"))
-              .groupBy("query_id", id_col)
-              .agg(round_fixed(F.sum("d_part"), 6).alias("approx_dist")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_dist"), F.asc(id_col))
-    return (scored.withColumn("rnk", F.rank().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", F.col(id_col).alias("neighbor_id"),
-                    "approx_dist", "rnk"))
-
-
-def pq_topk_rerank(codes: DataFrame, codebooks: DataFrame,
-                   queries: DataFrame, corpus: DataFrame, k: int = 5,
-                   shortlist: int = 50, id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
-    """The production PQ shape (FAISS's IVFPQ+refine): ADC over the
-    8-byte codes SHORTLISTS ``shortlist`` candidates per query — the
-    cheap full scan — then exact cosine reranks only those against the
-    original vectors (queries × shortlist fetches, a semi-joined sliver
-    of the corpus). Measured here at m=8, k_codes=128, shortlist=50:
-    the shortlist captures 98% of the exact top-5 the raw ADC ranking
-    (recall ~0.36) misses; the rerank then orders it exactly.
-
-    Output matches cosine_topk's schema (query_id, neighbor_id,
-    cos_sim, rnk) so the two are drop-in comparable."""
-    short = pq_topk(codes, codebooks, queries, k=shortlist,
-                    id_col=id_col, vec_col=vec_col) \
-        .select("query_id", "neighbor_id")
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).alias("q_vec"))
-    # the shortlist is provably queries×shortlist rows — broadcast it so
-    # the corpus-side vector fetch never shuffles the corpus
-    cand = (corpus.select(F.col(id_col).alias("neighbor_id"),
-                          F.col(vec_col).alias("n_vec"))
-            .join(F.broadcast(short), "neighbor_id")
-            .join(F.broadcast(q), "query_id")
-            .withColumn("cos_sim",
-                        round_fixed(cosine(as_double(F.col("q_vec")),
-                                           as_double(F.col("n_vec"))), 6)))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (cand.withColumn("rnk", F.rank().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "cos_sim", "rnk"))
-
-
-# ---- exact-integer PQ: the oracle-paired twin of the float path ----
+# ---- exact-integer PQ: the oracle-paired shortlist + rerank ----
 
 def pq_codebooks_int(train_int: DataFrame, m: int = 8, k_codes: int = 16,
                      iters: int = IVF_LLOYD_ITERS, id_col: str = "vec_id",
@@ -1610,13 +1455,16 @@ def pq_rerank_topk_int(embeddings: DataFrame, k: int = 5,
                        shortlist: int = 50, id_col: str = "vec_id",
                        vec_col: str = "embedding") -> DataFrame:
     """Oracle-paired PQ ANN with exact reranking — the FAISS
-    IVFPQ+refine shape of :func:`pq_topk_rerank` on the deterministic
-    integer quantizer: micro-unit vectors, ``pq_codebooks_int``
+    PQ+refine shape on the deterministic integer quantizer: ADC over
+    the 8-byte codes SHORTLISTS ``shortlist`` candidates per query (the
+    cheap full scan), then exact cosine reranks only those. Micro-unit
+    vectors, ``pq_codebooks_int``
     training (DuckDB-replayable farthest-point + integer Lloyd per
     subspace), one shuffle-free Arrow encode pass (pq_encode_int),
     exact-BIGINT ADC over the 8-byte codes to shortlist candidates,
     exact cosine (on the ORIGINAL double vectors, round_fixed 6) to
-    rerank. Unlike the float path there is no L2 normalization — the
+    rerank. Unlike the persisted float index there is no L2
+    normalization — the
     ADC metric is raw squared euclidean, the same metric ivf_topk's
     cells use — so every intermediate number is exact integer
     arithmetic and the output hash-checks against the SQL twin.
@@ -1813,8 +1661,8 @@ def query_ivfpq_index(spark, index_path: str, queries: DataFrame,
        rank by exact cosine.
 
     Output (query_id, neighbor_id, cos_sim, rnk) — drop-in comparable
-    with cosine_topk / pq_topk_rerank; with n_probe covering every cell
-    and shortlist ≥ corpus it is exactly brute force.
+    with cosine_topk / pq_rerank_topk_int; with n_probe covering every
+    cell and shortlist ≥ corpus it is exactly brute force.
     """
     centers = F.broadcast(spark.read.parquet(f"{index_path}/centroids"))
     cb = spark.read.parquet(f"{index_path}/codebooks")
@@ -1846,20 +1694,8 @@ def query_ivfpq_index(spark, index_path: str, queries: DataFrame,
              .filter(F.col("sr") <= shortlist)
              .select("query_id", F.col(id_col).alias("neighbor_id")))
 
-    fetch = (stored.filter(F.col("cell").isin(cells))
-             .select(F.col(id_col).alias("neighbor_id"),
-                     F.col(vec_col).alias("n_vec"))
-             .join(F.broadcast(short), "neighbor_id")
-             .join(F.broadcast(q.select("query_id", "q_vec")), "query_id")
-             .withColumn("cos_sim",
-                         round_fixed(cosine(as_double(F.col("q_vec")),
-                                            as_double(F.col("n_vec"))),
-                                     6)))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (fetch.withColumn("rnk", F.rank().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "cos_sim", "rnk"))
+    return _exact_cosine_rerank(stored.filter(F.col("cell").isin(cells)),
+                                q, short, k, id_col, vec_col)
 
 
 def jl_project(embeddings: DataFrame, in_dim: int, out_dim: int = 16,

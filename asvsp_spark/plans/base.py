@@ -118,12 +118,6 @@ def md5_slice_long(col: Column, slot: int = 0) -> Column:
     return hex_slice_long(F.md5(col), 1 + 8 * slot, 8)
 
 
-def sql_round_fixed(expr: str, d: int) -> str:
-    """DuckDB twin of round_fixed for oracle SQL strings."""
-    scale = 10 ** d
-    return f"(round(({expr}) * {scale}) / {scale}.0)"
-
-
 def money_cents(col: Column) -> Column:
     """Quantize a dollar double to exact integer cents (deterministic:
     one multiply + one round on identical inputs)."""

@@ -738,8 +738,8 @@ SELECT query_id, neighbor_id, cos_sim, rnk FROM r WHERE rnk <= {k}
 ORACLE_TEXT["ivfpq_rerank_topk"] = _ivfpq_sql()
 
 
-# Spark side: operators/similarity.py semantic_dedup_report_int
-# (registry: threshold 9/10, kc=floor(sqrt(N)), 2 Lloyd iterations,
+# Spark side: operators/similarity.py semantic_dedup_report
+# (registry: threshold 3/10, kc=floor(sqrt(N)), 2 Lloyd iterations,
 # max_keep_refs=10000). _ivf_sql's training replay (same kc and sample
 # gate), then the SemDeDup greedy as a second recursion: each cell
 # advances one member per level in ascending vec_id order, and a member

@@ -400,17 +400,16 @@ def _semantic_dedup_report(spark, sf):
     and the greedy decision is the exact-rational cosine test
     dot > 0 AND den^2*dot^2 >= num^2*|x|^2*|y|^2 on micro-unit integer
     vectors — no float in any decision, so the DuckDB twin replays
-    training, assignment AND the greedy scan bit-identically. The
-    float path (semantic_dedup / semantic_dedup_report, mllib cells +
-    BLAS prune) remains the library API for the pipeline and the
-    frozen-cell incremental store, unit-pinned as before. Threshold
+    training, assignment AND the greedy scan bit-identically. This is
+    the engine's only SemDeDup; the frozen-cell incremental store
+    (incremental_semantic_dedup) keeps its own float k-means cells so
+    its on-disk centroids stay stable across deltas. Threshold
     3/10, not the SemDeDup-typical 0.9+: this synthetic corpus's
     cosines top out at ~0.6, so 0.9 never fires and the hash row would
     not exercise the greedy at all — at 3/10 it drops ~28% of vectors
     at every SF (the threshold is a knob, the semantics are not)."""
-    return SIM.semantic_dedup_report_int(_t(spark, sf, "embeddings"),
-                                         threshold_num=3,
-                                         threshold_den=10)
+    return SIM.semantic_dedup_report(_t(spark, sf, "embeddings"),
+                                     threshold_num=3, threshold_den=10)
 
 
 # ---- streaming queries SQ1-SQ5 (SURVEY §2.11) ----
@@ -435,12 +434,6 @@ _REGISTRY["sq13_contract_hourly"] = SQ.sq13_contract_hourly
 _REGISTRY["sq14_value_percentiles_hourly"] = SQ.sq14_value_percentiles_hourly
 _REGISTRY["sq15_neardup_dedup"] = SQ.sq15_neardup_dedup
 _REGISTRY["sq16_variant_hourly"] = SQ.sq16_variant_hourly
-
-
-# sq2d_trend_tws (streaming/queries.py) stays unregistered: its
-# transformWithStateInPandas worker imports google.protobuf, which the
-# target environment lacks (pinned by
-# tests/test_streaming_semantics.py::test_transform_with_state_gate).
 
 
 # The driver's correctness pass records rows for exactly the FIRST 50
@@ -1559,9 +1552,9 @@ def _pq_rerank_topk(spark, sf):
     partials are exact BIGINTs, so the DuckDB
     twin replays training, encoding, the shortlist AND the rerank
     bit-identically at every SF — including the md5 sample-gate path
-    that fires at sf0.1. The float FAISS-style path (pq_train /
-    pq_encode / pq_topk_rerank) remains the library API for persisted
-    IVFPQ indexes, recall-pinned in unit tests."""
+    that fires at sf0.1. The persisted IVF-PQ index (build_ivfpq_index
+    / query_ivfpq_index) keeps the float FAISS-style trainer (pq_train /
+    pq_encode) for its on-disk codes, recall-pinned in unit tests."""
     from asvsp_spark.operators.similarity import pq_rerank_topk_int
     # shortlist=100: recall vs exact top-5 measured 0.62@50 / 0.86@100
     # on the fixture (the raw-L2 ADC metric vs the cosine rerank costs

@@ -323,7 +323,7 @@ def overwrite_window_partitions(df: DataFrame, path: str,
 
 
 def foreach_batch_overwrite_partitions(path: str, partition_by: list[str],
-                                       files_per_partition: int | None = None):
+                                       files_per_partition: bool = False):
     """Exactly-once-per-window streaming sink: each micro-batch overwrites
     the (e.g. window_start-derived) partitions it carries. Combined with
     update output mode, a window re-emitted by a later batch — or by a
@@ -334,10 +334,9 @@ def foreach_batch_overwrite_partitions(path: str, partition_by: list[str],
     ``files_per_partition`` bounds the sink's file count: without it,
     every upstream task writes its own file into every partition dir it
     touches (shuffle_partitions x |partition values| files per batch —
-    small-files accretion plus one commit per file). ``1`` repartitions
-    the batch by the partition columns so each partition value lands in
-    exactly one file; ``n > 1`` adds a deterministic row-hash salt so a
-    hot partition value still fans out over n write tasks.
+    small-files accretion plus one commit per file). When true, it
+    repartitions the batch by the partition columns so each partition
+    value lands in exactly one file.
 
     There is no emptiness pre-check: every batch runs the write. An
     empty frame writes no file and replaces no partition (dynamic
@@ -349,16 +348,8 @@ def foreach_batch_overwrite_partitions(path: str, partition_by: list[str],
     """
     def _sink(batch_df: DataFrame, _batch_id: int) -> None:
         out = batch_df
-        if files_per_partition == 1:
+        if files_per_partition:
             out = out.repartition(*[F.col(c) for c in partition_by])
-        elif files_per_partition and files_per_partition > 1:
-            # to_json, not the raw struct: xxhash64 rejects MapType
-            # columns; see streaming/source.py drain_to_parquet for the
-            # determinism + identical-rows caveats (same contract)
-            salt = F.pmod(F.xxhash64(F.to_json(F.struct(*batch_df.columns))),
-                          F.lit(files_per_partition))
-            out = out.repartition(
-                *[F.col(c) for c in partition_by], salt)
         overwrite_window_partitions(out, path, partition_by)
     return _sink
 

@@ -217,35 +217,6 @@ def sq2c_stateful_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return drain(hourly_trend_stateful(stream), spark)
 
 
-# ---------------------------------------------------------------- SQ2d
-
-def sq2d_trend_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """sq2c's cross-batch trend on Spark 4's transformWithStateInPandas
-    (StatefulProcessor) instead of applyInPandasWithState — identical
-    two-batch harness, identical output. NOT registered with the driver:
-    the TWS python driver worker needs google.protobuf, absent in this
-    container (see streaming/stateful.py hourly_trend_tws docstring);
-    runs as written on a cluster with protobuf."""
-    from asvsp_spark.streaming.stateful import hourly_trend_tws
-    events = tables.load(spark, sf_dir, "events")
-    mx_us = events.agg(F.max(F.unix_micros("ts")).alias("mx")).first()["mx"]
-    tmp = tempfile.mkdtemp(prefix="asvsp-sq2d-")
-    sent_us = mx_us + 30 * 24 * 3600 * 1_000_000
-    stream_dir = f"{tmp}/stream"
-    os.makedirs(stream_dir)
-    now = time.time()
-    copy_events_normalized(f"{sf_dir}/events.parquet",
-                           f"{stream_dir}/f0.parquet", mtime=now - 100)
-    write_event_rows(
-        f"{stream_dir}/f1.parquet",
-        [(10**12 + i, sent_us, 0, t, 0.0, "{}")
-         for i, t in enumerate(EVENT_TYPES)],
-        mtime=now - 50)
-    raw = events_stream_reader(spark, stream_dir, max_files_per_trigger=1)
-    stream = raw.withWatermark("ts", "2 hours")
-    return drain(hourly_trend_tws(stream), spark)
-
-
 # ---------------------------------------------------------------- SQ3
 
 def sq3_top_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -396,15 +367,14 @@ def sq6_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conversion day, overwrite-by-partition idempotency), NOT the
     # driver-collecting drain: this join emits O(events) rows, and the
     # read-back below is the only batch materialization.
-    # files_per_partition=1: without it each of the join's shuffle tasks
+    # files_per_partition: without it each of the join's shuffle tasks
     # writes its own file into every conv_day dir it touches (~8 x 31
     # files + commits per drain); one file per day is the right local
-    # AND cluster shape for this row count — raise it past 1 (salted)
-    # only when a single day's attribution rows outgrow one task.
+    # AND cluster shape for this row count.
     sunk = drain_to_parquet(
         result.withColumn("conv_day", F.substring("conv_time", 1, 10)),
         spark, partition_by=["conv_day"], output_mode="append",
-        files_per_partition=1)
+        files_per_partition=True)
     return sunk.select(
         "conv_event_id", "eng_event_id", "user_id", "conv_type",
         "eng_type", "conv_time", "lag_micros", "conv_value")
@@ -677,7 +647,7 @@ def sq6b_attribution_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     # append_manifest, NOT overwrite_partitions: a day's matches emit in
     # batch 1 but its null-flush arrives in the final watermark batch —
     # partition overwrite would clobber the matches.
-    # files_per_partition=1: without it each of the join's shuffle tasks
+    # files_per_partition: without it each of the join's shuffle tasks
     # writes its own file into every eng_day dir it touches (measured:
     # 480 files for 40k rows across the two batches); one exchange of
     # the joined rows per batch keys each day to one file — the same
@@ -685,7 +655,7 @@ def sq6b_attribution_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     sunk = drain_to_parquet(
         result.withColumn("eng_day", F.substring("eng_time", 1, 10)),
         spark, partition_by=["eng_day"], output_mode="append",
-        sink="append_manifest", files_per_partition=1)
+        sink="append_manifest", files_per_partition=True)
     return sunk.select(
         "eng_event_id", "user_id", "eng_type", "eng_time",
         "conv_event_id", "conv_type", "lag_micros")

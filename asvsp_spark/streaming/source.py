@@ -114,9 +114,6 @@ def events_stream_reader(spark: SparkSession, path: str, *,
     return raw.filter(F.col("ts").isNotNull())
 
 
-_TS_US_UTC = "us-utc sentinel"  # documentation anchor only
-
-
 def _normalized_events_cached(src: str) -> str:
     """Normalize ``src`` (ts -> timestamp[us, tz=UTC]) once per source
     file and cache the result keyed by (path, size, mtime); repeat
@@ -573,7 +570,7 @@ def drain_to_parquet(stream_df: DataFrame, spark: SparkSession,
                      shuffle_partitions: int | None = None,
                      checkpoint_dir: str | None = None,
                      sink: str = "overwrite_partitions",
-                     files_per_partition: int | None = None) -> DataFrame:
+                     files_per_partition: bool = False) -> DataFrame:
     """Production-shaped drain for ROW-LEVEL streaming output: micro-
     batches land in a partitioned parquet sink and the returned DataFrame
     READS THE SINK. Nothing row-level ever moves through the driver —
@@ -601,37 +598,18 @@ def drain_to_parquet(stream_df: DataFrame, spark: SparkSession,
     manifest sink writes one file per upstream task per partition dir it
     touches — shuffle_partitions x |partition values| files per batch
     (sq6b measured 480 files for 40k rows) — paying a commit per file
-    now and file-open overhead on every later scan. ``1`` repartitions
-    each batch by the partition columns (one stateless exchange of the
-    already-joined/aggregated rows, never of source state) so each
-    partition value lands in one file; ``n > 1`` adds a deterministic
-    row-hash salt so a hot partition value still spreads over n write
-    tasks — the knob to raise when a single day/key outgrows one task
-    at cluster scale.
+    now and file-open overhead on every later scan. When true, it
+    repartitions each batch by the partition columns (one stateless
+    exchange of the already-joined/aggregated rows, never of source
+    state) so each partition value lands in one file per batch.
     """
     sink_path = path or tempfile.mkdtemp(prefix="asvsp-sink-")
     with _available_now_run(spark, shuffle_partitions,
                             checkpoint_dir) as ckpt:
-        if sink == "append_manifest" and files_per_partition:
-            if files_per_partition == 1 and partition_by:
-                stream_df = stream_df.repartition(
-                    *[F.col(c) for c in partition_by])
-            elif files_per_partition > 1 and partition_by:
-                # deterministic row-hash salt (guide §2.5: never rand()
-                # — a retried task must land rows identically). to_json
-                # rather than hashing the raw struct: xxhash64 rejects
-                # MapType columns outright, and every sink schema
-                # json-serializes. Caveat: content-IDENTICAL rows share
-                # a salt by construction — the spread guarantee is over
-                # distinct rows, which is what a near-dup-deduped
-                # pipeline emits.
-                salt = F.pmod(
-                    F.xxhash64(F.to_json(F.struct(*stream_df.columns))),
-                    F.lit(files_per_partition))
-                stream_df = stream_df.repartition(
-                    *[F.col(c) for c in partition_by], salt)
-            else:
-                stream_df = stream_df.repartition(files_per_partition)
+        if (sink == "append_manifest" and files_per_partition
+                and partition_by):
+            stream_df = stream_df.repartition(
+                *[F.col(c) for c in partition_by])
         writer = stream_df.writeStream.outputMode(output_mode)
         if sink == "append_manifest":
             if output_mode != "append":

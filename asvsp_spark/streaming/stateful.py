@@ -173,87 +173,3 @@ def hourly_trend_stateful(stream: DataFrame, rise: float = 1.1,
         fn, TREND_OUT_SCHEMA, TREND_STATE_SCHEMA, "update",
         GroupStateTimeout.NoTimeout,
     )
-
-
-# ---- the same operator on Spark 4's transformWithState API ----
-
-def hourly_trend_tws(stream: DataFrame, rise: float = 1.1,
-                     fall: float = 0.9) -> DataFrame:
-    """``hourly_trend_stateful`` re-expressed on Spark 4's
-    ``transformWithStateInPandas`` (StatefulProcessor) — the successor
-    API to applyInPandasWithState: named state variables with explicit
-    schemas instead of one packed tuple, event-time mode supplying the
-    watermark through ``timerValues``. Semantics and output are
-    IDENTICAL to hourly_trend_stateful, so the two APIs are directly
-    comparable in this codebase.
-
-    ENVIRONMENT GATE: the transformWithState driver worker imports
-    google.protobuf (pyspark/sql/streaming/proto/StateMessage_pb2), which
-    this container does not ship, so the query crashes at state-schema
-    validation here (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE);
-    on any cluster with protobuf installed it runs as written. The
-    applyInPandasWithState twin above carries the oracle-checked
-    coverage (sq2c) — same pattern as the Kafka/JDBC adapters: correct
-    code, gated by the sandbox. A unit test pins the gate.
-
-    Scale notes match the original: state per key is the open windows'
-    exact integer partials (watermark-bounded count) + last closed
-    average; shuffle is one hash partition by key.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle)
-
-    state_schema = T.StructType([
-        T.StructField("wins", T.ArrayType(T.LongType())),
-        T.StructField("sums", T.ArrayType(T.LongType())),
-        T.StructField("counts", T.ArrayType(T.LongType())),
-        T.StructField("last_avg", T.DoubleType()),
-        T.StructField("has_last", T.BooleanType()),
-    ])
-
-    class HourlyTrend(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState("trend", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            (etype,) = key
-            snap = self._st.get()
-            if snap is not None:
-                wins, sums, counts, last_avg, has_last = snap
-                open_w = {w: [s, c] for w, s, c in zip(wins, sums, counts)}
-            else:
-                open_w, last_avg, has_last = {}, 0.0, False
-
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                _merge_trend_batch(open_w, pdf)
-
-            wm_s = timerValues.getCurrentWatermarkInMs() // 1000
-            out, last_avg, has_last = _close_trend_windows(
-                open_w, wm_s, etype, last_avg, has_last, rise, fall)
-
-            keys = sorted(open_w)
-            self._st.update((keys, [open_w[k][0] for k in keys],
-                             [open_w[k][1] for k in keys],
-                             last_avg, has_last))
-            if out:
-                yield pd.DataFrame(
-                    out, columns=[f.name for f in TREND_OUT_SCHEMA])
-
-        def close(self) -> None:
-            pass
-
-    src = stream.select(
-        "event_type", "ts",
-        F.expr("unix_micros(ts) div 1000000").alias("secs"),
-        value_centi(F.col("value")).alias("v"),
-    )
-    return src.groupBy("event_type").transformWithStateInPandas(
-        statefulProcessor=HourlyTrend(),
-        outputStructType=TREND_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="EventTime",
-    )

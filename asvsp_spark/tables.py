@@ -154,7 +154,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 f"{got}, declared {want} — type drift fails loudly "
                 "instead of changing semantics silently")
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TPCH_TABLES}

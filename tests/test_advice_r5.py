@@ -92,7 +92,8 @@ def test_semantic_dedup_string_ids(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
     out = {r.vec_id: r.is_keeper
-           for r in semantic_dedup(df, threshold=0.95, n_cells=2).collect()}
+           for r in semantic_dedup(df, threshold_num=95, threshold_den=100,
+                                   n_cells=2).collect()}
     assert out["doc-a"] is True
     assert out["doc-b"] is False          # dup of doc-a, higher id
     assert sum(out.values()) == 3
@@ -141,11 +142,10 @@ def test_drift_empty_delta_no_store_corruption(spark, tmp_path):
 
 
 def test_pq_paths_tolerate_zero_vectors(spark):
-    """A zero embedding anywhere (training sample, corpus, query) must
-    not raise under ANSI mode; the zero query ranks by centroid norms
-    and still returns exactly k neighbors."""
-    from asvsp_spark.operators.similarity import (pq_encode, pq_topk,
-                                                  pq_train)
+    """A zero embedding in the training sample and the corpus must not
+    raise under ANSI mode (the query side is covered by
+    test_ivfpq_rerank_tolerates_zero_vectors)."""
+    from asvsp_spark.operators.similarity import pq_encode, pq_train
     import random
     rng = random.Random(7)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(8)])
@@ -155,9 +155,6 @@ def test_pq_paths_tolerate_zero_vectors(spark):
     cb = pq_train(emb, m=4, k_codes=4)
     codes = pq_encode(emb, cb, m=4)
     assert codes.count() == 41
-    out = pq_topk(codes, cb, emb.filter("vec_id in (0, 99)"), k=3)
-    got = out.groupBy("query_id").count().collect()
-    assert {r["query_id"]: r["count"] for r in got} == {0: 3, 99: 3}
 
 
 def test_cli_quality_score_null_text(spark, tmp_path, capsys):
@@ -212,9 +209,9 @@ def test_heuristic_labels_degenerate_docs(spark):
 
 
 def test_ivfpq_rerank_tolerates_zero_vectors(spark, tmp_path):
-    """The full IVF-PQ path (including the exact-cosine rerank, which
-    pq_topk alone never exercises) must survive zero vectors in corpus
-    AND query under ANSI mode; the zero query still returns k rows."""
+    """The full IVF-PQ path (ADC shortlist and exact-cosine rerank)
+    must survive zero vectors in corpus AND query under ANSI mode; the
+    zero query still returns k rows."""
     import random
     from asvsp_spark.operators.similarity import (build_ivfpq_index,
                                                   query_ivfpq_index)

@@ -845,18 +845,19 @@ def test_semantic_dedup_single_cell_greedy_rule(spark):
         (20, [0.0, 0.0, 1.0]),       # orthogonal: kept
     ]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    out = {r.vec_id: (r.is_keeper, r.max_cos_kept)
-           for r in semantic_dedup(df, threshold=0.95, n_cells=2).collect()}
+
+    def run():
+        return {r.vec_id: (r.cell, r.is_keeper)
+                for r in semantic_dedup(df, threshold_num=95,
+                                        threshold_den=100,
+                                        n_cells=2).collect()}
+    out = run()
     assert len(out) == 6
-    keepers = {k for k, (kp, _) in out.items() if kp}
+    keepers = {k for k, (_, kp) in out.items() if kp}
     assert {1, 10, 20} <= keepers
-    assert not out[2][0] and not out[3][0] and not out[11][0]
-    assert out[2][1] >= 0.95 and out[11][1] >= 0.95
-    # deterministic across invocations (seeded k-means + hash sample)
-    again = {r.vec_id: (r.is_keeper, r.max_cos_kept)
-             for r in semantic_dedup(df, threshold=0.95,
-                                     n_cells=2).collect()}
-    assert again == out
+    assert not out[2][1] and not out[3][1] and not out[11][1]
+    # deterministic across invocations (integer quantizer + md5 sample)
+    assert run() == out
 
 
 def test_semantic_dedup_report_counts(spark):
@@ -866,12 +867,14 @@ def test_semantic_dedup_report_counts(spark):
     from asvsp_spark.operators.similarity import (semantic_dedup,
                                                   semantic_dedup_report)
     emb = tables.load(spark, SF_DIR, "embeddings")
-    per_vec = semantic_dedup(emb, threshold=0.9)
-    rep = semantic_dedup_report(emb, threshold=0.9)
+    # 3/10, not 9/10: at 9/10 every fixture vector is kept, at 3/10 the
+    # greedy drops some, so the reconciliation covers both columns
+    per_vec = semantic_dedup(emb, threshold_num=3, threshold_den=10)
+    rep = semantic_dedup_report(emb, threshold_num=3, threshold_den=10)
     tot = rep.agg(F.sum("n_vectors"), F.sum("n_keepers")).first()
     assert tot[0] == emb.count()
     assert tot[1] == per_vec.filter("is_keeper").count()
-    assert 0 < tot[1] <= tot[0]
+    assert 0 < tot[1] < tot[0]
 
 
 def test_pii_scrub_matches_duckdb(spark):

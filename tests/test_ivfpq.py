@@ -7,6 +7,7 @@ projection in the ADC stage)."""
 
 import glob
 
+import pytest
 from pyspark.sql import functions as F
 
 EMB = "/root/testdata/sf0.001/embeddings.parquet"
@@ -100,3 +101,46 @@ def test_cli_ann_build_query_pq_roundtrip(spark, tmp_path, capsys):
     assert got.count() == 15
     assert set(got.columns) == {"query_id", "neighbor_id", "cos_sim",
                                 "rnk"}
+
+
+def _queries_32d(spark):
+    """Two fixture vectors cut to 32 of their 64 dims."""
+    return (spark.read.parquet(EMB).filter(F.col("vec_id") < 2)
+            .select("vec_id", F.slice("embedding", 1, 32)
+                    .alias("embedding")))
+
+
+@pytest.mark.parametrize("pq", [False, True], ids=["ivf", "ivfpq"])
+def test_index_query_rejects_dimension_mismatch(spark, tmp_path, pq):
+    """A 32-d query against a 64-d index must raise, naming both
+    dimensions. zip_with NULL-pads the shorter array, so an unguarded
+    probe ranked every cell by a NULL distance and returned k rows per
+    query, all with a NULL cos_sim and no error."""
+    from asvsp_spark.operators.similarity import (build_ivf_index,
+                                                  query_ivf_index,
+                                                  query_ivfpq_index)
+    if pq:
+        _, idx, _ = _build(spark, tmp_path, n_centroids=4, m=8,
+                           k_codes=16)
+        query = query_ivfpq_index
+    else:
+        idx = str(tmp_path / "ivf")
+        build_ivf_index(spark.read.parquet(EMB), idx, n_centroids=4)
+        query = query_ivf_index
+    with pytest.raises(Exception, match="query vector has 32 dims, "
+                                        "index centroids have 64 dims"):
+        query(spark, idx, _queries_32d(spark), k=3).collect()
+
+
+def test_cli_ann_query_rejects_dimension_mismatch(spark, tmp_path):
+    """ann-query fails on a query file of the wrong width instead of
+    writing NULL-scored neighbor rows."""
+    from asvsp_spark.cli import main
+    idx = str(tmp_path / "idx")
+    out = str(tmp_path / "topk")
+    q_src = str(tmp_path / "queries")
+    _queries_32d(spark).write.parquet(q_src)
+    assert main(["ann-build", EMB, idx, "--centroids", "4"]) == 0
+    with pytest.raises(Exception, match="query vector has 32 dims"):
+        main(["ann-query", idx, q_src, out, "--k", "3"])
+    assert not glob.glob(f"{out}/*.parquet")

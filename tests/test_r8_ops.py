@@ -505,25 +505,25 @@ def test_semantic_dedup_int_chain_and_boundary(spark):
     Plus the exact rational boundary: cos((1,0),(3,4)) = 3/5 exactly,
     and the decision rule is >=, so at threshold 3/5 the pair drops —
     pinned in exact integer arithmetic, no float could express this."""
-    from asvsp_spark.operators.similarity import semantic_dedup_int
+    from asvsp_spark.operators.similarity import semantic_dedup
     docs = spark.createDataFrame(
         [(0, [1.0, 0.0, 0.0, 0.0]),
          (1, [0.9, 0.45, 0.0, 0.0]),     # cos vs 0 = .894, vs 2 = .447
          (2, [0.45, 0.9, 0.0, 0.0])],    # cos vs 1 = .8
         "vec_id long, embedding array<double>")
     out = {r.vec_id: r.is_keeper
-           for r in semantic_dedup_int(docs, threshold_num=4,
-                                       threshold_den=5,
-                                       n_cells=1).collect()}
+           for r in semantic_dedup(docs, threshold_num=4,
+                                   threshold_den=5,
+                                   n_cells=1).collect()}
     assert out == {0: True, 1: False, 2: True}
 
     edge = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [3.0, 4.0])],
         "vec_id long, embedding array<double>")
     out = {r.vec_id: r.is_keeper
-           for r in semantic_dedup_int(edge, threshold_num=3,
-                                       threshold_den=5,
-                                       n_cells=1).collect()}
+           for r in semantic_dedup(edge, threshold_num=3,
+                                   threshold_den=5,
+                                   n_cells=1).collect()}
     assert out == {0: True, 1: False}    # cos = 3/5 exactly, >= drops
 
 
@@ -534,10 +534,10 @@ def test_semantic_dedup_int_greedy_invariants_on_fixture(spark):
     conflict; (b) every DROPPED vector conflicts with an earlier-id
     KEPT vector of its cell."""
     from asvsp_spark.operators.similarity import (IVF_QUANT_SCALE,
-                                                  semantic_dedup_int)
+                                                  semantic_dedup)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    rows = semantic_dedup_int(emb, threshold_num=3,
-                              threshold_den=10).collect()
+    rows = semantic_dedup(emb, threshold_num=3,
+                          threshold_den=10).collect()
 
     def q(x):
         # Spark F.round is HALF AWAY FROM ZERO; python round() is
@@ -577,13 +577,13 @@ def test_int_ann_ops_empty_input(spark):
     from asvsp_spark.operators.similarity import (ivf_topk,
                                                   ivfpq_rerank_topk_int,
                                                   pq_rerank_topk_int,
-                                                  semantic_dedup_int)
+                                                  semantic_dedup)
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
     for fn in (pq_rerank_topk_int, ivfpq_rerank_topk_int, ivf_topk):
         out = fn(empty)
         assert out.count() == 0
         assert out.columns == ["query_id", "neighbor_id", "cos_sim", "rnk"]
-    out = semantic_dedup_int(empty)
+    out = semantic_dedup(empty)
     assert out.count() == 0
     assert out.columns == ["vec_id", "cell", "is_keeper"]
 

@@ -446,52 +446,6 @@ def test_sq9_emits_complete_days_only(spark):
     assert days[("2024-01-01", "click")].n_hours == 2
 
 
-def test_transform_with_state_gate(spark, tmp_path):
-    """hourly_trend_tws (transformWithStateInPandas) is a correct twin of
-    the oracle-checked sq2c operator, but the TWS python driver worker
-    imports google.protobuf, which this container does not ship. Pin the
-    gate: the plan BUILDS (API wiring is right), and execution either
-    succeeds (cluster with protobuf) or fails with the documented
-    initialization error — never anything else."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-    from asvsp_spark.streaming.source import drain
-    from asvsp_spark.streaming.stateful import hourly_trend_tws
-
-    d = str(tmp_path / "ev")
-    import os as _os
-    _os.makedirs(d)
-    pq.write_table(pa.table({
-        "event_id": pa.array([1], pa.int64()),
-        "ts": pa.array([1_700_000_000_000_000], pa.timestamp("us", tz="UTC")),
-        "user_id": pa.array([1], pa.int64()),
-        "event_type": pa.array(["view"]),
-        "value": pa.array([1.0], pa.float64()),
-        "props": pa.array(["{}"]),
-    }), f"{d}/f.parquet")
-    stream = (spark.readStream
-              .schema("event_id long, ts timestamp, user_id long, "
-                      "event_type string, value double, props string")
-              .parquet(d).withWatermark("ts", "2 hours"))
-    res = hourly_trend_tws(stream)            # plan construction must work
-    assert [f.name for f in res.schema.fields] == [
-        "event_type", "window_start", "n_events", "avg_value",
-        "prev_avg", "trend"]
-    try:
-        import google.protobuf  # noqa: F401
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-    if has_protobuf:
-        assert drain(res, spark).count() >= 0
-    else:
-        import pytest as _pytest
-        from pyspark.errors.exceptions.captured import StreamingQueryException
-        with _pytest.raises(StreamingQueryException):
-            drain(res, spark).count()
-
-
 def test_kafka_stream_option_contract_and_payload_path(spark, monkeypatch,
                                                        tmp_path):
     """Contract test for the Kafka adapter (no broker in the sandbox),
