@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from asvsp_spark.functions.text import tokens
+
 
 def chunk_documents(documents: DataFrame, chunk_tokens: int = 64,
                     overlap: int = 16,
@@ -33,7 +35,7 @@ def chunk_documents(documents: DataFrame, chunk_tokens: int = 64,
         raise ValueError(
             f"need 0 <= overlap ({overlap}) < chunk_tokens ({chunk_tokens})")
     stride = chunk_tokens - overlap
-    toks = F.split(F.trim(F.col(text_col)), r"[ \t\n\f\r]+")
+    toks = tokens(F.col(text_col))
     n = F.size("toks")
     # ceil(max(n - overlap, 1) / stride) without float math
     n_chunks = (F.greatest(n - F.lit(overlap), F.lit(1))

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from asvsp_spark.functions.text import fingerprint
+from asvsp_spark.functions.text import fingerprint, token_count, tokens
 from asvsp_spark.plans.base import fanout, round_fixed
 
 
@@ -66,7 +66,7 @@ def shingle_posting(documents: DataFrame, n: int = 3,
     documents = fanout(documents)
     toks = documents.select(
         F.col(id_col).alias("doc"),
-        F.split(F.trim(F.col(text_col)), r"[ \t\n\f\r]+").alias("toks"))
+        tokens(F.col(text_col)).alias("toks"))
     return toks.select(
         "doc", F.explode(_shingle_array(n)).alias("sh"))
 
@@ -98,7 +98,7 @@ def shingled(documents: DataFrame, n: int = 3,
     documents = fanout(documents)
     toks = documents.select(
         F.col(id_col).alias("doc"),
-        F.split(F.trim(F.col(text_col)), r"[ \t\n\f\r]+").alias("toks"))
+        tokens(F.col(text_col)).alias("toks"))
     return toks.select("doc", _shingle_array(n).alias("shingles"))
 
 
@@ -411,10 +411,10 @@ def simhash64(documents: DataFrame,
     # the token explode + md5 + 64 vote aggregates run on a single core
     # (measured 2.6 s -> 1.0 s at sf0.1 local[32]); no-op at production
     # partition counts.
-    tokens = (
+    tok_hashes = (
         fanout(documents)
         .select(F.col(id_col).alias("doc"),
-                F.explode(F.split(F.trim(F.col(text_col)), r"[ \t\n\f\r]+")).alias("t"))
+                F.explode(tokens(F.col(text_col))).alias("t"))
         .select("doc",
                 md5_slice_long(F.col("t"), 0).alias("h_lo"),
                 md5_slice_long(F.col("t"), 1).alias("h_hi"))
@@ -436,7 +436,7 @@ def simhash64(documents: DataFrame,
                .otherwise(F.lit(0).cast("long"))
         pack = bit if pack is None else pack.bitwiseOR(bit)
     return (
-        tokens.groupBy("doc").agg(*vote_cols)
+        tok_hashes.groupBy("doc").agg(*vote_cols)
         .select(F.col("doc").alias(id_col), pack.alias("simhash"))
     )
 
@@ -499,7 +499,7 @@ def winnow_fingerprints(documents: DataFrame, k: int = 3, w: int = 4,
     from asvsp_spark.functions.text import token_ngrams
     kg = documents.select(
         F.col(id_col).alias("doc"),
-        F.split(F.trim(F.col(text_col)), r"[ \t\n\f\r]+").alias("toks"))
+        tokens(F.col(text_col)).alias("toks"))
     kg = kg.select("doc", token_ngrams("toks", k).alias("kg"))
     hs = kg.select("doc", F.expr("transform(kg, g -> md5(g))").alias("hs"))
     return hs.select(
@@ -921,7 +921,7 @@ def _window_hash_arrays(documents: DataFrame, w: int, id_col: str,
     from asvsp_spark.functions.text import token_ngrams
     toks = fanout(documents).select(
         F.col(id_col).alias("doc"),
-        F.split(F.trim(F.col(text_col)), r"[ \t\n\f\r]+").alias("toks"))
+        tokens(F.col(text_col)).alias("toks"))
     if checkpoint_toks:
         toks = toks.localCheckpoint(eager=True)
     wins_arr = toks.select("doc", F.transform(
@@ -1060,7 +1060,7 @@ def remove_dup_spans(documents: DataFrame, spans: DataFrame,
          .otherwise(F.expr(f"concat_ws(' ', transform({kept}, x -> x.t))"))
          .alias(text_col),
         F.when(F.col("_spans").isNull(), F.lit(0))
-         .otherwise(F.size(F.split(F.trim(F.col(text_col)), r"[ \t\n\f\r]+"))
+         .otherwise(token_count(F.col(text_col))
                     - F.expr(f"size({kept})"))
          .cast("int").alias("n_tokens_removed"))
 
@@ -1691,7 +1691,7 @@ def boundary_overlap_pairs(documents: DataFrame, k: int = 3,
     kk = int(k)
     toks = fanout(documents).select(
         F.col(id_col).alias("doc"),
-        F.split(F.trim(F.col(text_col)), r"[ \t\n\f\r]+").alias("toks"))
+        tokens(F.col(text_col)).alias("toks"))
     toks = toks.filter(F.size("toks") >= kk)
     ends = toks.select(
         "doc",

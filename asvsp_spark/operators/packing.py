@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from asvsp_spark.functions.text import token_count
+
 
 def pack_contiguous(documents: DataFrame, budget: int = 512,
                     n_shards: int = 4,
@@ -44,7 +46,7 @@ def pack_contiguous(documents: DataFrame, budget: int = 512,
     toked = documents.select(
         F.col(id_col),
         shard.cast("int").alias("shard"),
-        F.size(F.split(F.trim(F.col(text_col)), r"[ \t\n\f\r]+")).alias("n_tokens"))
+        token_count(F.col(text_col)).alias("n_tokens"))
     w = (Window.partitionBy("shard").orderBy(id_col)
          .rowsBetween(Window.unboundedPreceding, -1))
     return (
@@ -98,7 +100,7 @@ def pack_whole_docs(documents: DataFrame, budget: int = 512,
     toked = documents.select(
         F.col(id_col),
         shard.cast("int").alias("shard"),
-        F.size(F.split(F.trim(F.col(text_col)), r"[ \t\n\f\r]+")).alias("n_tokens"))
+        token_count(F.col(text_col)).alias("n_tokens"))
     out_schema = StructType(list(toked.schema.fields)
                             + [StructField("bin_id", LongType(), False)])
 

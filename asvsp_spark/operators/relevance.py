@@ -312,7 +312,7 @@ def dsir_weights(docs: DataFrame, target_filter: F.Column | None = None,
     toks = fanout(docs).select(
         F.col(id_col).alias("doc"),
         F.coalesce(target_filter, F.lit(False)).alias("is_target"),
-        F.split(F.trim(F.col(text_col)), r"[ \t\n\f\r]+").alias("toks"))
+        TX.tokens(F.col(text_col)).alias("toks"))
     grams = toks.select(
         "doc", "is_target",
         F.explode(TX.token_ngrams("toks", n)).alias("g"))

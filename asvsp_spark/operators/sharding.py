@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from asvsp_spark.functions.text import token_count
 from asvsp_spark.plans.base import hex_slice_long
 
 
@@ -79,7 +80,7 @@ def shard_assignments(documents: DataFrame, n_shards: int = 16,
     extra = [F.col(curriculum_col).alias("_cur")] if curriculum_col else []
     docs = documents.select(
         F.col(id_col),
-        F.size(F.split(F.trim(F.col(text_col)), r"[ \t\n\f\r]+")).alias("n_tokens"),
+        token_count(F.col(text_col)).alias("n_tokens"),
         _perm_key(id_col, salt).alias("pk"), *extra)
     if by_tokens:
         rk = F.row_number().over(

@@ -17,6 +17,10 @@ the source; JDBC writes batch rows and parallelize across partitions.
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -354,6 +358,35 @@ def foreach_batch_overwrite_partitions(path: str, partition_by: list[str],
     return _sink
 
 
+def _swap_in(path: str, tag: str, write: Callable[[str], None]) -> None:
+    """Replace the directory at ``path`` with what ``write(tmp)`` puts
+    in a temp sibling. Protocol: write the sibling, rename the live dir
+    aside, move the sibling into place, then delete the old dir — the
+    old data survives (under ``__old``) until the new dir is live, so a
+    crash at any step never loses the only copy, and a failed write or
+    rename leaves no sibling behind. This is NOT an atomic swap: a
+    reader listing between the two renames sees a missing dir, and one
+    that listed before them can fail mid-scan. True atomicity needs
+    renameat2(RENAME_EXCHANGE) or a catalog-level commit (Iceberg/Delta);
+    for single-writer maintenance windows this protocol is standard."""
+    token = uuid.uuid4().hex[:8]
+    tmp = f"{path}__{tag}_{token}"
+    try:
+        write(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    old = f"{path}__old_{token}"
+    os.rename(path, old)          # same-dir rename: no cross-fs copy
+    try:
+        os.rename(tmp, path)
+    except BaseException:
+        os.rename(old, path)      # roll back: old data becomes live again
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    shutil.rmtree(old)
+
+
 def compact_parquet(spark: SparkSession, path: str,
                     target_file_bytes: int = 512 * 1024 * 1024,
                     partition_by: list[str] | None = None) -> int:
@@ -367,19 +400,10 @@ def compact_parquet(spark: SparkSession, path: str,
     ACTUAL on-disk bytes (via the file index, no data scan), coalescing
     to ceil(bytes / target).
 
-    Swap protocol: write to a temp sibling, rename the live dir aside,
-    move the temp into place, then delete the old dir — the old data
-    survives (under ``__old``) until the new dir is live, so a crash at
-    any step never loses the only copy. This is NOT an atomic swap: a
-    reader listing between the two renames sees a missing dir, and one
-    that listed before them can fail mid-scan. True atomicity needs
-    renameat2(RENAME_EXCHANGE) or a catalog-level commit (Iceberg/Delta);
-    for single-writer maintenance windows this protocol is standard.
+    The rewrite goes through the crash-safe directory swap of
+    ``_swap_in``.
     """
     import math
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
 
     # mergeSchema: an append-only store can carry mixed footers (e.g. a
     # legacy 2-col segment store that later received batch_id-stamped
@@ -392,25 +416,14 @@ def compact_parquet(spark: SparkSession, path: str,
     # only — parquet footers are not read for sizeInBytes)
     total = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     n_files = max(1, math.ceil(total / target_file_bytes))
-    token = _uuid.uuid4().hex[:8]
-    tmp = f"{path}__compact_{token}"
-    try:
+
+    def write(tmp: str) -> None:
         w = df.repartition(n_files).write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(tmp)
-    except BaseException:
-        _shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    old = f"{path}__old_{token}"
-    _os.rename(path, old)          # same-dir rename: no cross-fs copy
-    try:
-        _os.rename(tmp, path)
-    except BaseException:
-        _os.rename(old, path)      # roll back: old data becomes live again
-        _shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    _shutil.rmtree(old)
+
+    _swap_in(path, "compact", write)
     import glob as _glob
     return len(_glob.glob(f"{path}/**/*.parquet", recursive=True))
 
@@ -426,19 +439,13 @@ def merge_upsert(spark, path: str, updates, key_cols: list[str],
     This is the reference's truncate-and-reload ritual replaced by a
     keyed merge (and the operation Delta/Iceberg call MERGE, expressed
     on raw parquet): one full-outer join on the key, action decided per
-    row, rewrite through the same crash-safe rename protocol as
-    compact_parquet (old data survives aside until the new dir is
-    live). Scale: the join shuffles base+updates by key once — for
-    partitioned bases where updates touch few partitions, join against
-    only those partitions and use overwrite_window_partitions instead;
-    this full-merge path is the general fallback.
+    row, rewrite through the crash-safe directory swap of ``_swap_in``
+    (old data survives aside until the new dir is live). Scale: the
+    join shuffles base+updates by key once — for partitioned bases
+    where updates touch few partitions, join against only those
+    partitions and use overwrite_window_partitions instead; this
+    full-merge path is the general fallback.
     """
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
     base = spark.read.parquet(path)
     data_cols = [c for c in base.columns if c not in key_cols]
     upd_cols = [c for c in updates.columns
@@ -480,21 +487,6 @@ def merge_upsert(spark, path: str, updates, key_cols: list[str],
                    .otherwise(F.col(f"b.{c}")).alias(c)
                   for c in data_cols])
     )
-    token = _uuid.uuid4().hex[:8]
-    tmp = f"{path}__merge_{token}"
-    try:
-        merged.write.mode("overwrite").parquet(tmp)
-    except BaseException:
-        _shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    old = f"{path}__old_{token}"
-    _os.rename(path, old)
-    try:
-        _os.rename(tmp, path)
-    except BaseException:
-        _os.rename(old, path)
-        _shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    _shutil.rmtree(old)
+    _swap_in(path, "merge", merged.write.mode("overwrite").parquet)
     return {k: counts.get(k, 0) for k in
             ("insert", "update", "delete", "delete_noop", "keep")}

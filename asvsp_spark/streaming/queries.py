@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from asvsp_spark import tables
+from asvsp_spark.functions.text import tokens
 from asvsp_spark.operators.rollups import baselines, centi_avg, value_centi
 from asvsp_spark.plans.base import round_fixed
 from asvsp_spark.streaming.source import (WATERMARK, copy_documents_tagged,
@@ -937,7 +938,7 @@ def with_doc_band_key(df: DataFrame, id_col: str = "doc_id",
     from asvsp_spark.functions.text import token_ngrams
     from asvsp_spark.plans.base import hex_slice_long
     d = (df
-         .withColumn("_tk", F.split(F.trim(F.col(text_col)), r"[ \t\n\f\r]+"))
+         .withColumn("_tk", tokens(F.col(text_col)))
          .withColumn("_sh", F.array_distinct(token_ngrams("_tk", 3)))
          .withColumn("_h", F.transform(
              "_sh", lambda s: F.md5(F.concat_ws("|", F.lit("0"), s)))))

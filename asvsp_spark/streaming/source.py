@@ -260,18 +260,19 @@ def kafka_stream(spark: SparkSession, brokers: str, topic: str,
 KAFKA_TS_FORMAT = "yyyy-MM-dd HH:mm:ss.SSSSSSXXX"
 
 
-def kafka_wire_frame(df: DataFrame, key_cols: tuple[str, ...] = ("user_id",),
-                     ts_format: str = KAFKA_TS_FORMAT) -> DataFrame:
+def kafka_wire_frame(df: DataFrame, key_cols: tuple[str, ...] = ("user_id",)
+                     ) -> DataFrame:
     """Producer-side wire projection: (key binary, value binary) — the
     shape Spark's Kafka sink requires. key = '_'-joined key columns
     (reference producer.py:140-145 keys records ``f"{city}_{state}"``),
     value = JSON of every input column with timestamps formatted as
-    ``ts_format`` strings so ``kafka_stream``'s from_json +
+    ``KAFKA_TS_FORMAT`` strings so ``kafka_stream``'s from_json +
     to_timestamp chain recovers them bit-exactly. Pure projection —
     testable without a broker, and the round-trip (this frame ->
     kafka_stream's parse) is pinned by unit test."""
     cols = [
-        F.date_format(c, ts_format).alias(c) if t.startswith("timestamp")
+        F.date_format(c, KAFKA_TS_FORMAT).alias(c)
+        if t.startswith("timestamp")
         else F.col(c)
         for c, t in df.dtypes
     ]
@@ -508,8 +509,7 @@ def _local_batch(spark: SparkSession, rows: list, schema) -> DataFrame:
 
 
 def state_rows_report(stream_df: DataFrame, spark: SparkSession,
-                      output_mode: str = "update",
-                      shuffle_partitions: int | None = None) -> dict:
+                      output_mode: str = "update") -> dict:
     """MEASURED state-store occupancy for a stateful streaming frame —
     the empirical backing for every "state is watermark-bounded" claim
     in this package: run the query to completion (availableNow, noop
@@ -535,7 +535,7 @@ def state_rows_report(stream_df: DataFrame, spark: SparkSession,
     prev_prog = spark.conf.get(prog_key, None)
     spark.conf.set(prog_key, "100000")
     try:
-        with _available_now_run(spark, shuffle_partitions) as ckpt:
+        with _available_now_run(spark) as ckpt:
             query = (stream_df.writeStream.format("noop")
                      .outputMode(output_mode)
                      .option("checkpointLocation", ckpt)
@@ -723,10 +723,7 @@ def copy_events_split(src: str, dest: str, mod: int, rem: int,
 
 
 def drain_with_late_audit(stream_df: DataFrame, spark: SparkSession,
-                          delay_seconds: int = 7200, ts_col: str = "ts",
-                          late_path: str | None = None,
-                          ontime_path: str | None = None,
-                          shuffle_partitions: int | None = None,
+                          delay_seconds: int = 7200,
                           keep_ontime: bool = True
                           ) -> tuple[DataFrame | None, DataFrame]:
     """Late-data SIDE OUTPUT — the one §2.8 'Absent' capability Spark has
@@ -752,10 +749,9 @@ def drain_with_late_audit(stream_df: DataFrame, spark: SparkSession,
     Scale notes: both outputs are executor-side parquet appends — no
     row-level data crosses the driver (only the per-batch max, one
     scalar). Each batch is persisted once and split by one filter each
-    way; the late side of a healthy stream is a trickle. For production
-    idempotency under re-runs, point the sinks at batch-id-keyed
-    subdirs or swap in foreach_batch_overwrite_partitions; a one-shot
-    availableNow drain (fresh checkpoint) needs neither.
+    way; the late side of a healthy stream is a trickle. Both sinks are
+    fresh temp dirs behind a fresh checkpoint, so a re-run starts clean.
+    Event time is read from the ``ts`` column.
 
     ``keep_ontime=False`` skips the on-time sink entirely and returns
     ``None`` for the on-time side, so code that reads it anyway fails
@@ -767,13 +763,13 @@ def drain_with_late_audit(stream_df: DataFrame, spark: SparkSession,
     """
     from pyspark.sql import functions as F
 
-    late_dir = late_path or tempfile.mkdtemp(prefix="asvsp-late-")
-    ontime_dir = ((ontime_path or tempfile.mkdtemp(prefix="asvsp-ontime-"))
+    late_dir = tempfile.mkdtemp(prefix="asvsp-late-")
+    ontime_dir = (tempfile.mkdtemp(prefix="asvsp-ontime-")
                   if keep_ontime else None)
     state = {"max_us": None}
 
     def handle(batch_df: DataFrame, _batch_id: int) -> None:
-        us = F.unix_micros(F.col(ts_col))
+        us = F.unix_micros(F.col("ts"))
         if state["max_us"] is None:
             ontime, late = batch_df, None
         else:
@@ -799,7 +795,7 @@ def drain_with_late_audit(stream_df: DataFrame, spark: SparkSession,
             if n_actions > 1:
                 batch_df.unpersist()
 
-    with _available_now_run(spark, shuffle_partitions) as ckpt:
+    with _available_now_run(spark) as ckpt:
         query = (stream_df.writeStream.outputMode("append")
                  .foreachBatch(handle)
                  .option("checkpointLocation", ckpt)

@@ -5,7 +5,6 @@ insensitive value comparison)."""
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb
@@ -37,51 +36,10 @@ def duck_with_views(con: duckdb.DuckDBPyConnection, sf_dir: str) -> None:
             f"SELECT * FROM parquet_scan('{sf_dir}/{t}.parquet')")
 
 
-def _canon(value):
-    if value is None:
-        return None
-    if hasattr(value, "tolist"):  # numpy scalar or array
-        value = value.tolist()
-    if isinstance(value, (list, tuple)):
-        return tuple(_canon(v) for v in value)
-    if isinstance(value, float):
-        if math.isnan(value):
-            return "NaN"
-        # driver-style canonicalization: rounds are applied in-query, so
-        # equality should be exact; format compactly to absorb repr noise
-        return f"{value:.9g}"
-    if isinstance(value, bool):
-        return bool(value)
-    return value
-
-
-def compare_frames(spark_df, duck_rel, context: str = "") -> None:
-    """Assert the Spark result and the DuckDB result are set-equal."""
-    sp = spark_df.toPandas()
-    dk = duck_rel.fetchdf()
-    assert sorted(sp.columns) == sorted(dk.columns), (
-        f"{context}: columns differ: spark={sorted(sp.columns)} duck={sorted(dk.columns)}")
-    cols = sorted(sp.columns)
-    sp_rows = sorted(
-        tuple(_canon(v) for v in row)
-        for row in sp[cols].itertuples(index=False, name=None))
-    dk_rows = sorted(
-        tuple(_canon(v) for v in row)
-        for row in dk[cols].itertuples(index=False, name=None))
-    assert len(sp_rows) == len(dk_rows), (
-        f"{context}: row counts differ: spark={len(sp_rows)} duck={len(dk_rows)}")
-    mismatches = [
-        (a, b) for a, b in zip(sp_rows, dk_rows) if a != b
-    ]
-    assert not mismatches, (
-        f"{context}: {len(mismatches)} row mismatches; first 5: {mismatches[:5]}")
-
-
 def compare_frames_hashed(spark_df, duck_rel, context: str = "") -> int:
     """Driver-style compare: collect both sides, sort columns by name,
     canonicalize every value with str() (so NULLs sort as 'None' and
-    never break tuple ordering — compare_frames' pandas path can't mix
-    None and str in a sort key), and assert equal sha256 value hashes.
+    never break tuple ordering), and assert equal sha256 value hashes.
     This is bit-for-bit the check the round driver runs. Returns the
     Spark row count so callers can assert cardinality without
     re-executing the plan. THE single copy of this comparator — the

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from asvsp_spark.plans.registry import all_oracle_sql, all_queries
-from tests.conftest import SF_DIR, duck_with_views, compare_frames
+from tests.conftest import SF_DIR, compare_frames_hashed, duck_with_views
 
 QUERIES = all_queries()
 ORACLES = all_oracle_sql()
@@ -22,7 +22,7 @@ def test_oracle_parity(name, spark, duck):
     duck_with_views(duck, SF_DIR)
     spark_df = QUERIES[name](spark, SF_DIR)
     duck_rel = duck.sql(ORACLES[name])
-    compare_frames(spark_df, duck_rel, context=name)
+    compare_frames_hashed(spark_df, duck_rel, context=name)
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))

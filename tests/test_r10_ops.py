@@ -18,7 +18,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from tests.conftest import compare_frames
+from tests.conftest import compare_frames_hashed
 
 
 def test_sq15_oracle_keeps_null_text_docs(spark, tmp_path):
@@ -51,7 +51,8 @@ def test_sq15_oracle_keeps_null_text_docs(spark, tmp_path):
 
     spark_df = sq15_neardup_dedup(spark, sf)
     duck_rel = con.sql(ORACLE_EXT["sq15_neardup_dedup"])
-    compare_frames(spark_df, duck_rel, context="sq15 NULL-text corpus")
+    compare_frames_hashed(spark_df, duck_rel,
+                          context="sq15 NULL-text corpus")
 
     # the NULL-text doc must actually be REPRESENTED on both sides:
     # total kept across batch 1 = distinct content keys (4 distinct
@@ -320,7 +321,7 @@ def test_nb_quality_sampled_path_oracle_parity(spark, duck):
                                                 nb_quality_scores)
     from asvsp_spark.plans.oracle_text import _nb_quality_sql
     from asvsp_spark.tables import load
-    from tests.conftest import SF_DIR, compare_frames, duck_with_views
+    from tests.conftest import SF_DIR, compare_frames_hashed, duck_with_views
 
     cap = 60
     docs = load(spark, SF_DIR, "documents").filter(
@@ -342,7 +343,7 @@ def test_nb_quality_sampled_path_oracle_parity(spark, duck):
 
     got = nb_quality_scores(docs, train_cap=cap)
     want = duck.sql(_nb_quality_sql(train_cap=cap))
-    compare_frames(got, want, context="nb sampled path")
+    compare_frames_hashed(got, want, context="nb sampled path")
 
 
 def test_pipeline_classifier_gate_sampled_path_funnel_exact(
