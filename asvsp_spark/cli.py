@@ -698,13 +698,12 @@ def main(argv: list[str] | None = None) -> int:
         tag = "bootstrap" if stats["bootstrapped"] else "delta"
         print(f"{tag}: {stats['delta_values']} values, "
               f"{stats['delta_buckets']} day-buckets -> {args.store}")
-        from asvsp_spark.operators.dedup import _store_exists
-        if not _store_exists(spark, args.store):
+        pct = stored_percentiles(spark, args.store, keys,
+                                 since_day=args.since)
+        if pct is None:
             print("empty delta and no existing store: nothing to report")
             return 0
-        for r in (stored_percentiles(spark, args.store, keys,
-                                     since_day=args.since)
-                  .orderBy(*keys).collect()):
+        for r in pct.orderBy(*keys).collect():
             key = ",".join(str(r[k]) for k in keys)
             print(f"{key:24s} n={r['n_values']:<10} p50={r['p50']:<10} "
                   f"p90={r['p90']:<10} p99={r['p99']}")

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from asvsp_spark.functions.text import fingerprint, token_count, tokens
 from asvsp_spark.plans.base import fanout, round_fixed
+from asvsp_spark.sources.store import (BatchStore, batch_key, count_and_key,
+                                       key_columns, key_sums)
 
 
 def exact_dedup(documents: DataFrame,
@@ -669,20 +671,6 @@ def decontaminate_report(documents: DataFrame, benchmark: DataFrame,
     )
 
 
-def _store_exists(spark, path: str) -> bool:
-    """Store-existence check that works for any Hadoop-resolvable URI
-    (file://, hdfs://, s3a://), not just driver-local paths — a
-    driver-side ``os.path.exists`` silently reports False for remote
-    stores, which would reset every delta to a bootstrap and corrupt
-    the dedup guarantee at exactly the cluster scale these operators
-    target. Goes through the JVM Hadoop FileSystem bound to the
-    session's configuration, the same resolution ``spark.read`` uses."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def incremental_exact_dedup(spark, new_docs: DataFrame, store_path: str,
                             id_col: str = "doc_id",
                             text_col: str = "text"):
@@ -700,46 +688,40 @@ def incremental_exact_dedup(spark, new_docs: DataFrame, store_path: str,
       2. collapse within-delta duplicates (min id per fingerprint);
       3. LEFT-ANTI join against the store on the fingerprint — only
          fingerprints never seen before survive;
-      4. append the survivors' (fp, keeper_id) rows to the store.
+      4. commit the survivors' (fp, keeper_id) rows as this delta's
+         batch of the store.
 
-    Scale shape: the store is an append-only parquet log keyed by a
-    16-byte digest; the anti-join shuffles delta-side fingerprints only
-    (the store side prunes to its fp column). First-seen keeper wins by
-    construction — an existing fingerprint is never rewritten, so the
-    single-writer daily cadence needs no merge. Store files accrete per
-    run; compact_parquet (sources/batch.py) is the maintenance step,
-    and at warehouse scale the store would be bucketed by fp
-    (sources/bucketing.py) to make this anti-join shuffle-free.
+    The store is a ``sources/store.BatchStore``: a retried delta (say,
+    after the caller's output write failed) sees the store without its
+    own rows and returns the same fresh docs and counts, and an append
+    that dies part-way is never read. First-seen keeper wins. The
+    anti-join shuffles delta-side fingerprints only (the store side
+    prunes to its fp column).
     """
-    # ONE fingerprint pass over the delta: the grouped frame carries a
-    # per-fingerprint occurrence count and is checkpointed, so the
-    # funnel's n_batch (sum of counts) and n_delta (row count) fall out
-    # of one scalar agg over the cached groups instead of two extra
-    # full-delta scans, and the anti-join below reuses the same
-    # materialization rather than re-running the fingerprint shuffle
-    # (guide §1.2 — the un-checkpointed spelling paid THREE delta
-    # fingerprint/scan passes per arriving batch)
+    # ONE fingerprint pass over the delta, checkpointed: the funnel
+    # counts and the batch key fall out of one scalar agg over the
+    # cached groups, and the anti-join reuses the same materialization
     delta = (new_docs
-             .select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
+             .select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"),
+                     *key_columns(new_docs))
              .groupBy("fp")
              .agg(F.min(id_col).alias("keeper_id"),
-                  F.count(F.lit(1)).alias("_cnt"))
+                  F.count(F.lit(1)).alias("_cnt"), *key_sums())
              .localCheckpoint(eager=True))
     drow = delta.agg(F.sum("_cnt").alias("nb"),
-                     F.count(F.lit(1)).alias("nd")).collect()[0]
+                     F.count(F.lit(1)).alias("nd"), *key_sums()).collect()[0]
     n_batch = int(drow["nb"] or 0)
     n_delta = int(drow["nd"])
 
-    if _store_exists(spark, store_path):
-        store_fps = spark.read.parquet(store_path).select("fp")
-        fresh_fps = delta.join(store_fps, "fp", "left_anti")
-    else:
-        fresh_fps = delta
-    # _cnt is funnel-local: the store schema stays (fp, keeper_id)
-    fresh_fps = fresh_fps.drop("_cnt").localCheckpoint(eager=True)
+    store = BatchStore(spark, store_path, batch_key(n_batch, drow))
+    fresh_fps = delta.select("fp", "keeper_id")
+    committed = store.read()
+    if committed is not None:
+        fresh_fps = fresh_fps.join(committed.select("fp"), "fp", "left_anti")
+    fresh_fps = fresh_fps.localCheckpoint(eager=True)
     n_fresh = fresh_fps.count()
 
-    fresh_fps.write.mode("append").parquet(store_path)
+    store.commit(fresh_fps)
     fresh = new_docs.join(
         fresh_fps.select(F.col("keeper_id").alias(id_col)),
         id_col, "left_semi")
@@ -773,13 +755,10 @@ def incremental_minhash_dedup(spark, new_docs: DataFrame, store_path: str,
          stored signatures (same banded LSH, same ``max_bucket``
          hot-bucket guard on the store side) and estimate Jaccard as the
          fraction of agreeing signature components — the unbiased
-         MinHash estimator. At the 64-hash default the estimator's
-         standard error at the j=0.5 boundary is sqrt(0.25/64) ≈ 0.06,
-         so borderline pairs resolve reliably (at 16 hashes the 1/16
-         steps made threshold-0.5 decisions near coin-flips); there is
-         no old text to verify exactly against, so the estimator IS the
-         verification. Matches at or above ``threshold`` drop the new
-         doc;
+         MinHash estimator (standard error sqrt(0.25/64) ≈ 0.06 at the
+         j=0.5 boundary at the 64-hash default); there is no old text to
+         verify exactly against, so the estimator IS the verification.
+         Matches at or above ``threshold`` drop the new doc;
       3. SHORT DOCS (< n words) produce no shingles, hence no signature
          — the LSH path can neither drop nor protect them. They pass
          through guarded by the exact canonical fingerprint instead:
@@ -788,16 +767,14 @@ def incremental_minhash_dedup(spark, new_docs: DataFrame, store_path: str,
          mirroring ``incremental_exact_dedup``. This keeps parity with
          the batch pipeline (which also keeps short docs) while still
          stopping exact replays of them across deltas;
-      4. append the survivors' rows to the store.
+      4. commit the survivors' rows as this delta's batch of the store.
 
-    Scale shape: the store is an append-only (doc, sig, fp) parquet log
-    — ``sig`` null marks a short doc carrying only its fingerprint;
-    band keys are recomputed from the array on read (pure expressions),
-    so there is no posting-list store to compact; the band join shuffles
-    one row per (doc, band), linear in corpus size, and the estimator is
-    a zip_with over two ``num_hashes``-long arrays. First-seen docs win
-    by construction. Store existence is resolved through the Hadoop
-    FileSystem API (``_store_exists``), so hdfs://'/s3a:// stores work.
+    The store is a ``sources/store.BatchStore`` of (doc, sig, fp) rows
+    with ``incremental_exact_dedup``'s replay contract; ``sig`` null
+    marks a short doc carrying only its fingerprint. Band keys are
+    recomputed from the array on read, so there is no posting-list store
+    to compact; the band join shuffles one row per (doc, band), linear
+    in corpus size. First-seen docs win by construction.
     """
     from asvsp_spark.operators.components import dedup_clusters
 
@@ -806,7 +783,7 @@ def incremental_minhash_dedup(spark, new_docs: DataFrame, store_path: str,
             f"num_hashes ({num_hashes}) must be divisible by bands ({bands})")
     rows = num_hashes // bands
 
-    n_batch = new_docs.count()
+    n_batch, key = count_and_key(new_docs)
     edges = minhash_lsh_pairs(
         new_docs, n, threshold, num_hashes, bands, id_col, text_col,
         max_bucket).select("doc_a", "doc_b")
@@ -844,16 +821,17 @@ def incremental_minhash_dedup(spark, new_docs: DataFrame, store_path: str,
             F.col("doc").alias(doc_alias), F.col("sig").alias(f"sig_{doc_alias}"),
             F.explode(F.array(*band_cols)).alias("band_key"))
 
-    if _store_exists(spark, store_path):
-        # mergeSchema tolerates stores written before the fp column existed
-        store = spark.read.option("mergeSchema", "true").parquet(store_path)
-        if "fp" not in store.columns:
-            store = store.withColumn("fp", F.lit(None).cast("string"))
+    store = BatchStore(spark, store_path, key)
+    stored = store.read()
+    if stored is not None:
+        # stores written before the fp column existed
+        if "fp" not in stored.columns:
+            stored = stored.withColumn("fp", F.lit(None).cast("string"))
         # loud guard: a store written at a different num_hashes would
         # band-join on degenerate NULL-padded keys and estimate j <=
         # stored_len/num_hashes — every replay would silently pass as
         # fresh. Better to fail than to corrupt the dedup guarantee.
-        stored_len = (store.filter(F.col("sig").isNotNull())
+        stored_len = (stored.filter(F.col("sig").isNotNull())
                       .select(F.size("sig").alias("n")).first())
         if stored_len is not None and stored_len["n"] != num_hashes:
             raise ValueError(
@@ -861,7 +839,7 @@ def incremental_minhash_dedup(spark, new_docs: DataFrame, store_path: str,
                 f"{stored_len['n']}-hash signatures but num_hashes="
                 f"{num_hashes}; re-bootstrap the store or pass the "
                 "store's original num_hashes")
-        old_b = band_rows(store.filter(F.col("sig").isNotNull()), "old_doc")
+        old_b = band_rows(stored.filter(F.col("sig").isNotNull()), "old_doc")
         if max_bucket is not None:
             # anti-join against the HOT key set (see minhash_lsh_pairs)
             # instead of semi-joining the large cold set; no forced
@@ -887,7 +865,7 @@ def incremental_minhash_dedup(spark, new_docs: DataFrame, store_path: str,
         )
         dup_short = (
             new_rows.filter(F.col("sig").isNull())
-            .join(store.filter(F.col("fp").isNotNull()).select("fp"),
+            .join(stored.filter(F.col("fp").isNotNull()).select("fp"),
                   "fp", "left_semi")
             .select("doc"))
         dup_new = dup_lsh.unionByName(dup_short).distinct()
@@ -897,7 +875,7 @@ def incremental_minhash_dedup(spark, new_docs: DataFrame, store_path: str,
     fresh_rows = fresh_rows.localCheckpoint(eager=True)
     n_fresh = fresh_rows.count()
 
-    fresh_rows.write.mode("append").parquet(store_path)
+    store.commit(fresh_rows)
     fresh = new_docs.join(fresh_rows.select(F.col("doc").alias(id_col)),
                           id_col, "left_semi")
     return fresh, {
@@ -1252,23 +1230,18 @@ def remove_dup_substring_runs(documents: DataFrame, runs: DataFrame,
 def incremental_dup_substring(spark, new_docs: DataFrame, store_path: str,
                               window: int = 8, min_count: int = 2,
                               id_col: str = "doc_id",
-                              text_col: str = "text",
-                              batch_id: str | None = None):
+                              text_col: str = "text"):
     """Duplicated-substring detection for an arriving DELTA against all
     text ever seen, without rescanning prior text — the substring-
-    granular member of the incremental family (exact = whole-doc,
-    minhash = whole-doc near, paragraph = segment, this = arbitrary-
-    length substring). State is one (window-hash, occurrence-count) row
-    per distinct window per batch, append-only; a window is hot when
-    its occurrences across the store PLUS this delta reach
-    ``min_count``, so boilerplate that only becomes duplicated
-    ACROSS batches (one occurrence per day) is caught the day the
-    threshold trips. Returns ``(runs, counts)``: runs has the
-    ``dup_substring_runs`` schema over the delta's documents (maximal
-    strictly-consecutive hot runs, full-text md5 fingerprints); counts
-    reports the window funnel (n_windows occurrence total,
-    distinct_windows, hot_windows hashes at/over threshold,
-    store_known_windows of those already present in the store).
+    granular member of the incremental family. State is one
+    (window-hash, occurrence-count) row per distinct window per batch; a
+    window is hot when its occurrences across the store PLUS this delta
+    reach ``min_count``, so boilerplate that only becomes duplicated
+    ACROSS batches is caught the day the threshold trips. Returns
+    ``(runs, counts)``: runs has the ``dup_substring_runs`` schema over
+    the delta's documents; counts reports the window funnel (n_windows
+    occurrences, distinct_windows, hot_windows at/over threshold,
+    store_known_windows of those already in the store).
 
     Bootstrap invariant: with no store, one batch equals the global
     ``dup_substring_runs`` on the same documents (shared staging +
@@ -1278,25 +1251,12 @@ def incremental_dup_substring(spark, new_docs: DataFrame, store_path: str,
     the store side is pruned with a LEFT SEMI to the delta's distinct
     hashes BEFORE its counts are summed, so a years-deep store costs
     one hash-key semi-join + a partial-agg sum over only the matching
-    rows. Store maintenance = compact_parquet (mergeSchema-safe); at
-    warehouse scale bucket by h to make the semi-join shuffle-free.
-    Same batch_id replay contract as ``incremental_paragraph_dedup``:
-    stamped batches exclude their own rows from the store side and
-    skip the re-append, so a replayed delta reproduces the first run.
-    Calling without a batch_id WARNS (r7 advice): the un-stamped replay
-    failure mode is a silent THRESHOLD change (every replayed window
-    double-counts, so windows go hot at half the intended min_count),
-    worse than duplicate rows — stamp every production delta.
+    rows. The store is a ``sources/store.BatchStore`` keyed by the
+    delta's window occurrences (doc, position, hash): a retried delta
+    does not count its own windows twice, so it reproduces the first
+    run's runs and funnel instead of reaching the threshold at half
+    ``min_count``.
     """
-    if batch_id is None:
-        import warnings
-        warnings.warn(
-            "incremental_dup_substring called without batch_id: a "
-            "replay of this delta (e.g. after a failed downstream "
-            "write) appends its window counts to the store AGAIN, "
-            "silently halving the effective hot threshold. Pass a "
-            "stable batch_id per delta for idempotent replays.",
-            stacklevel=2)
     w, mc = int(window), int(min_count)
     toks, wins_arr = _window_hash_arrays(new_docs, w, id_col, text_col,
                                          checkpoint_toks=True)
@@ -1308,13 +1268,21 @@ def incremental_dup_substring(spark, new_docs: DataFrame, store_path: str,
     wins = (wins_arr.select("doc", F.explode("wins").alias("win"))
             .select("doc", F.col("win.p").alias("p"),
                     F.col("win.h").alias("h")))
-    delta_counts = (wins.groupBy("h").agg(F.count(F.lit(1)).alias("n"))
-                    .localCheckpoint(eager=True))
+    # the scalar agg that keys the batch also materializes the lazy
+    # checkpoint of the per-hash counts, and answers the delta side of
+    # the funnel (occurrence total, distinct hashes)
+    grouped = (wins.select("h", *key_columns(wins)).groupBy("h")
+               .agg(F.count(F.lit(1)).alias("n"), *key_sums())
+               .localCheckpoint(eager=False))
+    drow = grouped.agg(F.sum("n").alias("occ"),
+                       F.count(F.lit(1)).alias("dst"), *key_sums()).first()
+    n_occurrences = int(drow["occ"] or 0)
+    n_distinct = int(drow["dst"])
+    delta_counts = grouped.select("h", "n")
 
-    replayed = False
-    store_counts = None
-    if _store_exists(spark, store_path):
-        store = spark.read.option("mergeSchema", "true").parquet(store_path)
+    store = BatchStore(spark, store_path, batch_key(n_occurrences, drow))
+    stored = store.read()
+    if stored is not None:
         # window-size guard: a store bootstrapped at a different w
         # holds md5s of different-length n-grams, so the semi-join
         # would match nothing FOREVER — store_known_windows silently 0,
@@ -1322,7 +1290,7 @@ def incremental_dup_substring(spark, new_docs: DataFrame, store_path: str,
         # from the hashes themselves (same 16 hex chars at any w), so
         # every row carries w and the read path fails loudly — the
         # same stance as incremental_minhash_dedup's num_hashes check.
-        probe = store.select("w").limit(1).collect()
+        probe = stored.select("w").limit(1).collect()
         if probe and int(probe[0]["w"]) != w:
             raise ValueError(
                 f"window-count store at {store_path} was built with "
@@ -1330,18 +1298,11 @@ def incremental_dup_substring(spark, new_docs: DataFrame, store_path: str,
                 f"window={w}. Hashes of different-length windows can "
                 "never match — rebuild the store or pass the store's "
                 "window.")
-        if batch_id is not None and "batch_id" in store.columns:
-            replayed = bool(store.filter(F.col("batch_id") == batch_id)
-                            .limit(1).collect())
-            store = store.filter(F.col("batch_id").isNull()
-                                 | (F.col("batch_id") != batch_id))
         # prune the (possibly years-deep) store to the delta's hashes
         # BEFORE summing — the semi-join is the only store-sized step
-        store_counts = (store.join(delta_counts.select("h"),
-                                   "h", "left_semi")
+        store_counts = (stored.join(delta_counts.select("h"),
+                                    "h", "left_semi")
                         .groupBy("h").agg(F.sum("n").alias("n_store")))
-
-    if store_counts is not None:
         combined = (delta_counts.join(store_counts, "h", "left")
                     .select("h", "n", (F.col("n")
                                        + F.coalesce("n_store", F.lit(0)))
@@ -1353,34 +1314,19 @@ def incremental_dup_substring(spark, new_docs: DataFrame, store_path: str,
             F.lit(False).alias("known"))
     combined = combined.localCheckpoint(eager=True)
     hot = combined.filter(F.col("total") >= mc)
-    # ONE scalar agg over the checkpointed per-hash frame answers the
-    # whole funnel (occurrence total, distinct, hot, store-known) —
-    # delta_counts' n rides combined so the former separate
-    # sum-over-delta_counts job is folded in (guide §1.2: don't run two
-    # jobs where one pass answers both)
     crow = combined.agg(
-        F.sum("n").alias("occ"),
-        F.count(F.lit(1)).alias("dst"),
         F.sum((F.col("total") >= mc).cast("long")).alias("hot"),
         F.sum(F.col("known").cast("long")).alias("known")).collect()[0]
-    n_occurrences = int(crow["occ"] or 0)
-    n_distinct = int(crow["dst"])
-    n_hot = int(crow["hot"] or 0)
-    n_known = int(crow["known"] or 0)
 
-    if not replayed:
-        (delta_counts
-         .select("h", "n", F.lit(w).cast("int").alias("w"),
-                 F.lit(batch_id).cast("string").alias("batch_id"))
-         .write.mode("append").parquet(store_path))
+    store.commit(delta_counts.withColumn("w", F.lit(w).cast("int")))
 
     flagged = wins.join(hot.select("h"), "h", "left_semi")
     runs = _assemble_runs(toks, flagged, w, id_col)
     return runs, {
         "n_windows": n_occurrences,
         "distinct_windows": n_distinct,
-        "hot_windows": n_hot,
-        "store_known_windows": n_known,
+        "hot_windows": int(crow["hot"] or 0),
+        "store_known_windows": int(crow["known"] or 0),
     }
 
 
@@ -1549,8 +1495,7 @@ def incremental_paragraph_dedup(spark, new_docs: DataFrame,
                                 delimiter: str = r"\n{2,}",
                                 joiner: str = "\n\n",
                                 id_col: str = "doc_id",
-                                text_col: str = "text",
-                                batch_id: str | None = None):
+                                text_col: str = "text"):
     """Production-cadence paragraph dedup: strip from an arriving DELTA
     every segment already kept by any prior batch (or earlier in this
     one) without rescanning prior text — the segment-granular member of
@@ -1569,51 +1514,33 @@ def incremental_paragraph_dedup(spark, new_docs: DataFrame,
     steady state converge on identical corpora.
 
     Scale shape: state is one full-width 16-byte md5 + keeper id per
-    distinct segment ever kept, append-only (first-seen keeper is never
-    rewritten — single-writer daily cadence needs no merge); the store
-    side of the anti-join prunes to its hash column. Same maintenance
-    story as the exact store: compact_parquet periodically, bucket by
-    h at warehouse scale to make the anti-join shuffle-free.
+    distinct segment ever kept (first-seen keeper is never rewritten);
+    the store side of the anti-join prunes to its hash column.
 
-    Replay contract: the store append happens BEFORE the caller
-    materializes ``rebuilt_docs``, so a bare replay of a delta whose
-    downstream write failed would find every segment already "known"
-    and rebuild all documents empty. Pass a stable ``batch_id`` per
-    delta to make replays idempotent: winners are stamped with it, the
-    known-segments anti-join excludes the delta's own prior rows, and
-    an already-stamped batch skips the re-append (the funnel counts
-    and the rebuilt corpus come out identical to the first run).
-    Without a batch_id the operator is first-write-wins and the caller
-    owns replay hygiene (documented here per the r6 advice); such
-    calls WARN (r7 advice) because the un-stamped replay failure mode
-    — every delta document rebuilt empty — is silent until downstream.
+    Replay contract: the store commit happens BEFORE the caller
+    materializes ``rebuilt_docs``, but the store is a
+    ``sources/store.BatchStore`` keyed by the delta's segments, so a
+    retried delta does not see its own winners as known: it rebuilds the
+    same corpus and counts instead of every document empty.
     """
-    if batch_id is None:
-        import warnings
-        warnings.warn(
-            "incremental_paragraph_dedup called without batch_id: a "
-            "replay of this delta finds every segment already 'known' "
-            "and rebuilds all its documents EMPTY. Pass a stable "
-            "batch_id per delta for idempotent replays.",
-            stacklevel=2)
-    # one eager checkpoint each: segs feeds four consumers (two counts,
-    # the winner grouping, the rebuild join) and winners feeds three —
-    # without pinning them the full delta lineage re-runs per action
+    # one eager checkpoint each: segs feeds four consumers (the key and
+    # count agg, the winner grouping, the rebuild join) and winners
+    # feeds three — without pinning them the full delta lineage re-runs
+    # per action
     segs = _doc_segments(new_docs, delimiter, id_col, text_col) \
         .localCheckpoint(eager=True)
     winners = segs.groupBy("h").agg(
         F.min(F.struct(F.col("doc"), F.col("pos"))).alias("k")) \
         .localCheckpoint(eager=True)
-    n_occurrences = segs.count()
+    srow = segs.select(*key_columns(segs)).agg(
+        F.count(F.lit(1)).alias("n"), *key_sums()).first()
+    n_occurrences = int(srow["n"])
     n_distinct = winners.count()
 
-    replayed = False
-    if _store_exists(spark, store_path):
-        # mergeSchema: a legacy 2-col (h, keeper_id) store that later
-        # received batch_id-stamped appends has mixed footers; merged
-        # read surfaces batch_id (null for legacy files) either way
-        store = spark.read.option("mergeSchema", "true").parquet(store_path)
-        probe = store.select("h").limit(1).collect()
+    store = BatchStore(spark, store_path, batch_key(n_occurrences, srow))
+    stored = store.read()
+    if stored is not None:
+        probe = stored.select("h").limit(1).collect()
         if probe and len(probe[0]["h"]) != 32:
             # a store written with a different hash width would anti-join
             # to ZERO matches forever — every known segment re-admitted,
@@ -1623,26 +1550,13 @@ def incremental_paragraph_dedup(spark, new_docs: DataFrame,
                 f"{len(probe[0]['h'])}-char hashes; this build writes "
                 "full 32-char md5. Rebuild the store from the corpus "
                 "(bootstrap run against an empty path).")
-        if batch_id is not None and "batch_id" in store.columns:
-            replayed = bool(store.filter(F.col("batch_id") == batch_id)
-                            .limit(1).collect())
-            store_hs = store.filter(
-                F.col("batch_id").isNull()
-                | (F.col("batch_id") != batch_id)).select("h")
-        else:
-            # legacy store (no batch_id column) or untracked call:
-            # every stored row is foreign to this delta
-            store_hs = store.select("h")
-        fresh = winners.join(store_hs, "h", "left_anti")
+        fresh = winners.join(stored.select("h"), "h", "left_anti")
     else:
         fresh = winners
     fresh = fresh.localCheckpoint(eager=True)
     n_fresh = fresh.count()
 
-    if not replayed:
-        (fresh.select("h", F.col("k.doc").alias("keeper_id"),
-                      F.lit(batch_id).cast("string").alias("batch_id"))
-         .write.mode("append").parquet(store_path))
+    store.commit(fresh.select("h", F.col("k.doc").alias("keeper_id")))
 
     flagged = (segs.join(fresh, "h", "left")
                .withColumn("keep", F.col("k").isNotNull()

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from asvsp_spark.plans.base import round_fixed
+from asvsp_spark.sources.store import (BatchStore, batch_key, key_columns,
+                                       key_sums)
 
 NULL_KEY = "<null>"
 
@@ -107,31 +109,30 @@ def incremental_drift_check(spark, new_events: DataFrame, store_path: str,
     ``(report, counts)``: the per-day KL/TVD report for the delta's
     buckets vs the stored baseline, and a funnel dict.
 
-    Store contract: an append-only parquet log of per-key counts; the
-    effective baseline is the groupBy-sum at read (compact_parquet is
-    the maintenance step, as for the fingerprint stores). First call
-    bootstraps the store from the delta and scores it against itself
-    (self-baseline — the report is then the within-period mix
-    variation). Each call appends the delta's counts, so the baseline
-    is exactly "everything ingested so far"; re-ingesting the same
-    delta double-weights it — the single-writer daily cadence owns
-    that, same as any metrics accumulation.
+    Store contract: a ``sources/store.BatchStore`` of per-key counts
+    whose groupBy-sum at read is the baseline. First call bootstraps the
+    store from the delta and scores it against itself (self-baseline —
+    the report is then the within-period mix variation). Each call
+    commits the delta's counts, so the baseline is every delta ingested
+    so far; a retried delta is scored against the store without itself
+    and replaces its own counts instead of double-weighting them.
 
     Scale: the delta scans once (map-side-combining groupBy); the store
     carries |keys| × runs rows, key-cardinality-sized, never events.
     """
-    from asvsp_spark.operators.dedup import _store_exists
-
-    counts_df = (new_events
-                 .select(F.to_date(F.col(ts_col)).alias("day"),
-                         sentinel_key(F.col(key_col)).alias("key"))
-                 .groupBy("day", "key")
-                 .agg(F.count(F.lit(1)).alias("c"))
-                 .localCheckpoint(eager=False))
+    grouped = (new_events
+               .select(F.to_date(F.col(ts_col)).alias("day"),
+                       sentinel_key(F.col(key_col)).alias("key"),
+                       *key_columns(new_events))
+               .groupBy("day", "key")
+               .agg(F.count(F.lit(1)).alias("c"), *key_sums())
+               .localCheckpoint(eager=False))
+    counts_df = grouped.select("day", "key", "c")
     delta_base = counts_df.groupBy("key").agg(F.sum("c").alias("cb"))
 
-    total = int(counts_df.agg(
-        F.coalesce(F.sum("c"), F.lit(0))).first()[0])
+    trow = grouped.agg(F.coalesce(F.sum("c"), F.lit(0)).alias("n"),
+                       *key_sums()).first()
+    total = int(trow["n"])
     if total == 0:
         # nothing to score and nothing to learn: leave the store
         # untouched (a bootstrap from an empty delta would persist an
@@ -143,13 +144,13 @@ def incremental_drift_check(spark, new_events: DataFrame, store_path: str,
         return report, {"delta_events": 0, "delta_keys": 0,
                         "bootstrapped": False}
 
-    bootstrapped = not _store_exists(spark, store_path)
+    store = BatchStore(spark, store_path, batch_key(total, trow))
+    stored = store.read()
+    bootstrapped = stored is None
     if bootstrapped:
-        delta_base.write.mode("overwrite").parquet(store_path)
-        base = spark.read.parquet(store_path)
+        base = delta_base
     else:
-        stored = (spark.read.parquet(store_path)
-                  .groupBy("key").agg(F.sum("cb").alias("cb")))
+        stored = stored.groupBy("key").agg(F.sum("cb").alias("cb"))
         # KL needs q > 0 for every delta key: a never-seen category gets
         # the standard add-one floor so it SCREAMS in the report (huge
         # p*ln(p/q) term) instead of crashing or silently dropping.
@@ -168,6 +169,5 @@ def incremental_drift_check(spark, new_events: DataFrame, store_path: str,
         "delta_keys": delta_base.count(),
         "bootstrapped": bootstrapped,
     }
-    if not bootstrapped:
-        delta_base.write.mode("append").parquet(store_path)
+    store.commit(delta_base)
     return report, stats

@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 
 from asvsp_spark.functions.vectors import as_double, cosine, l2_norm
 from asvsp_spark.plans.base import fanout, round_fixed
+from asvsp_spark.sources.store import BatchStore, count_and_key
 
 
 def embedding_stats(embeddings: DataFrame,
@@ -1017,44 +1018,38 @@ def incremental_semantic_dedup(spark, new_docs: DataFrame, store_path: str,
          any kept reference (stored first, then newly kept delta rows)
          reaches ``threshold`` — first-seen wins, min-id within the
          delta, exactly the family convention;
-      3. append delta survivors' embeddings to the store.
+      3. commit delta survivors' embeddings to the vector store.
 
-    Scale shape: centroid table is tiny and broadcast; the per-cell
-    pass shuffles each vector once on its cell id; stored cells grow
-    ~N/sqrt(N0) and ``max_keep_refs`` caps the reference matrix per
-    cell (hot-cell guard). Store existence via the Hadoop FileSystem
-    API — remote URIs resolve exactly as ``spark.read`` would.
+    Both stores are ``sources/store.BatchStore``s: a retried delta sees
+    the vectors without its own (same fresh set and counts) and the
+    committed centroids with its own (the cells stay frozen), and a
+    write that dies part-way is never read. Scale shape: centroid table
+    is tiny and broadcast; the per-cell pass shuffles each vector once
+    on its cell id; ``max_keep_refs`` caps the reference matrix per cell
+    (hot-cell guard).
     """
     import numpy as np
-    from asvsp_spark.operators.dedup import _store_exists
 
     cent_path = store_path.rstrip("/") + "/centroids"
-    vec_path = store_path.rstrip("/") + "/vectors"
+    n_batch, key = count_and_key(new_docs)
 
-    n_batch = new_docs.count()
-
-    if not _store_exists(spark, cent_path):
+    centroids = BatchStore(spark, cent_path).read()
+    if centroids is None:
         emb = new_docs.select(F.col(id_col), _ml_vector(vec_col)).cache()
         kc = n_cells or max(2, int(max(n_batch, 4) ** 0.5))
         _, centroids = _kmeans_cells(emb, n_batch, kc, seed, id_col)
         emb.unpersist()   # trained; don't leak storage across batches
-        centroids.coalesce(1).write.parquet(cent_path)
-    else:
-        centroids = spark.read.parquet(cent_path)
+        BatchStore(spark, cent_path, key).commit(centroids.coalesce(1))
 
     assigned = assign_cells(
         new_docs.select(id_col, vec_col), centroids, id_col, vec_col)
 
-    store_exists = _store_exists(spark, vec_path)
-    if store_exists:
-        stored = (spark.read.parquet(vec_path)
-                  .select(F.col(id_col), F.col(vec_col), F.col("cell"),
-                          F.lit(True).alias("is_store")))
-    else:
-        stored = None
+    vectors = BatchStore(spark, store_path.rstrip("/") + "/vectors", key)
+    stored = vectors.read()
     delta_tag = assigned.withColumn("is_store", F.lit(False))
-    both = (delta_tag if stored is None
-            else stored.unionByName(delta_tag))
+    both = (delta_tag if stored is None else stored.select(
+        F.col(id_col), F.col(vec_col), F.col("cell"),
+        F.lit(True).alias("is_store")).unionByName(delta_tag))
 
     id_type = new_docs.schema[id_col].dataType.simpleString()
     out_schema = f"{id_col} {id_type}, cell int"
@@ -1093,9 +1088,8 @@ def incremental_semantic_dedup(spark, new_docs: DataFrame, store_path: str,
                  .localCheckpoint(eager=True))
     n_fresh = fresh_ids.count()
 
-    (assigned.join(fresh_ids.select(id_col), id_col, "left_semi")
-     .select(id_col, vec_col, "cell")
-     .write.mode("append").parquet(vec_path))
+    vectors.commit(assigned.join(fresh_ids.select(id_col), id_col,
+                                 "left_semi").select(id_col, vec_col, "cell"))
 
     fresh = new_docs.join(fresh_ids.select(id_col), id_col, "left_semi")
     return fresh, {

@@ -32,9 +32,11 @@ width/lo <= 10^(1-prefix_digits)).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, GroupedData, functions as F
 
 from asvsp_spark.plans.base import cents_to_dollars, money_cents
+from asvsp_spark.sources.store import (BatchStore, batch_key, key_columns,
+                                       key_sums)
 
 
 def daily_user_sketches(events: DataFrame, lg_k: int = 12) -> DataFrame:
@@ -125,12 +127,17 @@ def value_histogram(df: DataFrame, value_col: str, keys: list[str],
     at most (distinct keys × ~90·decades) rows however many raw rows
     went in. NULL values are excluded (they carry no quantile mass;
     count them with a data-quality check, not here)."""
+    return (_bucket_groups(df, value_col, keys, prefix_digits)
+            .agg(F.count(F.lit(1)).alias("cnt")))
+
+
+def _bucket_groups(df: DataFrame, value_col: str, keys: list[str],
+                   prefix_digits: int) -> GroupedData:
+    """``df``'s non-NULL values grouped by (keys..., bucket_lo)."""
     cents = money_cents(F.col(value_col))
-    return (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(*keys, bucket_lo_expr(cents, prefix_digits).alias("bucket_lo"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return (df.filter(F.col(value_col).isNotNull())
+            .groupBy(*keys,
+                     bucket_lo_expr(cents, prefix_digits).alias("bucket_lo")))
 
 
 def merge_value_histograms(hist: DataFrame, keys: list[str]) -> DataFrame:
@@ -187,48 +194,51 @@ def append_value_histogram(spark, new_events: DataFrame, store_path: str,
                            ts_col: str = "ts",
                            prefix_digits: int = 2) -> dict:
     """Production cadence for the quantile sketch: fold an arriving
-    DELTA (today's ingest) into an append-only parquet store of
-    day-grain bucket counts — the same store contract as the
-    incremental drift/fingerprint stores (groupBy-sum at read is the
-    effective sketch; compact_parquet is the maintenance step;
-    re-ingesting the same delta double-weights it — the single-writer
-    daily cadence owns that). The store carries
+    DELTA (today's ingest) into a ``sources/store.BatchStore`` of
+    day-grain bucket counts, one batch per delta — the same store
+    contract as the incremental drift/fingerprint stores (groupBy-sum at
+    read is the effective sketch; compact_parquet is the maintenance
+    step; a retried delta replaces its own counts instead of
+    double-weighting them). The store carries
     (day × keys × ~90·decades) count rows, never raw values, so
     period percentiles (see ``stored_percentiles``) cost a sketch-sized
-    scan however many TB of events have accumulated, and the ``day``
-    column makes windowed reads ("last 30 days' p99") partition-prunable
-    free of charge.
+    scan however many TB of events have accumulated.
 
     An empty delta leaves the store untouched (a bootstrap from nothing
     would persist an empty sketch). Returns a funnel dict:
     delta_values, delta_buckets, bootstrapped.
     """
-    from asvsp_spark.operators.dedup import _store_exists
-
-    hist = (value_histogram(
-        new_events.withColumn("day", F.to_date(F.col(ts_col))),
+    hist = (_bucket_groups(
+        new_events.select("*", *key_columns(new_events))
+        .withColumn("day", F.to_date(F.col(ts_col))),
         value_col, ["day", *key_cols], prefix_digits)
+        .agg(F.count(F.lit(1)).alias("cnt"), *key_sums())
         .localCheckpoint(eager=False))
-    total = int(hist.agg(F.coalesce(F.sum("cnt"), F.lit(0))).first()[0])
+    trow = hist.agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("n"),
+                    F.count(F.lit(1)).alias("b"), *key_sums()).first()
+    total = int(trow["n"])
     if total == 0:
         return {"delta_values": 0, "delta_buckets": 0,
                 "bootstrapped": False}
-    bootstrapped = not _store_exists(spark, store_path)
-    hist.write.mode("overwrite" if bootstrapped else "append") \
-        .parquet(store_path)
-    return {"delta_values": total, "delta_buckets": hist.count(),
+    store = BatchStore(spark, store_path, batch_key(total, trow))
+    bootstrapped = not store.exists()
+    store.commit(hist.drop("_k1", "_k2"))
+    return {"delta_values": total, "delta_buckets": int(trow["b"]),
             "bootstrapped": bootstrapped}
 
 
 def stored_percentiles(spark, store_path: str,
                        key_cols: tuple[str, ...] = ("event_type",),
                        percents: tuple[int, ...] = (50, 90, 99),
-                       since_day: str | None = None) -> DataFrame:
+                       since_day: str | None = None) -> DataFrame | None:
     """Percentiles over everything the store has accumulated — reads
     ONLY the sketch store (no raw-event rescan, the mergeable-sketch
-    payoff). ``since_day`` ('YYYY-MM-DD') prunes the read to recent
-    days before the lossless count-sum merge."""
-    hist = spark.read.parquet(store_path)
+    payoff); ``None`` when the store holds no rows. ``since_day``
+    ('YYYY-MM-DD') prunes the read to recent days before the lossless
+    count-sum merge."""
+    hist = BatchStore(spark, store_path).read()
+    if hist is None:
+        return None
     if since_day is not None:
         hist = hist.filter(F.col("day") >= F.lit(since_day).cast("date"))
     merged = merge_value_histograms(hist, list(key_cols))

@@ -88,7 +88,7 @@ def streaming_ingest_dedup(spark: SparkSession, ingest_dir: str,
         # driver-local listdir would misread a remote sink as fresh —
         # either bypassing the silent-skip guard (guard 1 fails open)
         # or refusing a legitimate resume (guard 2 fails closed; both
-        # r10 review findings). Same resolution as dedup._store_exists.
+        # r10 review findings). Same resolution as sources/store.py.
         # A missing/empty dir reads as "no entries"; any OTHER access
         # failure (permissions, I/O) propagates — treating an
         # unreadable sink as fresh would drop every new arrival.

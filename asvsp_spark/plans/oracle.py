@@ -88,9 +88,10 @@ ORACLE["q04_mom_pct_change"] = f"""
 WITH monthly AS ({SQL_MONTHLY_REVENUE})
 SELECT nation, yr, mon, revenue,
        lag(revenue) OVER (PARTITION BY nation ORDER BY yr NULLS LAST, mon NULLS LAST) AS prev_month_revenue,
+       -- + 0.0 maps -0.0 to 0.0: Spark rounds through BigDecimal (no -0.0)
        round((revenue - lag(revenue) OVER (PARTITION BY nation ORDER BY yr NULLS LAST, mon NULLS LAST))
              / lag(revenue) OVER (PARTITION BY nation ORDER BY yr NULLS LAST, mon NULLS LAST) * 100.0
-             * 100) / 100.0
+             * 100) / 100.0 + 0.0
            AS mom_pct_change
 FROM monthly
 """

@@ -65,9 +65,10 @@ SELECT event_type, yr, mon, monthly_avg, monthly_max, days_with_data,
        exceedance_days,
        lag(monthly_avg) OVER (PARTITION BY event_type ORDER BY yr, mon)
            AS prev_month_avg,
+       -- + 0.0 maps -0.0 to 0.0: Spark rounds through BigDecimal (no -0.0)
        round((monthly_avg - lag(monthly_avg) OVER (PARTITION BY event_type ORDER BY yr, mon))
              / lag(monthly_avg) OVER (PARTITION BY event_type ORDER BY yr, mon) * 100.0
-             * 100) / 100.0
+             * 100) / 100.0 + 0.0
            AS mom_pct_change,
        lag(monthly_avg) OVER (PARTITION BY event_type, mon ORDER BY yr)
            AS same_month_prev_year_avg,

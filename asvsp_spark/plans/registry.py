@@ -1302,9 +1302,8 @@ def _incremental_substring_runs(spark, sf):
     delta's runs table, which DuckDB reproduces with window-count set
     algebra over the same even/odd split."""
     store, even, odd = _two_phase_store(spark, sf, "incrsub", "wins")
-    D.incremental_dup_substring(spark, even, store, batch_id="phase1")
-    runs, _ = D.incremental_dup_substring(spark, odd, store,
-                                          batch_id="phase2")
+    D.incremental_dup_substring(spark, even, store)
+    runs, _ = D.incremental_dup_substring(spark, odd, store)
     return runs
 
 
@@ -1319,8 +1318,7 @@ def _incremental_paragraph_report(spark, sf):
     out = []
     for phase, batch in ((1, even), (2, odd)):
         _docs, c = D.incremental_paragraph_dedup(
-            spark, batch, store, delimiter=_THE_DELIMITER,
-            batch_id=f"phase{phase}")
+            spark, batch, store, delimiter=_THE_DELIMITER)
         out.append((phase, c["n_segments"], c["within_batch_repeats"],
                     c["known_segments"], c["fresh_segments"]))
     return spark.createDataFrame(

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from asvsp_spark.sources.store import BatchStore
+
 
 def read_csv(spark: SparkSession, path: str, schema: T.StructType,
              header: bool = True) -> DataFrame:
@@ -401,17 +403,22 @@ def compact_parquet(spark: SparkSession, path: str,
     to ceil(bytes / target).
 
     The rewrite goes through the crash-safe directory swap of
-    ``_swap_in``.
+    ``_swap_in``. An incremental-operator store (``sources/store.py``)
+    is read through ``BatchStore``, since a plain read skips its root
+    files once it has batch directories, and written back with one
+    directory per committed batch, so replays after compaction still
+    recognise their own rows.
     """
     import math
 
-    # mergeSchema: an append-only store can carry mixed footers (e.g. a
-    # legacy 2-col segment store that later received batch_id-stamped
-    # appends, operators/dedup.py incremental_paragraph_dedup). A plain
-    # read infers the schema from ONE arbitrary part-file, so a rewrite
-    # here could silently drop the newer columns — destroying the very
-    # replay stamps the maintenance op is supposed to preserve.
-    df = spark.read.option("mergeSchema", "true").parquet(path)
+    if partition_by is None and os.path.isdir(path) and any(
+            n.startswith("batch_id=") for n in os.listdir(path)):
+        df, partition_by = BatchStore(spark, path).read(), ["batch_id"]
+    else:
+        # mergeSchema: a dataset can carry mixed footers; a plain read
+        # infers the schema from ONE arbitrary part-file, so a rewrite
+        # here could silently drop the newer columns
+        df = spark.read.option("mergeSchema", "true").parquet(path)
     # size from the file source relation's computed statistics (listing
     # only — parquet footers are not read for sizeInBytes)
     total = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())

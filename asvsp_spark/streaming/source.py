@@ -114,35 +114,18 @@ def events_stream_reader(spark: SparkSession, path: str, *,
     return raw.filter(F.col("ts").isNotNull())
 
 
-def _normalized_events_cached(src: str) -> str:
-    """Normalize ``src`` (ts -> timestamp[us, tz=UTC]) once per source
-    file and cache the result keyed by (path, size, mtime); repeat
-    stagings of the same fixture become plain file copies instead of a
-    full parquet decode+re-encode per harness call (several SQ harnesses
-    stage the same events.parquet every run)."""
-    import hashlib
+def _normalized_events(src: str):
+    """The events table at ``src`` with ``ts`` cast to
+    timestamp[us, tz=UTC] (driver-side pyarrow)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{os.path.abspath(src)}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()
-    cache_dir = os.path.join(tempfile.gettempdir(), "asvsp-norm-cache")
-    os.makedirs(cache_dir, exist_ok=True)
-    cached = os.path.join(cache_dir, f"{key}.parquet")
-    if not os.path.exists(cached):
-        tbl = pq.read_table(src)
-        i = tbl.schema.get_field_index("ts")
-        tgt = pa.timestamp("us", tz="UTC")
-        col = tbl.column(i)
-        if col.type != tgt:
-            # safe=False: nanos -> micros truncates sub-us, matching the
-            # `ts div 1000` read path
-            col = col.cast(tgt, safe=False)
-        tmp_path = f"{cached}.tmp.{os.getpid()}"
-        pq.write_table(tbl.set_column(i, pa.field("ts", tgt), col), tmp_path)
-        os.replace(tmp_path, cached)  # atomic: concurrent stagers race safely
-    return cached
+    tbl = pq.read_table(src)
+    i = tbl.schema.get_field_index("ts")
+    tgt = pa.timestamp("us", tz="UTC")
+    # safe=False: nanos -> micros truncates sub-us, matching the
+    # `ts div 1000` read path
+    return tbl.set_column(i, pa.field("ts", tgt),
+                          tbl.column(i).cast(tgt, safe=False))
 
 
 def copy_events_normalized(src: str, dest: str,
@@ -151,11 +134,11 @@ def copy_events_normalized(src: str, dest: str,
     timestamp[us, tz=UTC] — one flavor for every file in a composed
     stream directory, so a single declared schema fits them all.
     Driver-side pyarrow (a Spark write job would cost more than the
-    drains these fixtures feed), cached per source file; each staging is
-    a file copy (not a hardlink: mtimes order the stream's micro-batches
-    and links would share one inode mtime)."""
-    import shutil
-    shutil.copyfile(_normalized_events_cached(src), dest)
+    drains these fixtures feed): about 60 ms for the 100k-row sf0.1
+    events file. Each staging writes its own file (mtimes order the
+    stream's micro-batches)."""
+    import pyarrow.parquet as pq
+    pq.write_table(_normalized_events(src), dest)
     if mtime is not None:
         os.utime(dest, (mtime, mtime))
 
@@ -713,7 +696,7 @@ def copy_events_split(src: str, dest: str, mod: int, rem: int,
     reconstruct each micro-batch's contents."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    tbl = pq.read_table(_normalized_events_cached(src))
+    tbl = _normalized_events(src)
     # no modulo kernel in pyarrow.compute — a numpy mask is fine at
     # fixture scale (this is a test/harness staging helper)
     mask = pa.array(tbl.column("event_id").to_numpy() % mod == rem)

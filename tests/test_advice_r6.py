@@ -1,6 +1,5 @@
 """Regression tests for the round-6 ADVICE.md findings, fixed in r7:
 CLI escape decoding, minhash_calibration oracle zero-overlap coverage,
-incremental_paragraph_dedup lineage checkpointing + replay contract,
 stitch_documents id-type derivation and over-max chain reporting."""
 
 from __future__ import annotations
@@ -64,62 +63,6 @@ def test_minhash_calibration_keeps_zero_overlap_candidates(
     assert 9 in got and got[9].avg_est == 1.0
 
 
-def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_incremental_paragraph_replay_idempotent(spark, tmp_path):
-    """ADVICE r6: a replayed delta (downstream write failed after the
-    store append) must NOT see its own winners as 'known' and rebuild
-    empty documents. With a stable batch_id the replay reproduces the
-    first run's corpus and funnel exactly and skips the re-append."""
-    from asvsp_spark.operators.dedup import incremental_paragraph_dedup
-
-    store = str(tmp_path / "seg")
-    b1 = _docs(spark, [(1, "boiler\n\nfresh one")])
-    out1, c1 = incremental_paragraph_dedup(
-        spark, b1, store, batch_id="2026-08-01")
-    first = sorted(map(tuple, out1.collect()))
-    assert first[0][1] == "boiler\n\nfresh one"
-
-    # replay the SAME delta with the SAME batch_id: identical output
-    out1r, c1r = incremental_paragraph_dedup(
-        spark, b1, store, batch_id="2026-08-01")
-    assert sorted(map(tuple, out1r.collect())) == first
-    assert c1r == c1
-    # and the store was not double-appended
-    assert spark.read.parquet(store).count() == 2
-
-    # a NEW batch_id over the same store sees batch 1 as known
-    b2 = _docs(spark, [(2, "boiler\n\nnew stuff")])
-    out2, c2 = incremental_paragraph_dedup(
-        spark, b2, store, batch_id="2026-08-02")
-    assert c2["known_segments"] == 1 and c2["fresh_segments"] == 1
-    assert out2.collect()[0]["text"] == "new stuff"
-
-
-def test_compact_preserves_mixed_store_batch_ids(spark, tmp_path):
-    """Review r7: compact_parquet on a mixed-footer store (legacy 2-col
-    files + batch_id-stamped appends) must keep the batch_id column —
-    a schema picked from one arbitrary legacy footer would silently
-    drop the replay stamps and reintroduce the empty-rebuild bug."""
-    from asvsp_spark.operators.dedup import incremental_paragraph_dedup
-    from asvsp_spark.sources.batch import compact_parquet
-
-    store = str(tmp_path / "seg")
-    spark.createDataFrame(
-        [("0" * 32, 1)], "h string, keeper_id long").write.parquet(store)
-    b = _docs(spark, [(2, "boiler\n\nnew stuff")])
-    _, c1 = incremental_paragraph_dedup(spark, b, store, batch_id="b1")
-    compact_parquet(spark, store)
-    cols = set(spark.read.parquet(store).columns)
-    assert "batch_id" in cols
-    # replay after compaction still idempotent
-    out, c2 = incremental_paragraph_dedup(spark, b, store, batch_id="b1")
-    assert c2 == c1
-    assert out.collect()[0]["text"] == "boiler\n\nnew stuff"
-
-
 def test_kafka_wire_ts_carries_zone_offset(spark, tmp_path):
     """Review r7: the wire timestamp string must pin the INSTANT, not a
     zone-less local rendering — a producer session in any timezone and
@@ -155,33 +98,3 @@ def test_kafka_wire_ts_carries_zone_offset(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", tz0)
 
 
-def test_incremental_paragraph_legacy_store_then_batch_id(spark, tmp_path):
-    """A store written before batch tracking (no batch_id column, or
-    untracked calls) keeps working: its rows stay 'known' to every
-    later tracked delta, and mixed-footer reads merge cleanly."""
-    from asvsp_spark.operators.dedup import incremental_paragraph_dedup
-
-    store = str(tmp_path / "seg")
-    # simulate a legacy 2-col store
-    _docs(spark, [(0, "x")]).sparkSession.createDataFrame(
-        [("0" * 32, 1)], "h string, keeper_id long"
-    ).write.parquet(store)
-    import pyspark.sql.functions as F  # noqa: F401
-    from asvsp_spark.operators.dedup import _doc_segments
-    legacy_h = _doc_segments(
-        _docs(spark, [(1, "boiler")]), r"\n{2,}", "doc_id", "text"
-    ).select("h").collect()[0]["h"]
-    spark.createDataFrame(
-        [(legacy_h, 1)], "h string, keeper_id long"
-    ).write.mode("append").parquet(store)
-
-    b2 = _docs(spark, [(2, "boiler\n\nnew stuff")])
-    out2, c2 = incremental_paragraph_dedup(
-        spark, b2, store, batch_id="b2")
-    assert c2["known_segments"] == 1 and c2["fresh_segments"] == 1
-    assert out2.collect()[0]["text"] == "new stuff"
-    # replay of b2 over the now-mixed store is still idempotent
-    out2r, c2r = incremental_paragraph_dedup(
-        spark, b2, store, batch_id="b2")
-    assert c2r == c2
-    assert out2r.collect()[0]["text"] == "new stuff"

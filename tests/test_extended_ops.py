@@ -744,7 +744,7 @@ def test_incremental_minhash_estimator_boundary(spark, tmp_path):
 def test_cli_pack_and_dedup_incremental(spark, tmp_path, capsys):
     """CLI round-trip for the packing and incremental-dedup subcommands:
     pack writes a shard-partitioned assignment; dedup-incremental
-    bootstraps a store, then a second run drops replays."""
+    bootstraps a store, then a second delta drops replayed texts."""
     import glob
     from asvsp_spark.cli import main
     src = str(tmp_path / "docs")
@@ -763,8 +763,11 @@ def test_cli_pack_and_dedup_incremental(spark, tmp_path, capsys):
                  "--out", kept]) == 0
     assert "fresh" in capsys.readouterr().out
     assert spark.read.parquet(kept).count() == 20
-    assert main(["dedup-incremental", src, "--store", store,
-                 "--out", kept]) == 0          # full replay
+    again = str(tmp_path / "again")     # every text again, under new ids
+    spark.read.parquet(src).withColumn(
+        "doc_id", F.col("doc_id") + 100).write.parquet(again)
+    assert main(["dedup-incremental", again, "--store", store,
+                 "--out", kept]) == 0
     assert spark.read.parquet(kept).count() == 0
 
 
@@ -1047,8 +1050,11 @@ def test_incremental_minhash_rejects_mismatched_store(spark, tmp_path):
         "doc_id long, text string")
     incremental_minhash_dedup(spark, docs, store,
                               num_hashes=16, bands=8)
+    # a later delta (the same delta again is a replay of the first call,
+    # which never sees its own rows)
+    later = docs.withColumn("doc_id", F.lit(2).cast("long"))
     with pytest.raises(ValueError, match="16-hash"):
-        incremental_minhash_dedup(spark, docs, store)   # 64-hash default
+        incremental_minhash_dedup(spark, later, store)  # 64-hash default
 
 
 def test_dsir_weights_prefer_target_like_docs(spark):

@@ -115,66 +115,6 @@ def test_dup_substring_runs_vs_brute(spark):
         assert gtab == wtab, f"min_count={mc}"
 
 
-def test_incremental_dup_substring_bootstrap_equals_global(spark, tmp_path):
-    """With no store, one batch equals the global dup_substring_runs on
-    the same documents (shared staging + assembly helpers)."""
-    from asvsp_spark.operators.dedup import (dup_substring_runs,
-                                             incremental_dup_substring)
-    blk = "the quick brown fox jumps over the lazy dog again"
-    rows = [(1, f"intro words here now {blk} tail one two"),
-            (2, f"other start {blk} different ending here"),
-            (3, "nothing shared at all in this one truly")]
-    runs, counts = incremental_dup_substring(
-        spark, _docs(spark, rows), str(tmp_path / "w"))
-    glob = dup_substring_runs(_docs(spark, rows), window=8)
-    assert sorted(map(tuple, runs.collect())) == \
-        sorted(map(tuple, glob.collect()))
-    assert counts["hot_windows"] > 0
-    assert counts["store_known_windows"] == 0
-
-
-def test_incremental_dup_substring_cross_batch_threshold(spark, tmp_path):
-    """A substring seen ONCE per batch trips the min_count=2 threshold
-    the day the second batch arrives — only then do its runs emit; a
-    replay of batch 2 reproduces the same runs and funnel."""
-    from asvsp_spark.operators.dedup import incremental_dup_substring
-    blk = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
-    store = str(tmp_path / "w")
-    b1 = _docs(spark, [(1, f"day one prefix {blk}")])
-    b2 = _docs(spark, [(2, f"day two other lead-in {blk} trailer")])
-    r1, c1 = incremental_dup_substring(spark, b1, store, batch_id="d1")
-    assert r1.count() == 0                      # not yet duplicated
-    assert c1["store_known_windows"] == 0 and c1["hot_windows"] == 0
-    r2, c2 = incremental_dup_substring(spark, b2, store, batch_id="d2")
-    got = r2.collect()
-    assert len(got) == 1                        # now it is
-    assert (got[0]["doc_id"], got[0]["n_tokens"]) == (2, 10)
-    assert c2["hot_windows"] == 3               # the 3 windows of blk
-    assert c2["store_known_windows"] == 3
-    # replay of batch 2: identical output + funnel, no double-append
-    r2r, c2r = incremental_dup_substring(spark, b2, store, batch_id="d2")
-    assert sorted(map(tuple, r2r.collect())) == sorted(map(tuple, got))
-    assert c2r == c2
-    store_rows = spark.read.parquet(store)
-    assert store_rows.filter("batch_id = 'd2'").count() == \
-        c2["distinct_windows"]
-
-
-def test_incremental_dup_substring_window_mismatch_raises(spark, tmp_path):
-    """Review r7: a store bootstrapped at one window size must refuse a
-    delta at another — different-length n-gram hashes can never match,
-    which would silently void the cross-batch guarantee."""
-    import pytest
-    from asvsp_spark.operators.dedup import incremental_dup_substring
-    store = str(tmp_path / "w")
-    incremental_dup_substring(
-        spark, _docs(spark, [(1, "a b c d e f g h i")]), store, window=8)
-    with pytest.raises(ValueError, match="window=8"):
-        incremental_dup_substring(
-            spark, _docs(spark, [(2, "j k l m n o p q r")]), store,
-            window=4)
-
-
 def test_line_dedup_within_doc(spark):
     """Keep-first per document, order preserved, blanks dropped; the
     funnel counts must be computed against the ORIGINAL text (pins the

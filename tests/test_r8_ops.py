@@ -4,7 +4,6 @@
 - the combined line_dedup + paragraph_delimiter pipeline flags (the r7
   medium finding: line dedup used to erase every paragraph boundary,
   silently disabling stage 2c);
-- batch_id=None warnings on the incremental store operators;
 - the string-leading-dot phone redaction context;
 - remove_dup_substring_runs keep-one semantics + pipeline stage 2d;
 - gapfill week grain;
@@ -81,30 +80,6 @@ def test_pipeline_line_plus_paragraph_dedup(spark, tmp_path):
     assert f"{f2} body two" in corpus[2]
 
 
-def test_incremental_store_ops_warn_without_batch_id(spark, tmp_path):
-    """The r7 advice: un-stamped incremental store calls have silent
-    replay failure modes (halved substring threshold / emptied delta
-    docs), so batch_id=None must warn — and a stamped call must not."""
-    import warnings
-    from asvsp_spark.operators.dedup import (incremental_dup_substring,
-                                             incremental_paragraph_dedup)
-    docs = spark.createDataFrame(
-        [(1, "w0 w1 w2 w3 w4 w5 w6 w7 w8")], "doc_id long, text string")
-    with pytest.warns(UserWarning, match="halving the effective"):
-        incremental_dup_substring(spark, docs,
-                                  str(tmp_path / "wins"))[0].count()
-    with pytest.warns(UserWarning, match="rebuilds all its documents"):
-        incremental_paragraph_dedup(spark, docs,
-                                    str(tmp_path / "segs"))[0].count()
-    with warnings.catch_warnings():
-        # UserWarning only: py4j GC-time ResourceWarnings are unrelated
-        warnings.simplefilter("error", UserWarning)
-        incremental_dup_substring(spark, docs, str(tmp_path / "wins2"),
-                                  batch_id="b1")[0].count()
-        incremental_paragraph_dedup(spark, docs, str(tmp_path / "segs2"),
-                                    batch_id="b1")[0].count()
-
-
 RUN10 = " ".join(f"r{i}" for i in range(1, 11))   # a 10-token run
 
 
@@ -160,9 +135,8 @@ def test_remove_composes_with_incremental_runs(spark, tmp_path):
         [(1, f"a1 a2 {RUN10}")], "doc_id long, text string")
     b2 = spark.createDataFrame(
         [(10, f"z1 {RUN10} z2")], "doc_id long, text string")
-    incremental_dup_substring(spark, b1, store, batch_id="b1")
-    runs, counts = incremental_dup_substring(spark, b2, store,
-                                             batch_id="b2")
+    incremental_dup_substring(spark, b1, store)
+    runs, counts = incremental_dup_substring(spark, b2, store)
     assert counts["hot_windows"] == 3      # 10-token run, w=8 -> 3 wins
     out = remove_dup_substring_runs(b2, runs, keep="none").collect()
     assert (out[0]["text"], out[0]["n_tokens_removed"]) == ("z1 z2", 10)
