@@ -360,18 +360,22 @@ def main(argv: list[str] | None = None) -> int:
                     help="also write the report parquet here")
 
     ab = sub.add_parser("ann-build",
-                        help="train and persist an IVF ANN index: "
+                        help="train and persist an IVF ANN index with "
+                             "ivf_topk's exact-integer quantizer: "
                              "centroids + vectors partitioned by cell "
-                             "(partition pruning IS the inverted file)")
+                             "(partition pruning IS the inverted file); "
+                             "indexes from the earlier float quantizer "
+                             "must be rebuilt")
     ab.add_argument("src", help="parquet with (vec_id, embedding)")
     ab.add_argument("index", help="index directory to write")
     ab.add_argument("--centroids", type=int, default=None,
                     help="cell count (default sqrt(N))")
     ab.add_argument("--pq", action="store_true",
-                    help="also train a product quantizer and store PQ "
-                         "codes beside each vector (FAISS-IVFPQ shape: "
-                         "queries ADC-scan the 8-byte codes of the "
-                         "probed cells, then rerank exactly)")
+                    help="also train ivfpq_rerank_topk's integer "
+                         "product quantizer and store PQ codes beside "
+                         "each vector (FAISS-IVFPQ shape: queries "
+                         "ADC-scan the 8-byte codes of the probed cells, "
+                         "then rerank exactly)")
     ab.add_argument("--pq-m", type=int, default=8,
                     help="PQ subspaces (with --pq)")
     ab.add_argument("--pq-codes", type=int, default=16,
@@ -787,12 +791,13 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "ann-query":
-        import os as _os
         from asvsp_spark.operators.similarity import (query_ivf_index,
                                                       query_ivfpq_index)
+        from asvsp_spark.sources.store import hadoop_fs
         spark = _session(args)
         queries_df = spark.read.parquet(args.queries)
-        if _os.path.isdir(f"{args.index}/codebooks"):
+        fs, codebooks = hadoop_fs(spark, f"{args.index}/codebooks")
+        if fs.exists(codebooks):
             res = query_ivfpq_index(spark, args.index, queries_df,
                                     k=args.k, n_probe=args.n_probe,
                                     shortlist=args.shortlist)

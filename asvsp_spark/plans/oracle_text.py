@@ -213,7 +213,7 @@ ORACLE_TEXT["ivf_topk_full_probe"] = ORACLE_TEXT["cosine_topk"]
 # Spark side: operators/similarity.py ivf_topk (registry defaults:
 # k=5, n_queries=10, n_probe=4, kc=floor(sqrt(N)), 2 Lloyd iterations).
 # Oracle-paired since r8: the quantizer is deterministic exact-integer
-# training (ivf_centroids_int) — micro-unit vectors, farthest-point
+# training (ivf_centroids) — micro-unit vectors, farthest-point
 # seeding from the md5-rank-smallest id (sequential by nature, so a
 # RECURSIVE CTE replays it one selection per level, the
 # packing_best_fit_bins pattern), exact BIGINT squared distances with
@@ -348,7 +348,7 @@ SELECT query_id, neighbor_id, cos_sim, rnk FROM r WHERE rnk <= {k}
 ORACLE_TEXT["ivf_topk"] = _ivf_sql()
 
 
-# Spark side: operators/similarity.py pq_rerank_topk_int (registry
+# Spark side: operators/similarity.py pq_rerank_topk (registry
 # defaults: k=5, n_queries=10, m=8, k_codes=16, shortlist=50, 2 Lloyd
 # iterations). The _ivf_sql training replay extended per SUBSPACE: the
 # farthest-point seeding recursion carries ``sub`` as a data dimension
@@ -506,7 +506,7 @@ SELECT query_id, neighbor_id, cos_sim, rnk FROM r WHERE rnk <= {k}
 ORACLE_TEXT["pq_rerank_topk"] = _pq_sql(shortlist=100)
 
 
-# Spark side: operators/similarity.py ivfpq_rerank_topk_int (registry
+# Spark side: operators/similarity.py ivfpq_rerank_topk (registry
 # defaults: k=5, n_queries=10, n_probe=4, kc=floor(sqrt(N)), m=8,
 # k_codes=16, shortlist=50, 2 Lloyd iterations). _ivf_sql's cell
 # training and _pq_sql's per-subspace codebook training COMPOSED in one
@@ -515,8 +515,9 @@ ORACLE_TEXT["pq_rerank_topk"] = _pq_sql(shortlist=100)
 # the quantizer's integer metric, the ADC scan scores only probed-cell
 # members' (sub, code) triples against the per-query exact-BIGINT LUT,
 # and exact cosine (cosine_topk's formula verbatim) reranks the
-# shortlist. PQ codes are over the RAW vectors (non-residual), matching
-# build_ivfpq_index's float layout.
+# shortlist. PQ codes are over the RAW vectors (non-residual);
+# build_ivfpq_index persists exactly these cells and codes, so
+# query_ivfpq_index over it returns this twin's rows.
 def _ivfpq_sql(k: int = 5, n_queries: int = 10, n_probe: int = 4,
                m: int = 8, k_codes: int = 16, shortlist: int = 50,
                iters: int = 2) -> str:

@@ -162,7 +162,7 @@ _ROWS: tuple[tuple, ...] = (
     # shortlist=100: recall vs exact top-5 measured 0.62@50 / 0.86@100
     # on the fixture (the raw-L2 ADC metric vs the cosine rerank); the
     # shortlist's cost is constant in corpus size
-    ("pq_rerank_topk", SIM.pq_rerank_topk_int, _EMBEDDINGS,
+    ("pq_rerank_topk", SIM.pq_rerank_topk, _EMBEDDINGS,
      {"shortlist": 100}),
     ("key_skew_report", skew.key_skew_report, _EVENTS,
      {"key_col": "user_id", "top_k": 10}),
@@ -175,7 +175,7 @@ _ROWS: tuple[tuple, ...] = (
     ("shard_manifest_lpt", sharding.shard_manifest, _DOCS,
      {"by_tokens": True}),
     ("pmi_collocations", relevance.pmi_collocations, _DOCS),
-    ("ivfpq_rerank_topk", SIM.ivfpq_rerank_topk_int, _EMBEDDINGS),
+    ("ivfpq_rerank_topk", SIM.ivfpq_rerank_topk, _EMBEDDINGS),
     ("paragraph_dedup_docs", D.paragraph_dedup, _DOCS,
      {"delimiter": _THE_DELIMITER, "joiner": "\n\n"}),
     ("boundary_overlap_pairs", D.boundary_overlap_pairs, _DOCS,

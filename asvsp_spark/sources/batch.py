@@ -17,8 +17,6 @@ the source; JDBC writes batch rows and parallelize across partitions.
 
 from __future__ import annotations
 
-import os
-import shutil
 import uuid
 from collections.abc import Callable
 from pathlib import Path
@@ -27,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from asvsp_spark.sources.store import BatchStore
+from asvsp_spark.sources.store import BatchStore, hadoop_fs
 
 
 def read_csv(spark: SparkSession, path: str, schema: T.StructType,
@@ -360,33 +358,59 @@ def foreach_batch_overwrite_partitions(path: str, partition_by: list[str],
     return _sink
 
 
-def _swap_in(path: str, tag: str, write: Callable[[str], None]) -> None:
+def _swap_in(spark: SparkSession, path: str, tag: str,
+             write: Callable[[str], None]) -> None:
     """Replace the directory at ``path`` with what ``write(tmp)`` puts
     in a temp sibling. Protocol: write the sibling, rename the live dir
     aside, move the sibling into place, then delete the old dir — the
     old data survives (under ``__old``) until the new dir is live, so a
     crash at any step never loses the only copy, and a failed write or
-    rename leaves no sibling behind. This is NOT an atomic swap: a
+    rename leaves no sibling behind. Renames and deletes go through the
+    session's Hadoop FileSystem (``store.hadoop_fs``), so a file:// or
+    hdfs:// path swaps like a local one. This is NOT an atomic swap: a
     reader listing between the two renames sees a missing dir, and one
     that listed before them can fail mid-scan. True atomicity needs
     renameat2(RENAME_EXCHANGE) or a catalog-level commit (Iceberg/Delta);
     for single-writer maintenance windows this protocol is standard."""
+    fs, live = hadoop_fs(spark, path)
     token = uuid.uuid4().hex[:8]
-    tmp = f"{path}__{tag}_{token}"
+    tmp, old = live.suffix(f"__{tag}_{token}"), live.suffix(f"__old_{token}")
     try:
-        write(tmp)
+        write(tmp.toString())
     except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
+        fs.delete(tmp, True)
         raise
-    old = f"{path}__old_{token}"
-    os.rename(path, old)          # same-dir rename: no cross-fs copy
+    if not fs.rename(live, old):  # same-dir rename: no cross-fs copy
+        fs.delete(tmp, True)
+        raise OSError(f"could not move {live} aside to {old}")
     try:
-        os.rename(tmp, path)
+        if not fs.rename(tmp, live):
+            raise OSError(f"could not move {tmp} to {live}")
     except BaseException:
-        os.rename(old, path)      # roll back: old data becomes live again
-        shutil.rmtree(tmp, ignore_errors=True)
+        fs.rename(old, live)      # roll back: old data becomes live again
+        fs.delete(tmp, True)
         raise
-    shutil.rmtree(old)
+    fs.delete(old, True)
+
+
+def _read_for_rewrite(spark: SparkSession, path: str):
+    """(rows, partition columns) of the parquet dataset at ``path``,
+    for a rewrite in place. An incremental-operator store
+    (``sources/store.py``) is read through ``BatchStore``, since a
+    plain read skips its root files once it has batch directories, and
+    is to be written back with one directory per committed batch, so
+    replays after the rewrite still recognise their own rows. The
+    layout check lists through the session's Hadoop FileSystem, so a
+    file:// or hdfs:// store is recognised too."""
+    fs, root = hadoop_fs(spark, path)
+    if fs.exists(root) and any(
+            st.isDirectory() and st.getPath().getName().startswith("batch_id=")
+            for st in fs.listStatus(root)):
+        return BatchStore(spark, path).read(), ["batch_id"]
+    # mergeSchema: a dataset can carry mixed footers; a plain read
+    # infers the schema from ONE arbitrary part-file, so a rewrite
+    # here could silently drop the newer columns
+    return spark.read.option("mergeSchema", "true").parquet(path), None
 
 
 def compact_parquet(spark: SparkSession, path: str,
@@ -403,22 +427,14 @@ def compact_parquet(spark: SparkSession, path: str,
     to ceil(bytes / target).
 
     The rewrite goes through the crash-safe directory swap of
-    ``_swap_in``. An incremental-operator store (``sources/store.py``)
-    is read through ``BatchStore``, since a plain read skips its root
-    files once it has batch directories, and written back with one
-    directory per committed batch, so replays after compaction still
-    recognise their own rows.
+    ``_swap_in``; an incremental-operator store keeps one directory per
+    committed batch (``_read_for_rewrite``). The returned count lists
+    through the session's Hadoop FileSystem, like the swap.
     """
     import math
 
-    if partition_by is None and os.path.isdir(path) and any(
-            n.startswith("batch_id=") for n in os.listdir(path)):
-        df, partition_by = BatchStore(spark, path).read(), ["batch_id"]
-    else:
-        # mergeSchema: a dataset can carry mixed footers; a plain read
-        # infers the schema from ONE arbitrary part-file, so a rewrite
-        # here could silently drop the newer columns
-        df = spark.read.option("mergeSchema", "true").parquet(path)
+    df, layout = _read_for_rewrite(spark, path)
+    partition_by = partition_by or layout
     # size from the file source relation's computed statistics (listing
     # only — parquet footers are not read for sizeInBytes)
     total = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
@@ -430,9 +446,12 @@ def compact_parquet(spark: SparkSession, path: str,
             w = w.partitionBy(*partition_by)
         w.parquet(tmp)
 
-    _swap_in(path, "compact", write)
-    import glob as _glob
-    return len(_glob.glob(f"{path}/**/*.parquet", recursive=True))
+    _swap_in(spark, path, "compact", write)
+    fs, root = hadoop_fs(spark, path)
+    files, n_out = fs.listFiles(root, True), 0
+    while files.hasNext():
+        n_out += files.next().getPath().getName().endswith(".parquet")
+    return n_out
 
 
 def merge_upsert(spark, path: str, updates, key_cols: list[str],
@@ -447,13 +466,14 @@ def merge_upsert(spark, path: str, updates, key_cols: list[str],
     keyed merge (and the operation Delta/Iceberg call MERGE, expressed
     on raw parquet): one full-outer join on the key, action decided per
     row, rewrite through the crash-safe directory swap of ``_swap_in``
-    (old data survives aside until the new dir is live). Scale: the
+    (old data survives aside until the new dir is live; an
+    incremental-operator store keeps its batch directories). Scale: the
     join shuffles base+updates by key once — for partitioned bases
     where updates touch few partitions, join against only those
     partitions and use overwrite_window_partitions instead; this
     full-merge path is the general fallback.
     """
-    base = spark.read.parquet(path)
+    base, layout = _read_for_rewrite(spark, path)
     data_cols = [c for c in base.columns if c not in key_cols]
     upd_cols = [c for c in updates.columns
                 if c not in key_cols and c != delete_col]
@@ -494,6 +514,8 @@ def merge_upsert(spark, path: str, updates, key_cols: list[str],
                    .otherwise(F.col(f"b.{c}")).alias(c)
                   for c in data_cols])
     )
-    _swap_in(path, "merge", merged.write.mode("overwrite").parquet)
+    w = merged.write.mode("overwrite")
+    _swap_in(spark, path, "merge",
+             (w.partitionBy(*layout) if layout else w).parquet)
     return {k: counts.get(k, 0) for k in
             ("insert", "update", "delete", "delete_noop", "keep")}

@@ -76,15 +76,21 @@ def batch_key(n_rows: int, sums) -> str:
         n_rows, *(int(sums[c] or 0) % 2 ** 64 for c in ("_k1", "_k2")))
 
 
+def hadoop_fs(spark, path: str):
+    """(FileSystem, Path) of ``path`` through the session's Hadoop
+    configuration: the resolution ``spark.read`` uses, so local paths,
+    file:// and hdfs:// URIs all list, rename and delete alike."""
+    root = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return root.getFileSystem(spark._jsc.hadoopConfiguration()), root
+
+
 class BatchStore:
     """One store directory, seen by the batch ``key`` (``None``: by no
     batch, so every committed row is visible)."""
 
     def __init__(self, spark, path: str, key: str | None = None):
         self.spark, self.key = spark, key
-        self._root = spark._jvm.org.apache.hadoop.fs.Path(path)
-        self._fs = self._root.getFileSystem(
-            spark._jsc.hadoopConfiguration())
+        self._fs, self._root = hadoop_fs(spark, path)
 
     def _committed(self) -> tuple[list[str], list[str]]:
         """(root files, batch directories) of every other batch."""

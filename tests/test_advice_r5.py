@@ -4,9 +4,10 @@
   used to silently misallocate or empty a split);
 - PII phone pattern word-boundary guards (3-3-4 runs embedded in longer
   digit strings used to be redacted);
-- identifier quoting in catalog DDL/ANALYZE (backtick injection);
-- semantic-dedup applyInPandas schema derived from the input id type
-  (string ids used to fail at runtime against a hardcoded `long`).
+- identifier quoting in catalog DDL/ANALYZE (backtick injection).
+
+The semantic-dedup string-id and PQ zero-vector pins live in
+test_similarity.py with the other similarity tests.
 """
 
 from __future__ import annotations
@@ -80,41 +81,6 @@ def test_quote_ident_doubles_backticks():
     assert _quote_ident("x` DROP TABLE y --") == "`x`` DROP TABLE y --`"
 
 
-def test_semantic_dedup_string_ids(spark):
-    """The applyInPandas output schema follows the input id type; two
-    near-identical vectors collapse to the lexicographically-first id."""
-    from asvsp_spark.operators.similarity import semantic_dedup
-    rows = [
-        ("doc-a", [1.0, 0.0, 0.0]),
-        ("doc-b", [0.9999, 0.0001, 0.0]),
-        ("doc-c", [0.0, 1.0, 0.0]),
-        ("doc-d", [0.0, 0.0, 1.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    out = {r.vec_id: r.is_keeper
-           for r in semantic_dedup(df, threshold_num=95, threshold_den=100,
-                                   n_cells=2).collect()}
-    assert out["doc-a"] is True
-    assert out["doc-b"] is False          # dup of doc-a, higher id
-    assert sum(out.values()) == 3
-
-
-def test_incremental_semantic_dedup_string_ids(spark, tmp_path):
-    from asvsp_spark.operators.similarity import incremental_semantic_dedup
-    store = str(tmp_path / "sem_store")
-    b1 = spark.createDataFrame(
-        [("a", [1.0, 0.0]), ("b", [0.0, 1.0])],
-        "vec_id string, embedding array<double>")
-    fresh1, c1 = incremental_semantic_dedup(spark, b1, store, threshold=0.95)
-    assert c1["fresh"] == 2
-    b2 = spark.createDataFrame(
-        [("c", [0.9999, 0.0001]), ("d", [0.7, 0.7])],
-        "vec_id string, embedding array<double>")
-    fresh2, c2 = incremental_semantic_dedup(spark, b2, store, threshold=0.95)
-    got = {r.vec_id for r in fresh2.collect()}
-    assert got == {"d"} and c2["sem_dupes"] == 1
-
-
 # ---- second r5 review round ----
 
 
@@ -139,22 +105,6 @@ def test_drift_empty_delta_no_store_corruption(spark, tmp_path):
     assert stats2["bootstrapped"] and stats2["delta_events"] == 8
     # self-baseline bootstrap: zero drift
     assert all(r.kl_nats == 0.0 for r in report2.collect())
-
-
-def test_pq_paths_tolerate_zero_vectors(spark):
-    """A zero embedding in the training sample and the corpus must not
-    raise under ANSI mode (the query side is covered by
-    test_ivfpq_rerank_tolerates_zero_vectors)."""
-    from asvsp_spark.operators.similarity import pq_encode, pq_train
-    import random
-    rng = random.Random(7)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)])
-            for i in range(40)]
-    rows.append((99, [0.0] * 8))   # the zero vector
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cb = pq_train(emb, m=4, k_codes=4)
-    codes = pq_encode(emb, cb, m=4)
-    assert codes.count() == 41
 
 
 def test_cli_quality_score_null_text(spark, tmp_path, capsys):
@@ -206,30 +156,6 @@ def test_heuristic_labels_degenerate_docs(spark):
         "doc_id long, text string, lang string")
     got = {r.doc_id: r.label for r in heuristic_labels(docs).collect()}
     assert got.get(100, 0) == 0 and 1 in got.values()
-
-
-def test_ivfpq_rerank_tolerates_zero_vectors(spark, tmp_path):
-    """The full IVF-PQ path (ADC shortlist and exact-cosine rerank)
-    must survive zero vectors in corpus AND query under ANSI mode; the
-    zero query still returns k rows."""
-    import random
-    from asvsp_spark.operators.similarity import (build_ivfpq_index,
-                                                  query_ivfpq_index)
-    rng = random.Random(11)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)])
-            for i in range(30)]
-    rows.append((99, [0.0] * 8))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    idx = str(tmp_path / "zidx")
-    build_ivfpq_index(emb, idx, n_centroids=2, m=4, k_codes=4)
-    out = query_ivfpq_index(spark, idx,
-                            emb.filter("vec_id in (0, 99)"), k=3,
-                            n_probe=2, shortlist=31)
-    got = {r["query_id"]: r["count"] for r in
-           out.groupBy("query_id").count().collect()}
-    assert got == {0: 3, 99: 3}
-    # the zero corpus vector scores cos 0.0 against a real query, no NULLs
-    assert out.filter(F.col("cos_sim").isNull()).count() == 0
 
 
 def test_dq_check_config_error_exit_code(spark, tmp_path, capsys):

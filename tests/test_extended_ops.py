@@ -964,38 +964,6 @@ def test_chunk_documents_window_semantics(spark):
         chunk_documents(docs, chunk_tokens=4, overlap=4)
 
 
-def test_incremental_semantic_dedup_across_batches(spark, tmp_path):
-    """Embedding twin of the incremental dedup family: batch 1
-    bootstraps the centroid + vector store and collapses its own
-    semantic dupes; batch 2's near-replays of STORED vectors (never
-    seen as rows) are dropped against the frozen cells while new
-    directions pass; the store accumulates only keepers."""
-    from asvsp_spark.operators.similarity import incremental_semantic_dedup
-    store = str(tmp_path / "sem_store")
-    b1 = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0]),
-         (2, [0.999, 0.04, 0.0]),    # ~parallel to 1: within-batch dup
-         (3, [0.0, 1.0, 0.0])],
-        "vec_id long, embedding array<double>")
-    fresh1, c1 = incremental_semantic_dedup(spark, b1, store,
-                                            threshold=0.95, n_cells=2)
-    assert {r.vec_id for r in fresh1.collect()} == {1, 3}
-    assert c1 == {"batch": 3, "sem_dupes": 1, "fresh": 2}
-
-    b2 = spark.createDataFrame(
-        [(10, [0.998, 0.05, 0.0]),   # near-replay of stored 1: dropped
-         (11, [0.0, 0.0, 1.0])],     # new direction: kept
-        "vec_id long, embedding array<double>")
-    fresh2, c2 = incremental_semantic_dedup(spark, b2, store,
-                                            threshold=0.95, n_cells=2)
-    assert {r.vec_id for r in fresh2.collect()} == {11}
-    assert c2 == {"batch": 2, "sem_dupes": 1, "fresh": 1}
-    stored = spark.read.parquet(f"{store}/vectors")
-    assert {r.vec_id for r in stored.collect()} == {1, 3, 11}
-    # centroids frozen at bootstrap: exactly one write
-    assert spark.read.parquet(f"{store}/centroids").count() == 2
-
-
 def test_cli_chunk(spark, tmp_path, capsys):
     """CLI chunk subcommand: writes one row per token window and covers
     every document."""

@@ -229,6 +229,39 @@ def test_store_resolves_scheme_qualified_paths(spark, tmp_path):
     assert incremental_exact_dedup(spark, b2, store)[1] == c2
 
 
+def test_compact_and_merge_swap_scheme_qualified_store(spark, tmp_path):
+    """compact_parquet and merge_upsert on a file:// store: the layout
+    check, the directory swap and the file count go through the
+    session's Hadoop FileSystem. An os.rename of the URI raised after
+    the rewrite and left a full <store>__compact_<token> copy beside
+    the store."""
+    from asvsp_spark.operators.dedup import incremental_exact_dedup
+    from asvsp_spark.sources.batch import compact_parquet, merge_upsert
+    from asvsp_spark.sources.store import BatchStore
+    store = f"file://{tmp_path}/store"
+    b1 = _docs(spark, [(1, "alpha beta"), (2, "gamma delta")])
+    b2 = _docs(spark, [(3, "alpha beta"), (4, "eta theta")])
+    incremental_exact_dedup(spark, b1, store)
+    fresh, c2 = incremental_exact_dedup(spark, b2, store)
+    first = (_ids(fresh), c2)
+
+    def stored():
+        df = BatchStore(spark, store).read()
+        return _rows(df.select(*sorted(df.columns)))
+
+    before = stored()
+    assert compact_parquet(spark, store) >= 1
+    assert stored() == before
+    counts = merge_upsert(spark, store, spark.read.parquet(store), ["fp"])
+    assert counts["update"] == len(before) == 3
+    assert stored() == before
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["store"]
+    # the batch directories survive both rewrites: a replay of the last
+    # delta still returns its first result
+    fresh, c2 = incremental_exact_dedup(spark, b2, store)
+    assert (_ids(fresh), c2) == first
+
+
 @pytest.mark.parametrize("mode", [[], ["--paragraph", r"\n{2,}"]],
                          ids=["exact", "paragraph"])
 def test_cli_dedup_incremental_replay(spark, tmp_path, capsys, mode):

@@ -232,19 +232,6 @@ def test_substring_removed_plan_shape(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_ivf_assignment_no_corpus_shuffle_for_join(spark):
-    """ivf_topk's full-corpus cell assignment must be a broadcast
-    (nested-loop over the tiny centroid table is fine — it IS the
-    cross join) + map-side min_by: no SortMergeJoin of the corpus."""
-    from asvsp_spark import tables
-    from asvsp_spark.operators.similarity import ivf_topk
-    from tests.conftest import SF_DIR
-    emb = tables.load(spark, SF_DIR, "embeddings")
-    plan = ivf_topk(emb)._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-
-
 def test_gapfill_week_grain_iso_monday(spark):
     """Week-grain gap-fill pins ISO-week bucketing: a Sunday event
     lands in the PRIOR Monday's bucket, the spine steps calendar weeks,
@@ -368,88 +355,18 @@ def test_variant_rollup_plan_is_jvm_only_single_agg(spark):
 
 # ---- exact-integer PQ (pq_rerank_topk oracle-pairing) ----
 
-def test_pq_int_rerank_recall_bound(spark):
-    """The integer-quantizer PQ rerank must recover >= 0.8 of the exact
-    cosine top-5 at the registry's own params (m=8, k_codes=16,
-    shortlist=100 — measured 0.86; shortlist=50 measured 0.62, which is
-    why the registry widens it: the shortlist is the recall knob whose
-    cost is CONSTANT in corpus size). The float 128-code path keeps its
-    own 0.8 bound in test_drift.py — this pins the hash-checkable twin."""
-    from asvsp_spark.operators.similarity import (cosine_topk,
-                                                  pq_rerank_topk_int)
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = {(r.query_id, r.neighbor_id)
-             for r in cosine_topk(emb).collect()}
-    rr = {(r.query_id, r.neighbor_id)
-          for r in pq_rerank_topk_int(emb, shortlist=100).collect()}
-    assert len(rr & exact) / len(exact) >= 0.8
-
-
-def test_pq_int_encode_is_shuffle_free_arrow_pass(spark):
-    """Corpus encoding must be ONE row-local Arrow pass: a MapInPandas
-    node with no Exchange and no join in the encode subplan — the
-    property that keeps PQ encode at scan speed on a 100 TB corpus.
-    (A literal-codebook expression tree was measured at ~5 ms/row —
-    interpreted HOF evaluation per (sub, code); the Arrow+numpy path is
-    the same measured-justification as the float pq_encode.)"""
-    from asvsp_spark.functions.vectors import as_double
-    from asvsp_spark.operators.similarity import (IVF_QUANT_SCALE,
-                                                  pq_codebooks_int,
-                                                  pq_encode_int)
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    to_int = F.transform(as_double(F.col("embedding")),
-                         lambda x: F.round(x * IVF_QUANT_SCALE, 0)
-                         .cast("long"))
-    ei = emb.select("vec_id", to_int.alias("v"))
-    cb_rows = pq_codebooks_int(ei, m=8, k_codes=16).collect()
-    codes = pq_encode_int(ei, cb_rows, 8)
-    plan = codes._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    assert "Exchange" not in plan
-    assert "Join" not in plan
-
-
-def test_pq_int_codebooks_shape_and_code_compaction(spark):
-    """pq_codebooks_int: m×(<=k) rows, codes contiguous from 0 per
-    subspace (the compaction invariant the literal-codebook encode and
-    the oracle's order-preservation argument both rely on), subvector
-    width dim/m, and training is deterministic across invocations."""
-    from asvsp_spark.functions.vectors import as_double
-    from asvsp_spark.operators.similarity import (IVF_QUANT_SCALE,
-                                                  pq_codebooks_int)
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    to_int = F.transform(as_double(F.col("embedding")),
-                         lambda x: F.round(x * IVF_QUANT_SCALE, 0)
-                         .cast("long"))
-    ei = emb.select("vec_id", to_int.alias("v"))
-    rows = sorted(((r["sub"], r["code"], tuple(r["c"]))
-                   for r in pq_codebooks_int(ei, m=8, k_codes=16)
-                   .collect()))
-    subs = {s for s, _, _ in rows}
-    assert subs == set(range(8))
-    for s in subs:
-        codes = [c for ss, c, _ in rows if ss == s]
-        assert codes == list(range(len(codes))) and len(codes) <= 16
-    assert all(len(v) == 8 for _, _, v in rows)
-    again = sorted(((r["sub"], r["code"], tuple(r["c"]))
-                    for r in pq_codebooks_int(ei, m=8, k_codes=16)
-                    .collect()))
-    assert rows == again
-
-
 def test_ivfpq_int_full_probe_equals_pq_scan(spark):
     """With every cell probed the IVF pruning is a no-op, so
-    ivfpq_rerank_topk_int must equal pq_rerank_topk_int exactly at the
-    same m/k_codes/shortlist — the same degenerate-configuration
-    identity the float index pins in test_ivfpq.py, now on the
-    hash-checkable twins (both share the PQ sample gate and codebooks
-    by construction)."""
-    from asvsp_spark.operators.similarity import (ivfpq_rerank_topk_int,
-                                                  pq_rerank_topk_int)
+    ivfpq_rerank_topk must equal pq_rerank_topk exactly at the
+    same m/k_codes/shortlist — the degenerate-configuration identity
+    the persisted index also pins in test_similarity.py (both share
+    the PQ sample gate and codebooks by construction)."""
+    from asvsp_spark.operators.similarity import (ivfpq_rerank_topk,
+                                                  pq_rerank_topk)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    fp = sorted(map(tuple, ivfpq_rerank_topk_int(
+    fp = sorted(map(tuple, ivfpq_rerank_topk(
         emb, n_probe=10**9, shortlist=100).collect()))
-    pq = sorted(map(tuple, pq_rerank_topk_int(
+    pq = sorted(map(tuple, pq_rerank_topk(
         emb, shortlist=100).collect()))
     assert fp == pq
 
@@ -461,12 +378,12 @@ def test_ivfpq_int_pruned_recall_bound(spark):
     recall pays for; the ADC shortlist recovers everything the probes
     admit)."""
     from asvsp_spark.operators.similarity import (cosine_topk,
-                                                  ivfpq_rerank_topk_int)
+                                                  ivfpq_rerank_topk)
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     exact = {(r.query_id, r.neighbor_id)
              for r in cosine_topk(emb).collect()}
     got = {(r.query_id, r.neighbor_id)
-           for r in ivfpq_rerank_topk_int(emb).collect()}
+           for r in ivfpq_rerank_topk(emb).collect()}
     assert len(got & exact) / len(exact) >= 0.5
 
 
@@ -549,11 +466,11 @@ def test_int_ann_ops_empty_input(spark):
     """Empty corpora return empty frames with the contract schema
     instead of an opaque NoneType crash from the dim metadata agg."""
     from asvsp_spark.operators.similarity import (ivf_topk,
-                                                  ivfpq_rerank_topk_int,
-                                                  pq_rerank_topk_int,
+                                                  ivfpq_rerank_topk,
+                                                  pq_rerank_topk,
                                                   semantic_dedup)
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    for fn in (pq_rerank_topk_int, ivfpq_rerank_topk_int, ivf_topk):
+    for fn in (pq_rerank_topk, ivfpq_rerank_topk, ivf_topk):
         out = fn(empty)
         assert out.count() == 0
         assert out.columns == ["query_id", "neighbor_id", "cos_sim", "rnk"]
@@ -567,12 +484,12 @@ def test_int_ann_overflow_guard_is_loud(spark):
     headroom must RAISE, not wrap: numpy int64 overflows silently while
     the DuckDB twin promotes to HUGEINT, so an unguarded overflow would
     surface as a hash mismatch instead of an error."""
-    from asvsp_spark.operators.similarity import pq_rerank_topk_int
+    from asvsp_spark.operators.similarity import pq_rerank_topk
     big = spark.createDataFrame(
         [(i, [500.0] * 8) for i in range(12)],   # 5e8 micro-units
         "vec_id long, embedding array<double>")
     with pytest.raises(Exception, match="overflow the exact-int64"):
-        pq_rerank_topk_int(big, m=2, k_codes=2, n_queries=2).count()
+        pq_rerank_topk(big, m=2, k_codes=2, n_queries=2).count()
 
 
 def test_int_ann_overflow_guard_is_dimension_aware():

@@ -81,44 +81,6 @@ def test_hll_within_rsd_of_exact(spark):
         assert abs(approx[day] - n) <= max(3, 0.06 * n), (day, n, approx[day])
 
 
-def test_ivf_full_probe_equals_brute_force(spark):
-    """IVF with n_probe >= n_centroids probes every cell — the result must
-    be EXACTLY the brute-force cosine top-k (same ranks, same ties)."""
-    from asvsp_spark import tables
-    from asvsp_spark.operators.similarity import cosine_topk, ivf_topk
-    from tests.conftest import SF_DIR
-    emb = tables.load(spark, SF_DIR, "embeddings")
-    exact = cosine_topk(emb)
-    full = ivf_topk(emb, n_centroids=4, n_probe=4)
-
-    def rs(df):
-        cols = sorted(df.columns)
-        return sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
-
-    assert rs(full) == rs(exact)
-
-
-def test_ivf_partial_probe_recall(spark):
-    """Partial probing keeps decent recall on the fixture (the point of a
-    trained quantizer) while scanning a fraction of the cells.
-
-    History: measured at the registry's own n_probe=4 default since r8
-    (mllib KMeans scored 0.50 at probe 3; the deterministic
-    farthest-point + integer-Lloyd quantizer that made ivf_topk
-    oracle-pairable measures 0.46@3 / 0.58@4 on the fixture — the
-    recall-vs-hash-checkability trade is documented in
-    ivf_centroids_int; hash-random seeding without fps measured
-    0.34, which is why the fps stage exists)."""
-    from asvsp_spark import tables
-    from asvsp_spark.operators.similarity import cosine_topk, ivf_topk
-    from tests.conftest import SF_DIR
-    emb = tables.load(spark, SF_DIR, "embeddings")
-    exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb).collect()}
-    approx = {(r.query_id, r.neighbor_id)
-              for r in ivf_topk(emb, n_probe=4).collect()}
-    assert len(approx & exact) / len(exact) >= 0.5
-
-
 def test_cosine_dup_pairs_blocked_invariance(spark):
     """The block count is an execution knob, not a semantic one: forcing
     multiple block pairs must give exactly the single-block result."""
