@@ -22,7 +22,7 @@ oracle can check (where SQL-expressible).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from asvsp_spark.functions.text import fingerprint, token_count, tokens
 from asvsp_spark.plans.base import fanout, round_fixed
@@ -46,40 +46,23 @@ def exact_dedup(documents: DataFrame,
 def shingle_posting(documents: DataFrame, n: int = 3,
                     id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Inverted-index posting list: one (doc, sh) row per DISTINCT word
-    n-gram shingle per document.
+    n-gram shingle per document — ``shingled``'s array, exploded.
 
     Shape: SHUFFLE-FREE — split once into a token-array column, build
-    the distinct n-gram array per doc (TX.token_ngrams direct-subscript
-    transform + array_distinct), then explode. Both the within-doc dedup (array_distinct) and the
-    n-gram assembly are per-row, so the posting list streams out of the
-    parquet scan with no exchange at all; downstream consumers shuffle
-    on whatever key they need. Documents shorter than n words contribute
-    no rows (explicit CASE — Spark's sequence(1, 0) counts DOWN, so an
-    unguarded transform would emit junk sub-n-grams for short docs).
+    the distinct n-gram array per doc (``_doc_shingles``), then explode.
+    Both the within-doc dedup (array_distinct) and the n-gram assembly
+    are per-row, so the posting list streams out of the parquet scan
+    with no exchange at all; downstream consumers shuffle on whatever
+    key they need. Documents shorter than n words contribute no rows.
 
     Two formulations measured at sf0.1 (260k shingles) before this one:
     posexplode + window-lead + dropDuplicates = two shuffles, 1.8-3.6 s;
     a single-expression HOF that re-splits the text inside the lambda
     (Catalyst evaluates the split per ELEMENT) ~3 s. Pre-splitting into
-    a column first: 0.55 s. fanout() spreads the interpreted n-gram
-    projection across all cores when the scan arrives under-split
-    (plans/base.py — no-op at production partition counts).
+    a column first: 0.55 s.
     """
-    documents = fanout(documents)
-    toks = documents.select(
-        F.col(id_col).alias("doc"),
-        tokens(F.col(text_col)).alias("toks"))
-    return toks.select(
-        "doc", F.explode(_shingle_array(n)).alias("sh"))
-
-
-def _shingle_array(n: int) -> F.Column:
-    """Distinct n-gram array from a `toks` column — TX.token_ngrams
-    (the single direct-subscript n-gram spelling: slice-in-lambda
-    copies n elements PER POSITION, measured ~20% slower at sf0.1)
-    wrapped in the within-doc dedup."""
-    from asvsp_spark.functions.text import token_ngrams
-    return F.array_distinct(token_ngrams("toks", n))
+    toks, shingles = _doc_shingles(documents, n, id_col, text_col)
+    return toks.select("doc", F.explode(shingles).alias("sh"))
 
 
 def shingled(documents: DataFrame, n: int = 3,
@@ -95,13 +78,31 @@ def shingled(documents: DataFrame, n: int = 3,
     once in the projection — no cross-operator CSE for non-codegen
     exprs; measured 15x slower at sf0.1), and every consumer either
     explodes (empty arrays vanish) or joins by doc id (empty arrays
-    cannot be candidates). fanout() spreads the interpreted n-gram
-    build across cores when the scan arrives under-split."""
-    documents = fanout(documents)
-    toks = documents.select(
+    cannot be candidates)."""
+    toks, shingles = _doc_shingles(documents, n, id_col, text_col)
+    return toks.select("doc", shingles.alias("shingles"))
+
+
+def _doc_shingles(documents: DataFrame, n: int, id_col: str,
+                  text_col: str) -> tuple[DataFrame, Column]:
+    """The one fanout/token/n-gram projection behind ``shingle_posting``
+    and ``shingled``: the (doc, toks) frame and the distinct n-gram
+    array over ``toks`` — TX.token_ngrams (the single direct-subscript
+    n-gram spelling: slice-in-lambda copies n elements PER POSITION,
+    measured ~20% slower at sf0.1) wrapped in the within-doc dedup.
+
+    The posting list explodes the array expression itself rather than a
+    projected ``shingles`` column: exploding a projected column lets
+    Catalyst infer a non-empty-array filter below the projection, which
+    evaluates the interpreted n-gram expression a second time at the
+    scan. fanout() spreads that projection across all cores when the
+    scan arrives under-split (plans/base.py — no-op at production
+    partition counts)."""
+    from asvsp_spark.functions.text import token_ngrams
+    toks = fanout(documents).select(
         F.col(id_col).alias("doc"),
         tokens(F.col(text_col)).alias("toks"))
-    return toks.select("doc", _shingle_array(n).alias("shingles"))
+    return toks, F.array_distinct(token_ngrams("toks", n))
 
 
 def df_capped_posting(posting: DataFrame, max_df: int | None) -> DataFrame:

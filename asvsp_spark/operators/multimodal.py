@@ -14,12 +14,12 @@ tabular-only, SURVEY §2.9):
   multi-GB batch, and keep the feature output narrow (drop the payload
   column right after extraction) so the shuffle that follows carries
   features, not bytes.
-- The actual image/audio/video codecs are NOT in this environment, so
-  the decoders are stubbed: ``decode_image``/``decode_audio`` raise
-  NotImplementedError unless the optional libs import, while
-  ``media_features`` computes real, deterministic byte-level features so
-  the Spark-side plumbing (schema, batching, UDF signature) is fully
-  exercised and oracle-checked.
+- No image/audio/video codec library is a dependency, so the decoders
+  (``decode_image_raw``, ``decode_audio_raw``, ``frame_sample_raw``) run
+  end to end over a deterministic synthetic raw format, and
+  ``media_features`` computes real byte-level features; the Spark-side
+  plumbing (schema, batching, UDF signature) is fully exercised and
+  oracle-checked. A real codec swaps into the same mapInPandas contract.
 """
 
 from __future__ import annotations
@@ -29,12 +29,6 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
-
-try:  # optional heavy deps — not in this container
-    from PIL import Image  # noqa: F401
-    _HAS_PIL = True
-except Exception:
-    _HAS_PIL = False
 
 MEDIA_TYPES = ("image", "audio", "video")
 
@@ -95,61 +89,6 @@ def media_features(media: DataFrame) -> DataFrame:
             })
 
     return media.mapInPandas(extract, schema=FEATURE_SCHEMA)
-
-
-def decode_image(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Decode + resize images to a fixed max side, returning (doc_id,
-    width, height, mode). STUB: requires PIL, which is not installed in
-    this environment; the mapInPandas plumbing mirrors media_features.
-    """
-    if not _HAS_PIL:
-        raise NotImplementedError(
-            "decode_image requires PIL; environment has no image codecs. "
-            "Use media_features for the tested byte-level path.")
-    out_schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mode", T.StringType()),
-    ])
-
-    def decode(batches: Iterator) -> Iterator:
-        import io
-        import pandas as pd
-        from PIL import Image
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                img = Image.open(io.BytesIO(payload))
-                img.thumbnail((max_side, max_side))
-                rows.append((doc_id, img.width, img.height, img.mode))
-            yield pd.DataFrame(rows, columns=["doc_id", "width", "height", "mode"])
-
-    return media.mapInPandas(decode, schema=out_schema)
-
-
-def decode_audio(media: DataFrame, target_rate: int = 16_000) -> DataFrame:
-    """Decode + resample audio to a fixed rate, returning (doc_id,
-    duration_s, n_channels, rate). STUB: no audio codecs in this
-    environment; follows the media_features mapInPandas contract —
-    payload in, narrow typed features out, nothing decoded JVM-side.
-    """
-    raise NotImplementedError(
-        "decode_audio requires audio codecs; environment has none. "
-        "Use media_features for the tested byte-level path.")
-
-
-def frame_sample(media: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame sampling plan. STUB: no video codecs in this
-    environment. The real implementation follows media_features'
-    mapInPandas shape, emitting one row per sampled frame with the frame
-    index and a per-frame payload — i.e. a Python-side explode, so
-    repartition by doc_id FIRST to spread decode cost evenly.
-    """
-    raise NotImplementedError(
-        "frame_sample requires video codecs; environment has none. "
-        "The batching/partitioning contract is documented here and in "
-        "media_features.")
 
 
 # ---- synthetic raw codec: the decode/resize/frame-sample pipelines run

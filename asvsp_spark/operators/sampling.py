@@ -1,17 +1,17 @@
 """Stratified sampling for training-data mixture construction.
 
 A 100TB corpus is never trained on whole: pipelines draw a per-stratum
-mixture (by language, source, quality bucket) with fixed fractions. This
-is `sampleBy` — per-row Bernoulli keyed by the stratum column — plus a
-deterministic hash-based variant whose membership is a pure function of
-the row, not of the partitioning.
+mixture (by language, source, quality bucket) with fixed fractions.
+``hash_stratified_sample`` keeps a row when a hash of its id falls under
+its stratum's fraction, so membership is a pure function of the row, not
+of the partitioning.
 
-Scale notes: both variants are narrow (no shuffle — each row decides
-locally); sample fraction reaches the scan as a filter, so downstream
-stages see only the sample. The hash variant is reproducible across
-engines, runs, cluster layouts, AND retries (xxhash64 of the row id —
-Bernoulli `sampleBy` is only stable for a fixed partitioning), which is
-what makes training mixtures auditable.
+Scale notes: the sample is narrow (no shuffle — each row decides
+locally); the fraction reaches the scan as a filter, so downstream
+stages see only the sample. It is reproducible across engines, runs,
+cluster layouts, AND retries (a Bernoulli ``sampleBy`` is only stable
+for a fixed partitioning), which is what makes training mixtures
+auditable.
 """
 
 from __future__ import annotations
@@ -19,16 +19,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 DEFAULT_FRACTIONS = {"en": 0.5, "de": 0.3, "fr": 0.3, "es": 0.3, "it": 0.3}
-
-
-def stratified_sample(documents: DataFrame,
-                      fractions: dict[str, float] | None = None,
-                      strat_col: str = "lang", seed: int = 42) -> DataFrame:
-    """Bernoulli stratified sample: keep each row of stratum s with
-    probability fractions[s] (unlisted strata are dropped). Same seed +
-    same partitioning -> same sample; engine-specific RNG (rows-only).
-    """
-    return documents.sampleBy(strat_col, fractions or DEFAULT_FRACTIONS, seed)
 
 
 def hash_stratified_sample(documents: DataFrame,

@@ -79,6 +79,7 @@ def streaming_ingest_dedup(spark: SparkSession, ingest_dir: str,
 
     from pyspark.sql import functions as F
 
+    from asvsp_spark.sources.store import hadoop_fs
     from asvsp_spark.streaming.queries import with_doc_band_key
     from asvsp_spark.streaming.source import drain_to_parquet
 
@@ -88,13 +89,11 @@ def streaming_ingest_dedup(spark: SparkSession, ingest_dir: str,
         # driver-local listdir would misread a remote sink as fresh —
         # either bypassing the silent-skip guard (guard 1 fails open)
         # or refusing a legitimate resume (guard 2 fails closed; both
-        # r10 review findings). Same resolution as sources/store.py.
+        # r10 review findings). sources/store.hadoop_fs resolves it.
         # A missing/empty dir reads as "no entries"; any OTHER access
         # failure (permissions, I/O) propagates — treating an
         # unreadable sink as fresh would drop every new arrival.
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, hpath = hadoop_fs(spark, path)
         if not fs.exists(hpath):
             return False
         return any(not st.getPath().getName().startswith(".")

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 MONEY_SCALE = 2
 RATE_SCALE = 4
+# fanout's optimizer-estimated bytes per split (see its docstring)
+FANOUT_SPLIT = 16 << 10
 
 
 def fanout(df: DataFrame, min_parts: int | None = None) -> DataFrame:
@@ -48,18 +50,16 @@ def fanout(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     per-row + keyed-aggregation pipeline.
 
     Scale-adaptive clamp (r11, guide §2.5): the spread is bounded by
-    the optimizer's size estimate — ceil(bytes /
-    SPARK_GRAFT_FANOUT_SPLIT_BYTES, default 16 KiB) partitions — so a
-    kilobyte-scale frame no longer round-robins onto every core (a
-    third of the r10 core cohort ran FASTER at 8 cores than 32 purely
-    from task overhead on tiny fanned-out inputs). 16 KiB per split
-    keeps the original win: the sf0.1 documents scan estimate
-    (~600 KB compressed) still spreads across all of local[32], while
-    a kilobyte-scale calibration slice stays at a handful of tasks.
-    Unknown statistics (negative or Long.Max defaultSizeInBytes)
-    leave the clamp inactive — the
-    failure mode is the old spread-to-all-cores behavior, never
-    under-spreading.
+    the optimizer's size estimate — ceil(bytes / FANOUT_SPLIT)
+    partitions — so a kilobyte-scale frame no longer round-robins onto
+    every core (a third of the r10 core cohort ran FASTER at 8 cores
+    than 32 purely from task overhead on tiny fanned-out inputs).
+    16 KiB per split keeps the original win: the sf0.1 documents scan
+    estimate (~600 KB compressed) still spreads across all of
+    local[32], while a kilobyte-scale calibration slice stays at a
+    handful of tasks. Unknown statistics (negative or Long.Max
+    defaultSizeInBytes) leave the clamp inactive — the failure mode is
+    the old spread-to-all-cores behavior, never under-spreading.
     """
     if df.isStreaming:
         # streaming frames have no static partition count to inspect
@@ -75,10 +75,7 @@ def fanout(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     except Exception:  # stats unavailable -> no clamp, old behavior
         est = -1
     if est >= 0:
-        import os
-        split = int(os.environ.get(
-            "SPARK_GRAFT_FANOUT_SPLIT_BYTES", str(16 << 10)))
-        target = min(target, max(cur, -(-est // max(1, split))))
+        target = min(target, max(cur, -(-est // FANOUT_SPLIT)))
     if cur >= target:
         return df
     return df.repartition(target)

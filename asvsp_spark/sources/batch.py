@@ -215,27 +215,15 @@ def jdbc_write(df: DataFrame, url: str, table: str,
     writer.mode(mode).save()
 
 
-def foreach_batch_jdbc(url: str, table: str,
-                       properties: dict[str, str] | None = None):
-    """foreachBatch JDBC appender for streaming sinks (S10,
-    consumer1.py:93-103). Uses df.isEmpty() instead of the reference's
-    rdd.isEmpty() — no RDD materialization of the batch.
-    """
-    def _sink(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        jdbc_write(batch_df, url, table, properties, mode="append")
-    return _sink
-
-
 def foreach_batch_jdbc_exactly_once(url: str, table: str,
                                     properties: dict[str, str] | None = None,
                                     batch_id_col: str = "_batch_id",
                                     delete_fn=None):
-    """Exactly-once JDBC streaming sink: batch-id-keyed upsert.
+    """Exactly-once JDBC streaming sink (S10, consumer1.py:93-103):
+    batch-id-keyed upsert.
 
-    The plain ``foreach_batch_jdbc`` append duplicates rows whenever
-    Structured Streaming replays a micro-batch (checkpoint recovery,
+    A plain foreachBatch append duplicates rows whenever Structured
+    Streaming replays a micro-batch (checkpoint recovery,
     task retry after the write partially landed) — the reference papers
     over this with a truncate-and-append ritual per run
     (streaming_pipeline_dag.py:42-43), which is exactly-once only if

@@ -32,7 +32,6 @@ and explicitly broadcast, so the stream side never shuffles for the join.
 
 from __future__ import annotations
 
-import os
 import tempfile
 import time
 
@@ -195,27 +194,26 @@ def sq2c_stateful_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     events = tables.load(spark, sf_dir, "events")
     mx_us = events.agg(F.max(F.unix_micros("ts")).alias("mx")).first()["mx"]
-    tmp = tempfile.mkdtemp(prefix="asvsp-sq2c-")
     sent_us = mx_us + 30 * 24 * 3600 * 1_000_000
 
     # flat 2-file stream dir; mtimes force file order (the file source
     # processes oldest-first), no wall-clock sleeps needed. Both files are
     # staged driver-side with pyarrow in the normalized us-utc flavor
     # (a Spark write job would cost more than the whole stateful drain).
-    stream_dir = f"{tmp}/stream"
-    os.makedirs(stream_dir)
-    now = time.time()
-    copy_events_normalized(f"{sf_dir}/events.parquet",
-                           f"{stream_dir}/f0.parquet", mtime=now - 100)
-    write_event_rows(
-        f"{stream_dir}/f1.parquet",
-        [(10**12 + i, sent_us, 0, t, 0.0, "{}")
-         for i, t in enumerate(EVENT_TYPES)],
-        mtime=now - 50)
+    # drain() collects the rows, so the staged copy is removed after it.
+    with tempfile.TemporaryDirectory(prefix="asvsp-sq2c-") as tmp:
+        now = time.time()
+        copy_events_normalized(f"{sf_dir}/events.parquet",
+                               f"{tmp}/f0.parquet", mtime=now - 100)
+        write_event_rows(
+            f"{tmp}/f1.parquet",
+            [(10**12 + i, sent_us, 0, t, 0.0, "{}")
+             for i, t in enumerate(EVENT_TYPES)],
+            mtime=now - 50)
 
-    raw = events_stream_reader(spark, stream_dir, max_files_per_trigger=1)
-    stream = raw.withWatermark("ts", "2 hours")
-    return drain(hourly_trend_stateful(stream), spark)
+        raw = events_stream_reader(spark, tmp, max_files_per_trigger=1)
+        stream = raw.withWatermark("ts", "2 hours")
+        return drain(hourly_trend_stateful(stream), spark)
 
 
 # ---------------------------------------------------------------- SQ3
@@ -405,32 +403,33 @@ def sq7_dedup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark horizon are evicted, trading unbounded history dedup for
     O(watermark-window) state); the aggregation below is identical.
     """
-    tmp = tempfile.mkdtemp(prefix="asvsp-sq7-")
-    now = time.time()
-    for i in (0, 1):
-        copy_events_normalized(f"{sf_dir}/events.parquet",
-                               f"{tmp}/f{i}.parquet",
-                               mtime=now - 100 + i)
+    # drain() collects the rows, so the staged copies are removed after it
+    with tempfile.TemporaryDirectory(prefix="asvsp-sq7-") as tmp:
+        now = time.time()
+        for i in (0, 1):
+            copy_events_normalized(f"{sf_dir}/events.parquet",
+                                   f"{tmp}/f{i}.parquet",
+                                   mtime=now - 100 + i)
 
-    stream = events_stream_reader(spark, tmp, max_files_per_trigger=1)
-    # project to the three consumed columns BEFORE the dedup exchange
-    # (guide §2.3: shuffle fewer bytes): the state-store shuffle and
-    # in-batch sort otherwise move every event column (props included)
-    # only for all but (event_id, ts, value) to be dropped by the agg.
-    # Duplicate rows here are exact replays, so the kept copy's
-    # projection is identical whichever copy wins.
-    deduped = (stream.select("event_id", "ts", "value")
-               .dropDuplicates(["event_id"]))
-    agg = (
-        deduped
-        .groupBy(F.window("ts", "1 hour").alias("window"))
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.sum(value_centi(F.col("value"))).alias("v_sum"))
-    )
-    result = agg.select(
-        _fmt_window_start(), "n_events",
-        centi_avg(F.col("v_sum"), F.col("n_events")).alias("avg_value"))
-    return drain(result, spark)
+        stream = events_stream_reader(spark, tmp, max_files_per_trigger=1)
+        # project to the three consumed columns BEFORE the dedup exchange
+        # (guide §2.3: shuffle fewer bytes): the state-store shuffle and
+        # in-batch sort otherwise move every event column (props
+        # included) only for all but (event_id, ts, value) to be dropped
+        # by the agg. Duplicate rows here are exact replays, so the kept
+        # copy's projection is identical whichever copy wins.
+        deduped = (stream.select("event_id", "ts", "value")
+                   .dropDuplicates(["event_id"]))
+        agg = (
+            deduped
+            .groupBy(F.window("ts", "1 hour").alias("window"))
+            .agg(F.count(F.lit(1)).alias("n_events"),
+                 F.sum(value_centi(F.col("value"))).alias("v_sum"))
+        )
+        result = agg.select(
+            _fmt_window_start(), "n_events",
+            centi_avg(F.col("v_sum"), F.col("n_events")).alias("avg_value"))
+        return drain(result, spark)
 
 
 def sq7b_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -461,41 +460,40 @@ def sq7b_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     once repair that survives unbounded key cardinality. The per-batch
     aggregation keeps the drain driver-light (hourly rows only).
     """
-    tmp = tempfile.mkdtemp(prefix="asvsp-sq7b-")
-    now = time.time()
-    src = f"{sf_dir}/events.parquet"
-    copy_events_normalized(src, f"{tmp}/f0.parquet", mtime=now - 100)
-
     ev = tables.load(spark, sf_dir, "events")
     # harness bound: one scalar to position the sentinel/replay batches
     mx_us = ev.agg(F.max(F.unix_micros("ts")).alias("mx")).first()["mx"]
     hour_us = 3600 * 1_000_000
-
-    write_event_rows(f"{tmp}/f1.parquet",
-                     [(-1, mx_us + 8 * hour_us, 0, "view", 0.0, "{}")],
-                     mtime=now - 99)
-    copy_events_at(src, f"{tmp}/f2.parquet", mx_us + 7 * hour_us,
-                   mtime=now - 98)
-
-    raw = events_stream_reader(spark, tmp, max_files_per_trigger=1)
-    # project to the two consumed columns BEFORE the dedup exchange
-    # (guide §2.3): the rollup below reads only (event_id, ts), so
-    # shipping props/value/user through the state-store shuffle was
-    # pure shuffle weight. Replays are exact row copies, so the kept
-    # copy's projection is identical whichever copy wins.
-    deduped = (
-        raw.select("event_id", "ts")
-        .withWatermark("ts", WATERMARK)
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
 
     def per_batch(df: DataFrame) -> DataFrame:
         return (df.groupBy(F.date_trunc("hour", "ts").alias("hr"))
                 .agg(F.count(F.lit(1)).alias("n"),
                      F.sum("event_id").alias("ids")))
 
-    out = drain(deduped, spark, batch_transform=per_batch,
-                output_mode="append")
+    # drain() collects the rows, so the staged copies are removed after it
+    with tempfile.TemporaryDirectory(prefix="asvsp-sq7b-") as tmp:
+        now = time.time()
+        src = f"{sf_dir}/events.parquet"
+        copy_events_normalized(src, f"{tmp}/f0.parquet", mtime=now - 100)
+        write_event_rows(f"{tmp}/f1.parquet",
+                         [(-1, mx_us + 8 * hour_us, 0, "view", 0.0, "{}")],
+                         mtime=now - 99)
+        copy_events_at(src, f"{tmp}/f2.parquet", mx_us + 7 * hour_us,
+                       mtime=now - 98)
+
+        raw = events_stream_reader(spark, tmp, max_files_per_trigger=1)
+        # project to the two consumed columns BEFORE the dedup exchange
+        # (guide §2.3): the rollup below reads only (event_id, ts), so
+        # shipping props/value/user through the state-store shuffle was
+        # pure shuffle weight. Replays are exact row copies, so the kept
+        # copy's projection is identical whichever copy wins.
+        deduped = (
+            raw.select("event_id", "ts")
+            .withWatermark("ts", WATERMARK)
+            .dropDuplicatesWithinWatermark(["event_id"])
+        )
+        out = drain(deduped, spark, batch_transform=per_batch,
+                    output_mode="append")
     return (
         out.groupBy("hr")
         .agg(F.sum("n").alias("n_events"), F.sum("ids").alias("id_sum"))
@@ -774,18 +772,20 @@ def sq11_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the running-max scalar touches the driver) and this rollup shuffles
     the (tiny) late side once onto hour keys.
     """
-    tmp = tempfile.mkdtemp(prefix="asvsp-sq11-")
-    now = time.time()
-    src = f"{sf_dir}/events.parquet"
-    copy_events_split(src, f"{tmp}/f0.parquet", 2, 0, mtime=now - 100)
-    copy_events_split(src, f"{tmp}/f1.parquet", 2, 1, mtime=now - 99)
+    # the returned frame reads the drain's own late sink, not the staged
+    # input, so the staged copies are removed after the drain
+    with tempfile.TemporaryDirectory(prefix="asvsp-sq11-") as tmp:
+        now = time.time()
+        src = f"{sf_dir}/events.parquet"
+        copy_events_split(src, f"{tmp}/f0.parquet", 2, 0, mtime=now - 100)
+        copy_events_split(src, f"{tmp}/f1.parquet", 2, 1, mtime=now - 99)
 
-    stream = events_stream_reader(spark, tmp, max_files_per_trigger=1)
-    # keep_ontime=False: this rollup reads ONLY the late side; writing
-    # the on-time side (~the whole stream) to a sink nobody reads was
-    # the query's single largest cost (guide §1.2)
-    _, late = drain_with_late_audit(stream, spark, delay_seconds=7200,
-                                    keep_ontime=False)
+        stream = events_stream_reader(spark, tmp, max_files_per_trigger=1)
+        # keep_ontime=False: this rollup reads ONLY the late side;
+        # writing the on-time side (~the whole stream) to a sink nobody
+        # reads was the query's single largest cost (guide §1.2)
+        _, late = drain_with_late_audit(stream, spark, delay_seconds=7200,
+                                        keep_ontime=False)
     return (
         late
         .groupBy(F.window("ts", "1 hour").alias("window"))
@@ -1001,48 +1001,6 @@ def sq15_neardup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out exists anywhere — this is keyed dedup, not pair generation.
     """
     from asvsp_spark.plans.base import md5_slice_long
-    tmp = tempfile.mkdtemp(prefix="asvsp-sq15-")
-    now = time.time()
-    src = f"{sf_dir}/documents.parquet"
-    copy_documents_tagged(src, f"{tmp}/f0.parquet", ts_us=-1,
-                          mtime=now - 100)
-    write_doc_rows(
-        f"{tmp}/f1.parquet",
-        [(-1, SQ15_SENTINEL_TEXT,
-          SQ15_BASE_US + SQ15_SENTINEL_HOURS * SQ15_HOUR_US)],
-        mtime=now - 99)
-    copy_documents_tagged(
-        src, f"{tmp}/f2.parquet",
-        ts_us=SQ15_BASE_US + SQ15_REPLAY_HOURS * SQ15_HOUR_US,
-        id_offset=SQ15_ID_OFFSET, mtime=now - 98)
-
-    raw = docs_stream_reader(spark, tmp, max_files_per_trigger=1)
-    # streaming analogue of plans/base.fanout (guide §2.5): each staged
-    # file is ONE parquet row group, so every micro-batch's band-key
-    # projection (md5 per shingle — the entry's dominant compute) would
-    # otherwise run on a single core regardless of session size. The
-    # round-robin exchange moves each ~600 KB corpus batch once to
-    # unlock all-cores hashing (measured 0.64x interleaved at sf0.1);
-    # which same-key copy the downstream in-batch dedup then keeps is
-    # already output-neutral by design (the checksum is a pure function
-    # of the kept KEY SET — see harness note above). At production
-    # scale arriving batches span many files/row groups and the right
-    # parallelism comes from the source; this harness stages its own
-    # single-row-group files, so the exchange is the only lever.
-    keyed = with_doc_band_key(
-        raw.repartition(spark.sparkContext.defaultParallelism))
-    bucket = F.pmod(md5_slice_long(F.col("band_key")), F.lit(72))
-    ts_us = F.when(F.col("ts_us") >= 0, F.col("ts_us")) \
-        .otherwise(F.lit(SQ15_BASE_US) + bucket * F.lit(SQ15_HOUR_US))
-    stream = keyed.withColumn("ts", F.timestamp_micros(ts_us))
-    # only (band_key, ts) survive into the rollup: project before the
-    # dedup exchange so the document TEXT does not ride the state-store
-    # shuffle (guide §2.3) — the keep-one choice is key-set-neutral by
-    # design (see harness note), so dropping unread columns cannot
-    # change the output.
-    deduped = (stream.select("band_key", "ts")
-               .withWatermark("ts", WATERMARK)
-               .dropDuplicatesWithinWatermark(["band_key"]))
 
     def per_batch(df: DataFrame) -> DataFrame:
         ck = F.pmod(md5_slice_long(F.col("band_key")), F.lit(1_000_003))
@@ -1050,8 +1008,53 @@ def sq15_neardup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.count(F.lit(1)).alias("n"),
                      F.sum(ck).alias("ck")))
 
-    out = drain(deduped, spark, batch_transform=per_batch,
-                output_mode="append")
+    # drain() collects the rows, so the staged copies are removed after it
+    with tempfile.TemporaryDirectory(prefix="asvsp-sq15-") as tmp:
+        now = time.time()
+        src = f"{sf_dir}/documents.parquet"
+        copy_documents_tagged(src, f"{tmp}/f0.parquet", ts_us=-1,
+                              mtime=now - 100)
+        write_doc_rows(
+            f"{tmp}/f1.parquet",
+            [(-1, SQ15_SENTINEL_TEXT,
+              SQ15_BASE_US + SQ15_SENTINEL_HOURS * SQ15_HOUR_US)],
+            mtime=now - 99)
+        copy_documents_tagged(
+            src, f"{tmp}/f2.parquet",
+            ts_us=SQ15_BASE_US + SQ15_REPLAY_HOURS * SQ15_HOUR_US,
+            id_offset=SQ15_ID_OFFSET, mtime=now - 98)
+
+        raw = docs_stream_reader(spark, tmp, max_files_per_trigger=1)
+        # streaming analogue of plans/base.fanout (guide §2.5): each
+        # staged file is ONE parquet row group, so every micro-batch's
+        # band-key projection (md5 per shingle — the entry's dominant
+        # compute) would otherwise run on a single core regardless of
+        # session size. The round-robin exchange moves each ~600 KB
+        # corpus batch once to unlock all-cores hashing (measured 0.64x
+        # interleaved at sf0.1); which same-key copy the downstream
+        # in-batch dedup then keeps is already output-neutral by design
+        # (the checksum is a pure function of the kept KEY SET — see
+        # harness note above). At production scale arriving batches span
+        # many files/row groups and the right parallelism comes from the
+        # source; this harness stages its own single-row-group files, so
+        # the exchange is the only lever.
+        keyed = with_doc_band_key(
+            raw.repartition(spark.sparkContext.defaultParallelism))
+        bucket = F.pmod(md5_slice_long(F.col("band_key")), F.lit(72))
+        ts_us = F.when(F.col("ts_us") >= 0, F.col("ts_us")) \
+            .otherwise(F.lit(SQ15_BASE_US) + bucket * F.lit(SQ15_HOUR_US))
+        stream = keyed.withColumn("ts", F.timestamp_micros(ts_us))
+        # only (band_key, ts) survive into the rollup: project before
+        # the dedup exchange so the document TEXT does not ride the
+        # state-store shuffle (guide §2.3) — the keep-one choice is
+        # key-set-neutral by design (see harness note), so dropping
+        # unread columns cannot change the output.
+        deduped = (stream.select("band_key", "ts")
+                   .withWatermark("ts", WATERMARK)
+                   .dropDuplicatesWithinWatermark(["band_key"]))
+
+        out = drain(deduped, spark, batch_transform=per_batch,
+                    output_mode="append")
     return (
         out.groupBy("hr")
         .agg(F.sum("n").alias("n_kept"), F.sum("ck").alias("key_checksum"))

@@ -101,21 +101,19 @@ def test_hash_stratified_sample_deterministic(spark):
 
 
 def test_stratified_fractions(spark):
-    """Both variants keep only listed strata, at roughly the asked rate."""
-    from asvsp_spark.operators.sampling import (hash_stratified_sample,
-                                                stratified_sample)
+    """The hash sample keeps only listed strata, at roughly the asked rate."""
+    from asvsp_spark.operators.sampling import hash_stratified_sample
     docs = tables.load(spark, SF_DIR, "documents")
     totals = {r.lang: r.n for r in
               docs.groupBy("lang").agg(F.count("*").alias("n")).collect()}
     fr = {"en": 0.6, "de": 0.2}
-    for sample in (stratified_sample(docs, fr), hash_stratified_sample(docs, fr)):
-        got = {r.lang: r.n for r in
-               sample.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-        assert set(got) <= set(fr)
-        for lang, frac in fr.items():
-            n, tot = got.get(lang, 0), totals.get(lang, 0)
-            if tot >= 20:  # tolerance only meaningful with some mass
-                assert abs(n / tot - frac) < 0.25, (lang, n, tot)
+    got = {r.lang: r.n for r in hash_stratified_sample(docs, fr)
+           .groupBy("lang").agg(F.count("*").alias("n")).collect()}
+    assert set(got) <= set(fr)
+    for lang, frac in fr.items():
+        n, tot = got.get(lang, 0), totals.get(lang, 0)
+        if tot >= 20:  # tolerance only meaningful with some mass
+            assert abs(n / tot - frac) < 0.25, (lang, n, tot)
 
 
 def test_stream_stream_join_is_watermarked_state_join(spark):

@@ -151,25 +151,6 @@ def test_compact_parquet_merges_small_files(spark, tmp_path):
     assert after == before
 
 
-def test_foreach_batch_jdbc_empty_guard_and_passthrough(spark, monkeypatch):
-    """Contract test for the streaming JDBC sink (no DB in the sandbox):
-    an empty micro-batch must short-circuit before any JDBC work; a
-    non-empty one must append with the configured url/table/props."""
-    from asvsp_spark.sources import batch as B
-    calls = []
-
-    def fake_jdbc_write(df, url, table, properties=None, mode="overwrite"):
-        calls.append((url, table, properties, mode, df.count()))
-
-    monkeypatch.setattr(B, "jdbc_write", fake_jdbc_write)
-    sink = B.foreach_batch_jdbc("jdbc:postgresql://h/db", "t", {"user": "u"})
-    sink(spark.createDataFrame([], "a int"), 0)
-    assert calls == []
-    sink(spark.createDataFrame([(1,), (2,)], "a int"), 1)
-    assert calls == [("jdbc:postgresql://h/db", "t", {"user": "u"},
-                      "append", 2)]
-
-
 def test_jdbc_write_threads_options_to_jdbc_layer(spark):
     """jdbc_write must reach Spark's JDBC data source with our options:
     a bogus driver class fails with THAT class name (proving url/driver
@@ -259,14 +240,19 @@ def test_foreach_batch_jdbc_exactly_once_replay_converges(spark, monkeypatch):
     """Replay-convergence contract for the batch-id-keyed upsert sink
     (no DB in the sandbox — an in-memory table stands in for JDBC):
     a replayed micro-batch, including one whose first attempt landed
-    PARTIALLY, leaves the table exactly as a single clean run would."""
+    PARTIALLY, leaves the table exactly as a single clean run would;
+    url/table/properties reach jdbc_write, and an empty micro-batch
+    does no delete and no write."""
     from asvsp_spark.sources import batch as B
 
     table: list[tuple] = []        # (batch_id, a)
+    calls: list[tuple] = []        # ("delete", batch_id) / ("write", n)
     fail_once = {"armed": False}
 
     def fake_jdbc_write(df, url, tbl, properties=None, mode="overwrite"):
-        assert mode == "append"
+        assert (url, tbl, properties, mode) == (
+            "jdbc:postgresql://h/db", "t", {"user": "u"}, "append")
+        calls.append(("write", df.count()))
         rows = [(r["_batch_id"], r["a"]) for r in df.collect()]
         if fail_once["armed"]:
             fail_once["armed"] = False
@@ -275,11 +261,12 @@ def test_foreach_batch_jdbc_exactly_once_replay_converges(spark, monkeypatch):
         table.extend(rows)
 
     def delete_fn(batch_id):
+        calls.append(("delete", batch_id))
         table[:] = [r for r in table if r[0] != int(batch_id)]
 
     monkeypatch.setattr(B, "jdbc_write", fake_jdbc_write)
     sink = B.foreach_batch_jdbc_exactly_once(
-        "jdbc:postgresql://h/db", "t", delete_fn=delete_fn)
+        "jdbc:postgresql://h/db", "t", {"user": "u"}, delete_fn=delete_fn)
 
     b7 = spark.createDataFrame([(1,), (2,)], "a int")
     b8 = spark.createDataFrame([(3,)], "a int")
@@ -301,10 +288,10 @@ def test_foreach_batch_jdbc_exactly_once_replay_converges(spark, monkeypatch):
     # the next batch appends alongside
     sink(b8, 8)
     assert sorted(table) == [(7, 1), (7, 2), (8, 3)]
-    # empty batches still short-circuit (no delete, no write)
-    before = list(table)
+    # empty batches short-circuit (no delete, no write)
+    before, n_calls = list(table), len(calls)
     sink(spark.createDataFrame([], "a int"), 9)
-    assert table == before
+    assert table == before and len(calls) == n_calls
 
 
 def test_orc_roundtrip_partitioned_and_pruned(spark, tmp_path):

@@ -1,11 +1,9 @@
 """Multimodal plumbing tests: binary payload schema, Arrow-batched
-feature extraction, stub gating."""
+feature extraction, synthetic-codec decoders."""
 
 from __future__ import annotations
 
 import hashlib
-
-import pytest
 
 from asvsp_spark.operators import multimodal as MM
 from tests.conftest import SF_DIR
@@ -37,18 +35,6 @@ def test_media_features_drops_payload(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(5)
     feats = MM.media_features(MM.attach_fake_media(docs))
     assert "payload" not in feats.columns  # narrow output, no bytes shuffled
-
-
-def test_decode_stubs_gated(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(1)
-    media = MM.attach_fake_media(docs)
-    if not MM._HAS_PIL:
-        with pytest.raises(NotImplementedError):
-            MM.decode_image(media)
-    with pytest.raises(NotImplementedError):
-        MM.frame_sample(media)
-    with pytest.raises(NotImplementedError):
-        MM.decode_audio(media)
 
 
 def test_synthetic_codec_image_decode_and_resize(spark):

@@ -1,6 +1,6 @@
-"""Tests: salted two-phase aggregation is exactly the direct groupBy;
-the materialized batch chain writes prunable partition layouts and
-round-trips every layer unchanged."""
+"""Tests: the salted join is exactly the direct join; the materialized
+batch chain writes prunable partition layouts and round-trips every
+layer unchanged."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from asvsp_spark import tables
 from asvsp_spark.operators import rollups as R
-from asvsp_spark.operators.skew import two_phase_agg
 from asvsp_spark.pipeline import run_batch_chain
 from tests.conftest import SF_DIR
 
@@ -16,33 +15,6 @@ from tests.conftest import SF_DIR
 def _rowset(df):
     cols = sorted(df.columns)
     return sorted(tuple(str(r[c]) for c in cols) for r in df.collect())
-
-
-def test_two_phase_agg_exact(spark):
-    events = tables.load(spark, SF_DIR, "events").select(
-        "event_type", R.value_centi(F.col("value")).alias("v"))
-    direct = events.groupBy("event_type").agg(
-        F.sum("v").alias("v_sum"),
-        F.count(F.lit(1)).alias("n"),
-        F.max("v").alias("v_max"))
-    two_phase = two_phase_agg(events, ["event_type"], {
-        "v_sum": (F.sum("v"), F.sum("v_sum")),
-        "n": (F.count(F.lit(1)), F.sum("n")),
-        "v_max": (F.max("v"), F.max("v_max")),
-    }, buckets=8)
-    assert _rowset(direct) == _rowset(two_phase)
-
-
-def test_two_phase_agg_deterministic_salt(spark):
-    events = tables.load(spark, SF_DIR, "events").select(
-        "event_type", "event_id", R.value_centi(F.col("value")).alias("v"))
-    a = two_phase_agg(events, ["event_type"],
-                      {"v_sum": (F.sum("v"), F.sum("v_sum"))},
-                      buckets=8, salt_by="event_id")
-    b = two_phase_agg(events, ["event_type"],
-                      {"v_sum": (F.sum("v"), F.sum("v_sum"))},
-                      buckets=8, salt_by="event_id")
-    assert _rowset(a) == _rowset(b)
 
 
 def test_batch_chain_materializes_and_roundtrips(spark, tmp_path):

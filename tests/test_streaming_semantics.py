@@ -960,3 +960,15 @@ def test_drain_state_partitions_follow_cores(spark, tmp_path, monkeypatch):
     assert state_partitions(shuffle_partitions=8, checkpoint_dir=ckpt) == {8}
     add_hour(2)
     assert state_partitions(checkpoint_dir=ckpt) == {8}
+
+
+def test_staged_stream_inputs_are_removed_after_drain(spark, tmp_path,
+                                                      monkeypatch):
+    """An entry that stages its input as files for the file stream source
+    removes that copy once the drain is done; the returned frame still
+    reads (sq11's reads its own late sink, not the staged input)."""
+    from asvsp_spark.streaming.queries import sq11_late_audit
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = sq11_late_audit(spark, SF_DIR)
+    assert out.count() > 0
+    assert sorted(p.name for p in tmp_path.glob("asvsp-sq*")) == []

@@ -2,7 +2,7 @@
 N runs to count(), Arrow/streaming warm-up first) without the suite
 around them — the per-change A/B instrument for OPTIMIZATION rounds.
 
-Usage: python tools/solo_bench.py name1 name2 ...   [env: N_RUNS=3]
+Usage: python tools/solo_bench.py name1 name2 ...   [env: SPARK_GRAFT_BENCH_RUNS=3]
 
 Prints one `name sec` line per query (median) plus all samples on
 stderr. Same session contract as bench.py ($SPARK_GRAFT_SF_DIR,
@@ -26,7 +26,7 @@ def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    n_runs = int(os.environ.get("N_RUNS", "3"))
+    n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     spark = get_session("asvsp-solo-bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     queries = all_queries()
